@@ -10,9 +10,14 @@ computed in ONE aggregate job:
 xor+sum+count of per-row 64-bit hashes is commutative/associative →
 shuffle-order invariant, and cheap at any scale (map-side partial
 aggregation, no sort, no collect of data). Every `run_event_bare`
-materializes the new value's fingerprint eagerly and persists the
-DataFrame, because shelve/merge compare states constantly and the
-WorkCache memoizes by state anyway (workcache.rs:85-102 role).
+returns the new value with its fingerprint known and its DataFrame
+persisted (lazily), because shelve/merge compare states constantly and
+the WorkCache memoizes by state anyway (workcache.rs:85-102 role). The
+fingerprint job runs the first time the engine applies a (cmd, arg) to
+a given input fingerprint; later applications take the output
+fingerprint from the engine's transform memo and run no job. The memo
+skips only that job: every call still builds the command's plan over
+its actual input DataFrame, so replay reads real predecessor data.
 
 Engines:
   - SparkReplaceEngine: literal search-and-replace over every row of a
@@ -40,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .engines import BaseEngine, CommandNotFound
+from .graph import canonical_json_encode
 
 
 @dataclass(frozen=True)
@@ -136,11 +142,17 @@ def exclusive_prefix_sum(
     so no eager localCheckpoint + partial-sum collect at plan-BUILD time
     (that eager pair made every renumbering `_apply_plan` construction
     cost two jobs inside the esvc shelve loop, where one commutation
-    round builds many plans). Correctness does not depend on exchange
-    reuse: the bucket is a pure row function, so re-evaluated branches
-    agree by construction. Use only with exactly-summable value types
-    (integers/decimals): the bucketed addition order differs from the
-    sampled-range order.
+    round builds many plans). The plan reads `df` TWICE (the bucket
+    offsets aggregate and the within-bucket window), so `df` must be
+    deterministic: both reads must see the same rows with the same
+    bucket. A nondeterministic input (rand(), a sample, a
+    nondeterministic UDF, an unpinned limit) can give the two reads
+    different rows and wrong offsets; pin such an input first (persist
+    or localCheckpoint). Given a deterministic input, correctness does
+    not depend on exchange reuse: the bucket is a pure row function, so
+    re-evaluated branches agree by construction. Use only with
+    exactly-summable value types (integers/decimals): the bucketed
+    addition order differs from the sampled-range order.
 
     Distributed path (default): two-phase prefix sum —
     1. range-partition on the order key and PIN the partitioning with an
@@ -448,6 +460,12 @@ def global_row_number(
 class SparkEngineBase(BaseEngine):
     def __init__(self, spark: SparkSession):
         self.spark = spark
+        # transform memo: (input fingerprint, cmd, canonical JSON of arg)
+        # -> output fingerprint. Sound because transforms are pure and
+        # deterministic (engines.py) and the fingerprint is the value
+        # identity dat_eq already uses. It skips only the fingerprint
+        # job: every call still builds the real plan over the real input.
+        self._fps: dict[tuple, tuple] = {}
 
     def dat_eq(self, a: SparkDat, b: SparkDat) -> bool:
         return a.fingerprint == b.fingerprint
@@ -455,6 +473,25 @@ class SparkEngineBase(BaseEngine):
     def release(self, dat: Any) -> None:
         if isinstance(dat, SparkDat):
             dat.df.unpersist()
+
+    @staticmethod
+    def _fp_key(cmd: int, arg, fingerprint: tuple) -> tuple:
+        return (fingerprint, cmd, canonical_json_encode(arg))
+
+    def run_event_bare(self, cmd: int, arg: dict, dat: SparkDat) -> SparkDat:
+        """The transform as a persisted state. A memo hit persists the
+        lazy plan under the known fingerprint — no job until the state
+        is read; a miss runs SparkDat.create's fingerprint job."""
+        out = self._apply_plan(cmd, arg, dat.df, dat.count)
+        if out is dat.df:
+            return dat  # no-op path: same value, no re-persist, no job
+        key = self._fp_key(cmd, arg, dat.fingerprint)
+        fp = self._fps.get(key)
+        if fp is not None:
+            return SparkDat(df=out.persist(), fingerprint=fp)
+        made = SparkDat.create(out, self.COLS)
+        self._fps[key] = made.fingerprint
+        return made
 
     # -- batched commutation testing (WorkCache.shelve_event seam) --------
     # One shelve round issues 2 eager fingerprint jobs (persist + collect)
@@ -471,15 +508,18 @@ class SparkEngineBase(BaseEngine):
     def run_event_transient(self, cmd: int, arg, dat: SparkDat) -> SparkDat:
         """`run_event_bare` for a result that will only ever be COMPARED
         (dat_eq = fingerprint equality), never replayed from: the value
-        travels as a lazy plan + eagerly-computed fingerprint, skipping
-        the persist a memoized state needs. One aggregate job, no block
-        writes, nothing to unpersist. WorkCache uses this for the
-        expected-state, safety-net, and commutation-test transients
-        (VERDICT r8 #6)."""
+        travels as a lazy plan + its fingerprint, skipping the persist a
+        memoized state needs. At most one aggregate job (none on a memo
+        hit), no block writes, nothing to unpersist. WorkCache uses this
+        for the expected-state, safety-net, and commutation-test
+        transients (VERDICT r8 #6)."""
         out = self._apply_plan(cmd, arg, dat.df, dat.count)
         if out is dat.df:
             return dat  # no-op path: same value
-        fp = self._batched_fingerprints([(0, out)])[0]
+        key = self._fp_key(cmd, arg, dat.fingerprint)
+        fp = self._fps.get(key)
+        if fp is None:
+            fp = self._fps[key] = self._batched_fingerprints([(0, out)])[0]
         return SparkDat(df=out, fingerprint=fp)
 
     def commute_batch(self, ev, tests, cur_st: SparkDat) -> dict:
@@ -491,40 +531,54 @@ class SparkEngineBase(BaseEngine):
         ev_first_then = conc_ev(ev_first), independent iff
         fp(ev_first) != fp(ev_first_then) AND
         fp(ev_first_then) == fp(cur_st). Job 1 fingerprints every
-        ev_first (also yielding its row count, which job 2's plans
-        need); job 2 fingerprints every ev_first_then."""
+        ev_first the transform memo lacks (also yielding its row count,
+        which job 2's plans need); job 2 fingerprints every missing
+        ev_first_then. A job with nothing missing is skipped."""
         if not tests:
             return {}
-        # build each ev_first plan ONCE and feed it to both jobs: plan
-        # construction is not free for renumbering commands (the
-        # two-phase prefix sum pins its range partitioning with an eager
-        # localCheckpoint + partial-sum collect at BUILD time), so the
-        # old shape paid that eager pair twice per candidate (round 12)
-        ev_first_plans = {
-            key: self._apply_plan(ev.cmd, ev.arg, base.df, base.count)
+        # build each ev_first plan at most once, and only if a job needs
+        # it: plan construction is not free for renumbering commands
+        ev_first_plans: dict = {}
+
+        def ev_first(key, base):
+            if key not in ev_first_plans:
+                ev_first_plans[key] = self._apply_plan(
+                    ev.cmd, ev.arg, base.df, base.count
+                )
+            return ev_first_plans[key]
+
+        k1 = {
+            key: self._fp_key(ev.cmd, ev.arg, base.fingerprint)
             for key, base, _ in tests
         }
-        fp1 = self._batched_fingerprints(
-            [(key, ev_first_plans[key]) for key, _, _ in tests]
-        )
-        fp2 = self._batched_fingerprints(
-            [
-                (
-                    key,
-                    self._apply_plan(
-                        cev.cmd,
-                        cev.arg,
-                        ev_first_plans[key],
-                        fp1[key][0],
-                    ),
-                )
-                for key, base, cev in tests
-            ]
-        )
+        self._memoize_fingerprints({
+            k1[key]: ev_first(key, base)
+            for key, base, _ in tests
+            if k1[key] not in self._fps
+        })
+        fp1 = {key: self._fps[k] for key, k in k1.items()}
+        k2 = {
+            key: self._fp_key(cev.cmd, cev.arg, fp1[key])
+            for key, _, cev in tests
+        }
+        self._memoize_fingerprints({
+            k2[key]: self._apply_plan(
+                cev.cmd, cev.arg, ev_first(key, base), fp1[key][0]
+            )
+            for key, base, cev in tests
+            if k2[key] not in self._fps
+        })
+        fp2 = {key: self._fps[k] for key, k in k2.items()}
         return {
             key: fp1[key] != fp2[key] and fp2[key] == cur_st.fingerprint
             for key, _, _ in tests
         }
+
+    def _memoize_fingerprints(self, plans: dict) -> None:
+        """Fingerprint {memo key: plan} into the transform memo in ONE
+        tagged aggregate job; no job when there is nothing to compute."""
+        if plans:
+            self._fps.update(self._batched_fingerprints(list(plans.items())))
 
     def _batched_fingerprints(self, tagged_plans) -> dict:
         """Content fingerprints of many plans in ONE aggregate job: tag
@@ -635,11 +689,6 @@ class SparkReplaceEngine(SparkEngineBase):
         )
         return self.init_data(df)
 
-    def run_event_bare(self, cmd: int, arg: dict, dat: SparkDat) -> SparkDat:
-        return SparkDat.create(
-            self._apply_plan(cmd, arg, dat.df, dat.count), self.COLS
-        )
-
     def _apply_plan(self, cmd: int, arg: dict, df: DataFrame, n: int) -> DataFrame:
         if cmd != 0:
             raise CommandNotFound(cmd)
@@ -722,12 +771,6 @@ class SparkExEngine(SparkEngineBase):
             [(float(pos), sub_start + k, t) for k, t in enumerate(lines)],
             "pos DOUBLE, sub BIGINT, text STRING",
         )
-
-    def run_event_bare(self, cmd: int, arg: dict, dat: SparkDat) -> SparkDat:
-        out = self._apply_plan(cmd, arg, dat.df, dat.count)
-        if out is dat.df:
-            return dat  # no-op path: same value, no re-persist, no job
-        return SparkDat.create(out, self.COLS)
 
     def _apply_plan(self, cmd: int, arg: dict, df: DataFrame, n: int) -> DataFrame:
         """The command as a PURE PLAN over `df` (known to hold `n` rows):

@@ -293,9 +293,12 @@ class WorkCache:
                 break
             seed_deps = new_seed_deps
 
-        # the inferred event is recorded; its expected state will be
-        # re-materialized through the memo path on demand — cur_st is
-        # transient from here
+        # the inferred event is recorded; cur_st is transient from here.
+        # A later materialize replays the event with run_event_bare over
+        # its actual base state. Engines with a transform memo
+        # (SparkEngineBase) skip that replay's fingerprint job when this
+        # walk already applied ev to a state with the same fingerprint;
+        # the replay still runs on the real predecessor value
         if cur_st is not base_st:
             eng.release(cur_st)
         final = Event(

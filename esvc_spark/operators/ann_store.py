@@ -439,6 +439,19 @@ def _seed_codes(emb: DataFrame, n_codes: int) -> DataFrame:
 _PROBE_COLLECT_ROWS = 1 << 17
 
 
+def _parquet_first_len(path: str, col: str) -> int | None:
+    """Driver-side length of the first row of array column ``col`` in a
+    small parquet directory (a codebook) — zero Spark jobs; None when
+    pyarrow is unavailable, the dir is unreadable or holds no rows."""
+    try:
+        import pyarrow.parquet as pq
+
+        vals = pq.read_table(path, columns=[col]).column(0)
+        return len(vals[0].as_py()) if len(vals) else None
+    except Exception:
+        return None
+
+
 def _parquet_nrows(path: str) -> int | None:
     """Driver-side row count of a flat parquet directory from the file
     footers — zero Spark jobs (the catalog.table_rows idea without a
@@ -462,13 +475,13 @@ class IVFIndexStore:
 
     Driver-side memos (round 12 — guide §1.2: the sf-scale cost of every
     store op is JOB COUNT, not bytes): the k-row codebook rows
-    (``_cents_rows``), the immutable PQ book frame + its shape
-    (``_pq_book_df`` / ``_pq_meta``), and the cells() frame handle
-    (``_cells_df``). All are derived caches of on-disk state under the
-    store's single-writer contract (the same contract ``self.k`` has
-    always relied on): every codebook writer updates/clears
-    ``_cents_rows``, every cells/ writer clears ``_cells_df``, and pq/
-    is immutable after build so its memos never invalidate."""
+    (``_cents_rows``) and the immutable PQ book frame + its shape
+    (``_pq_book_df`` / ``_pq_meta``). Both are derived caches of on-disk
+    state under the store's single-writer contract (the same contract
+    ``self.k`` has always relied on): every codebook writer
+    updates/clears ``_cents_rows``, and pq/ is immutable after build so
+    its memos never invalidate. cells() is not memoized: every call
+    reads cells/ afresh, so cells/ writers have nothing to invalidate."""
 
     def __init__(self, spark: SparkSession, path: str, k: int):
         self.spark = spark
@@ -476,7 +489,6 @@ class IVFIndexStore:
         self.k = k
         # memoized derived state (single-writer contract; see class doc)
         self._cents_rows: list[tuple[int, list[float], float]] | None = None
-        self._cells_df: DataFrame | None = None
         self._pq_book_df: DataFrame | None = None
         self._pq_meta: tuple[int, int, int, bool] | None = None
         self._pq_ball_rows: list[list[list[float]]] | None = None
@@ -591,7 +603,8 @@ class IVFIndexStore:
         centroid codebook; pass ``pq_book`` (sub, code, cpart) for
         trained codebooks)."""
         e = emb.select("vec_id", "emb").withColumn("nrm", norm(F.col("emb")))
-        if pq_book is not None or pq_codes > 0:
+        explicit_book = pq_book is not None
+        if explicit_book or pq_codes > 0:
             if pq_book is None:
                 # the dim probe (one bounded collect) is only needed when
                 # WE must derive the default book's slices; an explicit
@@ -689,6 +702,22 @@ class IVFIndexStore:
                 else "IVFIndexStore.build: explicit centroids= frame is "
                 "empty — a zero-row codebook can never index anything"
             )
+        if explicit_book:
+            # the explicit book's m×subdim must cover the embedding: a
+            # wrong book otherwise encodes silently into NULL distances.
+            # The written centroids carry the embedding dim — read it
+            # from the parquet driver-side, no Spark job
+            cdir = os.path.join(path, "centroids")
+            dim = _parquet_first_len(cdir, "cemb")
+            if dim is None:
+                dim = cdf.select(F.size("cemb")).first()[0]
+            m, subdim = pq_meta[0], pq_meta[1]
+            if m != pq_m or m * subdim != dim:
+                raise ValueError(
+                    f"IVFIndexStore.build: pq_book has {m} subspaces of "
+                    f"{subdim} dims ({m * subdim} in all); pq_m={pq_m} "
+                    f"and the embeddings have {dim} dims"
+                )
         # Cluster by cell before the partitioned write: without it every
         # scan task writes a sliver into every cell directory (tasks x k
         # files), and the probe's file-open overhead eats the pruning win
@@ -765,7 +794,6 @@ class IVFIndexStore:
         ).write.mode("append").partitionBy("cell").parquet(
             os.path.join(self.path, "cells")
         )
-        self._cells_df = None  # cells/ gained files
         return self
 
     # ------------------------------------------------------- split_cell
@@ -918,7 +946,6 @@ class IVFIndexStore:
             ).write.mode(
                 "overwrite"
             ).partitionBy("cell").parquet(os.path.join(self.path, "cells"))
-        self._cells_df = None  # cell partitions rewritten
         self.k = len(cents_rows)
         return self
 
@@ -1047,7 +1074,6 @@ class IVFIndexStore:
             _sh.rmtree(junk, ignore_errors=True)
             os.rename(bdir, junk)
             _sh.rmtree(junk, ignore_errors=True)
-        self._cells_df = None  # partition a rewritten, b dropped
         self.k = len(cents_rows)
         return self
 
@@ -1138,9 +1164,6 @@ class IVFIndexStore:
             ).sortWithinPartitions("cell", "vec_id").write.mode(
                 "append"
             ).partitionBy("cell").parquet(root)
-            # invalidate per iteration: the NEXT orphan's existence probe
-            # must see this heal's appended rows
-            self._cells_df = None
             junk = os.path.join(self.path, f"._merge_drop_cell={orph}")
             # a prior interrupted heal/merge can leave this junk path
             # half-deleted (the rmtree below is ignore_errors) — clear it
@@ -1369,7 +1392,6 @@ class IVFIndexStore:
                 cdir = os.path.join(root, name[len("._compact_old_") :])
                 if not os.path.exists(cdir):
                     os.rename(full, cdir)  # pre-swap crash: restore
-                    self._cells_df = None  # on-disk layout changed
                 else:
                     _sh.rmtree(full, ignore_errors=True)  # post-swap junk
             elif name.startswith("._compact_tmp_cell="):
@@ -1417,7 +1439,6 @@ class IVFIndexStore:
 
         with ThreadPoolExecutor(max_workers=min(8, len(todo))) as pool:
             done = list(pool.map(_rewrite, todo))
-        self._cells_df = None  # file layout changed under the memo
         return {cell: (nb, na) for cell, nb, na in sorted(done)}
 
     # ------------------------------------------------------------- load
@@ -1466,12 +1487,6 @@ class IVFIndexStore:
 
     def cells(self) -> DataFrame:
         from pyspark.errors import AnalysisException
-
-        # memoized frame handle: a fresh read per call re-runs partition
-        # discovery + schema inference (a driver job each) — every
-        # cells/ writer clears the memo (round 12)
-        if self._cells_df is not None:
-            return self._cells_df
 
         try:
             df = self.spark.read.parquet(os.path.join(self.path, "cells"))

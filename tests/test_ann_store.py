@@ -1047,6 +1047,32 @@ def test_pq_store_codes_and_search(spark, tmp_path):
         plain.search_pq(q)
 
 
+def test_build_rejects_pq_book_that_does_not_cover_the_embedding(
+    spark, tmp_path
+):
+    """An explicit pq_book whose m x subdim differs from the embedding
+    dim (or whose m differs from pq_m) must fail the build: encoding
+    against it gives NULL distances with no error."""
+    emb = _pq_emb(spark, dim=16)
+
+    def book(m, subdim):
+        return spark.createDataFrame(
+            [(j, c, [0.1 * (c + 1)] * subdim)
+             for j in range(m) for c in range(2)],
+            "sub int, code int, cpart array<double>",
+        )
+
+    with pytest.raises(ValueError, match="embeddings have 16 dims"):
+        IVFIndexStore.build(spark, emb, str(tmp_path / "short"), k=4,
+                            pq_book=book(4, 3), pq_m=4)
+    with pytest.raises(ValueError, match="pq_m=8"):
+        IVFIndexStore.build(spark, emb, str(tmp_path / "m"), k=4,
+                            pq_book=book(4, 4), pq_m=8)
+    st = IVFIndexStore.build(spark, emb, str(tmp_path / "ok"), k=4,
+                             pq_book=book(4, 4), pq_m=4)
+    assert st.pq_book() is not None
+
+
 def test_pq_add_equals_build_on_union(spark, tmp_path):
     """Incremental add() must encode the batch against the PERSISTED pq
     book: cells incl. the codes column equal the all-at-once build."""

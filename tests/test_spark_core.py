@@ -638,6 +638,35 @@ def test_ntile_from_rank_matches_real_ntile(spark):
             assert got == want, (n, k)
 
 
+# shelve scripts engineered to hit multi-candidate commutation rounds,
+# independence and dependence on both Spark engines
+# replace engine: branches that commute (disjoint) and ones that don't
+_SEAR_TEXTS = ["Hi, what's up??", "nothing up here", "Hi again", "zebra"]
+_SEARS = [
+    sear("Hi", "Hello"),
+    sear("zebra", "quagga"),   # independent of the first
+    sear("up", "down"),
+    sear("Hello", "Hey"),      # depends on the first
+    sear("down here", "below"),
+]
+# editor engine: mixed line and regex commands
+_EX_LINES = [f"line {i} alpha" for i in range(12)] + ["needle row"]
+_EX_SCRIPT = [
+    make_command({"type": "rng", "start": 0, "end": 2}, "substitute",
+                 ["alpha", "beta"]),
+    make_command({"type": "rgx", "pattern": "needle"}, "append",
+                 ["added after needle"]),
+    make_command({"type": "last"}, "append", ["tail"]),
+    make_command({"type": "rng", "start": 3, "end": 5}, "delete"),
+]
+
+# a chain whose safety net fails: the walk degrades to soft deps
+# (workcache.rs:343-393); "zebra" is left for a commuting branch
+_SOFT_TEXTS = ["bcacca", "zebra"]
+_SOFT_SEARS = [sear("ac", "c"), sear("bc", ""), sear("ca", "a"),
+               sear("ac", "ba")]
+
+
 def test_commute_batch_matches_sequential_shelve(spark, monkeypatch):
     """VERDICT r8 #6 differential: shelving through the batched
     commutation path (two tagged aggregate jobs per round) must infer
@@ -657,26 +686,6 @@ def test_commute_batch_matches_sequential_shelve(spark, monkeypatch):
                 xs.add(h)
         return g, w, xs
 
-    # replace engine: branches that commute (disjoint) and ones that don't
-    texts = ["Hi, what's up??", "nothing up here", "Hi again", "zebra"]
-    sears = [
-        sear("Hi", "Hello"),
-        sear("zebra", "quagga"),   # independent of the first
-        sear("up", "down"),
-        sear("Hello", "Hey"),      # depends on the first
-        sear("down here", "below"),
-    ]
-    # editor engine: mixed line and regex commands
-    lines = [f"line {i} alpha" for i in range(12)] + ["needle row"]
-    script = [
-        make_command({"type": "rng", "start": 0, "end": 2}, "substitute",
-                     ["alpha", "beta"]),
-        make_command({"type": "rgx", "pattern": "needle"}, "append",
-                     ["added after needle"]),
-        make_command({"type": "last"}, "append", ["tail"]),
-        make_command({"type": "rng", "start": 3, "end": 5}, "delete"),
-    ]
-
     results = {}
     for mode in ("batched", "sequential"):
         if mode == "sequential":
@@ -684,12 +693,140 @@ def test_commute_batch_matches_sequential_shelve(spark, monkeypatch):
         else:
             monkeypatch.undo()
         r_eng = SparkReplaceEngine(spark)
-        g1, _, xs1 = run_chain(r_eng, r_eng.from_texts(texts), sears)
+        g1, _, xs1 = run_chain(r_eng, r_eng.from_texts(_SEAR_TEXTS), _SEARS)
         e_eng = SparkExEngine(spark)
-        g2, _, xs2 = run_chain(e_eng, e_eng.init_data(lines), script)
+        g2, _, xs2 = run_chain(e_eng, e_eng.init_data(_EX_LINES), _EX_SCRIPT)
+        s_eng = SparkReplaceEngine(spark)
+        g3, _, xs3 = run_chain(
+            s_eng, s_eng.from_texts(_SOFT_TEXTS), _SOFT_SEARS
+        )
         results[mode] = (
             xs1, {h: ev.deps for h, ev in g1.events.items()},
             xs2, {h: ev.deps for h, ev in g2.events.items()},
+            xs3, {h: ev.deps for h, ev in g3.events.items()},
         )
         spark.catalog.clearCache()
     assert results["batched"] == results["sequential"]
+
+
+def _jobs_of(spark, fn, *args):
+    """(fn(*args), number of Spark jobs it issued), read back from a
+    job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"t-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_transform_memo_skips_repeat_fingerprint_jobs(spark):
+    """The engine's transform memo: the first application of a command
+    to an input fingerprint runs a fingerprint job, a repeat runs none
+    and still returns the same value over the real input."""
+    # a renumbering command: its plan construction must stay job-free
+    arg = make_command({"type": "rgx", "pattern": "needle"}, "append",
+                       ["added after needle"])
+    for name in ("run_event_transient", "run_event_bare"):
+        eng = SparkExEngine(spark)
+        dat = eng.init_data(_EX_LINES)
+        run = getattr(eng, name)
+        first, n_first = _jobs_of(spark, run, 0, arg, dat)
+        again, n_again = _jobs_of(spark, run, 0, arg, dat)
+        assert n_first >= 1 and n_again == 0, (name, n_first, n_again)
+        assert again.fingerprint == first.fingerprint
+        assert again.df is not first.df  # rebuilt over the real input
+        assert eng.lines(again) == eng.lines(first)
+
+
+def _forgetful(eng):
+    """Clear the engine's transform memo before every engine call."""
+    for name in ("run_event_bare", "run_event_transient", "commute_batch"):
+        def call(*args, _fn=getattr(eng, name)):
+            eng._fps.clear()
+            return _fn(*args)
+
+        setattr(eng, name, call)
+    return eng
+
+
+def _memo_session(eng, dat0, chain, branch):
+    """Shelve `chain` on a main line; in a second session shelve its
+    first event and then `branch`; import_merge the second into the
+    first; prune, and check out every head-set seen (replay through
+    run_event_bare). Returns what the session inferred and read, and the
+    WorkCaches whose memoized states it left."""
+    g1, w1 = Graph(), WorkCache(eng, dat0)
+    xs: set[bytes] = set()
+    history = [frozenset()]
+    for arg in chain:
+        h = w1.shelve_event(g1, set(xs), Event(cmd=0, arg=arg))
+        if h is not None:
+            xs.add(h)
+            history.append(frozenset(xs))
+    g1.nstates[""] = set(xs)
+    g2, w2 = Graph(), WorkCache(eng, dat0)
+    h0 = w2.shelve_event(g2, set(), Event(cmd=0, arg=chain[0]))
+    hb = w2.shelve_event(g2, {h0}, Event(cmd=0, arg=branch))
+    g2.nstates[""] = {h0, hb}
+    merged = import_merge(w1, g1, g2)
+    history.append(frozenset(merged))
+    w1.prune()
+    checkouts = [w1.materialize(g1, set(hs)).fingerprint for hs in history]
+    inferred = (
+        {h: ev.deps for h, ev in g1.events.items()},
+        {h: ev.deps for h, ev in g2.events.items()},
+        merged,
+        checkouts,
+    )
+    return inferred, (w1, w2)
+
+
+def test_transform_memo_matches_memo_free_run(spark):
+    """Differential check of the transform memo on one warm engine per
+    script: the commute-test scripts (soft-dep chain included), a
+    two-branch import_merge and checkouts after a prune.
+    Every memoized state's fingerprint must equal a fresh recompute of
+    its DataFrame, and the event hashes, dep maps, merged heads and
+    checkout fingerprints must equal a run whose memo is cleared before
+    every engine call."""
+    from esvc_spark.core.spark_engine import SparkDat
+
+    cases = [
+        (SparkReplaceEngine, lambda e: e.from_texts(_SEAR_TEXTS), _SEARS,
+         sear("nothing", "something")),
+        (SparkExEngine, lambda e: e.init_data(_EX_LINES), _EX_SCRIPT,
+         make_command({"type": "rgx", "pattern": "needle"}, "substitute",
+                      ["row", "ROW"])),
+        (SparkReplaceEngine, lambda e: e.from_texts(_SOFT_TEXTS),
+         _SOFT_SEARS, sear("zebra", "quagga")),
+    ]
+    for cls, init, chain, branch in cases:
+        runs, jobs = {}, {}
+        for mode in ("warm", "cleared"):
+            eng = cls(spark)
+            if mode == "cleared":
+                _forgetful(eng)
+            dat0 = init(eng)
+            (runs[mode], caches), jobs[mode] = _jobs_of(
+                spark, _memo_session, eng, dat0, chain, branch
+            )
+            for wc in caches:
+                for st, dat in wc.sts.items():
+                    fresh = SparkDat.create(dat.df, cls.COLS).fingerprint
+                    assert dat.fingerprint == fresh, (cls.__name__, mode, st)
+                wc.prune()
+        assert runs["warm"] == runs["cleared"], cls.__name__
+        # the memo did skip work, so the comparison is not vacuous
+        assert jobs["warm"] < jobs["cleared"], (cls.__name__, jobs)
+        soft_deps = [
+            h for deps in runs["warm"][0].values()
+            for h, hard in deps.items() if not hard
+        ]
+        assert bool(soft_deps) == (chain is _SOFT_SEARS), cls.__name__
+    spark.catalog.clearCache()
