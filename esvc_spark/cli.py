@@ -117,7 +117,9 @@ class Repl:
         written by store.save_graph, or a reference-format FILE
         (bincode+zstd, as the Rust exvc writes — ref main.rs:54-111);
         the latter is decoded, hash-verified, and rehashed to the
-        native id scheme before the standard import/merge."""
+        native id scheme before the standard import/merge. Neither form
+        needs a Spark session; `spark` is passed through to
+        store.load_graph, which ignores it."""
         import os
 
         if os.path.isfile(path):
@@ -169,8 +171,8 @@ class Repl:
                 target = line[2:].strip()
             # `.zst`/`.exvc` target = the reference's own on-disk format
             # (bincode+zstd, exactly what the Rust exvc's `w` writes —
-            # main.rs:44-53); no Spark needed. Anything else is the
-            # parquet directory store.
+            # main.rs:44-53). Anything else is the parquet directory
+            # store. Neither needs a Spark session.
             import os as _os
 
             if (line == "w" and not _os.path.isdir(target)) or target.endswith(
@@ -195,13 +197,12 @@ class Repl:
                 ) as e:
                     out.write(f"?w: {e}\n")
                 return True
-            if spark is not None:
-                from .core.store import save_graph
+            from .core.store import save_graph
 
+            try:
                 save_graph(spark, self.graph, target)
-                return True
-            out.write("?w: parquet store needs a Spark session "
-                      "(use a .zst path for the reference file format)\n")
+            except OSError as e:
+                out.write(f"?w: {e}\n")
             return True
         if line == "m<" or line.startswith("m< "):
             import os
@@ -215,10 +216,11 @@ class Repl:
                 target = read_line().strip()
             else:
                 target = line[3:].strip()
-            # a reference-format FILE needs no Spark session; the parquet
-            # directory form still does. Never fall through to the editor
-            # parser — a typo'd path would masquerade as a syntax error.
-            if spark is not None or os.path.isfile(target):
+            # neither the reference-format FILE nor the parquet directory
+            # store needs a Spark session. Never fall through to the
+            # editor parser — a typo'd path would masquerade as a syntax
+            # error.
+            if os.path.exists(target):
                 import subprocess
 
                 from .core.bincode_io import BincodeError
@@ -240,10 +242,6 @@ class Repl:
                     subprocess.CalledProcessError,
                 ) as e:
                     out.write(f"?m<: {e}\n")
-            elif os.path.isdir(target):
-                out.write(
-                    "?m<: directory import needs a Spark session\n"
-                )
             else:
                 out.write(f"?m<: no such file {target!r}\n")
             return True
@@ -280,10 +278,10 @@ def main(
     """REPL entry. Like the reference binary (main.rs:267-276), an
     optional argv path is a graph file loaded BEFORE the loop starts —
     both the reference's bincode+zstd file form and the parquet
-    directory store (the latter needs a Spark session, exactly like
-    `m<` on a directory). A bad startup file reports and starts empty
-    rather than refusing to launch: the session is still useful and the
-    user sees why the graph is empty."""
+    directory store, neither of which needs a Spark session. A bad
+    startup file reports and starts empty rather than refusing to
+    launch: the session is still useful and the user sees why the graph
+    is empty."""
     argv = sys.argv[1:] if argv is None else argv
     stdin = sys.stdin if stdin is None else stdin
     stdout = sys.stdout if stdout is None else stdout
@@ -303,10 +301,6 @@ def main(
         try:
             if not os.path.exists(path):
                 stdout.write(f"?load: no such file {path!r}\n")
-            elif os.path.isdir(path) and spark is None:
-                stdout.write(
-                    "?load: parquet directory store needs a Spark session\n"
-                )
             else:
                 repl.merge_from(path, spark)
         except (

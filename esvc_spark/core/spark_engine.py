@@ -647,9 +647,30 @@ class SparkEngineBase(BaseEngine):
 
     @staticmethod
     def snapshot_exists(path: str) -> bool:
+        """A spill counts as present only when its sidecar exists AND its
+        row count (fingerprint[0]) equals the row total in the parquet
+        footers, read on the driver with pyarrow (no Spark job). A
+        deleted or truncated part file thus makes the state a miss: it is
+        replayed, and the next spill rewrites it, instead of loading
+        wrong rows under the right fingerprint."""
+        import json
         import os
 
-        return os.path.exists(path + ".json")
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        try:
+            with open(path + ".json") as f:
+                n = json.load(f)["fingerprint"][0]
+            d = path + ".parquet"
+            rows = sum(
+                pq.ParquetFile(os.path.join(d, name)).metadata.num_rows
+                for name in os.listdir(d)
+                if name.endswith(".parquet") and name[0] not in "._"
+            )
+        except (OSError, ValueError, KeyError, pa.ArrowException):
+            return False
+        return rows == n
 
     @staticmethod
     def pin_snapshot(dat: SparkDat) -> None:

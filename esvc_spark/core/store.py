@@ -10,16 +10,23 @@ The events table is the FIXTURES.md §B.1 schema:
     events_log(event_id BINARY, cmd INT, arg STRING(JSON),
                deps MAP<BINARY, BOOLEAN>)
     nstates(name STRING, heads ARRAY<BINARY>)
+
+A graph is driver-sized metadata, so save_graph and load_graph write and
+read both tables on the driver with pyarrow (zstd parquet, zero Spark
+jobs); Spark reads the same directories unchanged. Spark is used only by
+events_dataframe, which hands the event log to SQL.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -31,7 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .graph import Event, Graph, IncludeSpec
+from .graph import Event, Graph, GraphError, IncludeSpec
 from .workcache import WorkCache
 
 EVENTS_SCHEMA = StructType(
@@ -51,30 +58,91 @@ NSTATES_SCHEMA = StructType(
 )
 
 
-def save_graph(spark: SparkSession, graph: Graph, path: str) -> None:
-    rows = [
+EVENTS_ARROW = pa.schema(
+    [
+        pa.field("event_id", pa.binary(), nullable=False),
+        pa.field("cmd", pa.int32(), nullable=False),
+        pa.field("arg", pa.string(), nullable=False),
+        pa.field("deps", pa.map_(pa.binary(), pa.bool_()), nullable=False),
+    ]
+)
+
+NSTATES_ARROW = pa.schema(
+    [
+        pa.field("name", pa.string(), nullable=False),
+        pa.field("heads", pa.list_(pa.binary()), nullable=False),
+    ]
+)
+
+
+def _event_rows(graph: Graph) -> list[tuple]:
+    """events_log rows in EVENTS_SCHEMA column order, sorted by hash."""
+    return [
         (h, ev.cmd, json.dumps(ev.arg, sort_keys=True), dict(ev.deps))
         for h, ev in sorted(graph.events.items())
     ]
-    spark.createDataFrame(rows, EVENTS_SCHEMA).repartition(1).write.mode(
-        "overwrite"
-    ).option("compression", "zstd").parquet(os.path.join(path, "events_log"))
+
+
+def _write_table(rows: list[tuple], schema: pa.Schema, table_dir: str) -> None:
+    """Replace the parquet table at `table_dir` with one zstd part file.
+    The old table goes first, as with Spark's overwrite; the new part is
+    written under a dot-prefixed name and renamed into place, so readers
+    (pyarrow and Spark both skip `.` and `_` files) never see a partial
+    file."""
+    shutil.rmtree(table_dir, ignore_errors=True)
+    os.makedirs(table_dir)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
+    )
+    tmp = os.path.join(table_dir, ".part-00000.parquet.tmp")
+    pq.write_table(table, tmp, compression="zstd")
+    os.replace(tmp, os.path.join(table_dir, "part-00000.zstd.parquet"))
+
+
+def _read_table(table_dir: str, schema: pa.Schema) -> list[dict]:
+    """The rows of the parquet table at `table_dir`, which must have the
+    columns and types of `schema` (field names inside map and list types
+    may differ: Spark's writer names them differently)."""
+    table = pq.read_table(table_dir, columns=schema.names)
+    got = {f.name: f.type for f in table.schema}
+    want = {f.name: f.type for f in schema}
+    if got != want:
+        raise GraphError(f"{table_dir!r}: columns {got} are not {want}")
+    return table.to_pylist()
+
+
+def save_graph(spark: SparkSession | None, graph: Graph, path: str) -> None:
+    """Write `graph` as the parquet directory store at `path`
+    (events_log/ and nstates/). Runs on the driver with pyarrow; `spark`
+    is unused and kept so existing callers need no change."""
+    _write_table(_event_rows(graph), EVENTS_ARROW, os.path.join(path, "events_log"))
     nrows = [(name, sorted(heads)) for name, heads in sorted(graph.nstates.items())]
-    spark.createDataFrame(nrows, NSTATES_SCHEMA).repartition(1).write.mode(
-        "overwrite"
-    ).option("compression", "zstd").parquet(os.path.join(path, "nstates"))
+    _write_table(nrows, NSTATES_ARROW, os.path.join(path, "nstates"))
 
 
-def load_graph(spark: SparkSession, path: str, arg_decode=json.loads) -> Graph:
-    g = Graph()
-    for r in spark.read.parquet(os.path.join(path, "events_log")).collect():
-        g.events[bytes(r["event_id"])] = Event(
-            cmd=r["cmd"],
-            arg=arg_decode(r["arg"]),
-            deps={bytes(k): v for k, v in (r["deps"] or {}).items()},
-        )
-    for r in spark.read.parquet(os.path.join(path, "nstates")).collect():
-        g.nstates[r["name"]] = {bytes(h) for h in r["heads"]}
+def load_graph(
+    spark: SparkSession | None, path: str, arg_decode=json.loads
+) -> Graph:
+    """Read the parquet directory store at `path`, whether save_graph or
+    Spark's writer produced it. Runs on the driver with pyarrow; `spark`
+    is unused and kept so existing callers need no change. Raises
+    GraphError when `path` is not a readable graph store."""
+    try:
+        events = _read_table(os.path.join(path, "events_log"), EVENTS_ARROW)
+        nstates = _read_table(os.path.join(path, "nstates"), NSTATES_ARROW)
+        g = Graph()
+        for r in events:
+            g.events[r["event_id"]] = Event(
+                cmd=r["cmd"],
+                arg=arg_decode(r["arg"]),
+                deps=dict(r["deps"] or ()),
+            )
+        for r in nstates:
+            g.nstates[r["name"]] = set(r["heads"])
+    except (pa.ArrowException, OSError, ValueError) as e:
+        raise GraphError(
+            f"not a readable graph store {path!r}: {type(e).__name__}: {e}"
+        ) from e
     return g
 
 
@@ -331,8 +399,4 @@ class SnapshotStore:
 
 def events_dataframe(spark: SparkSession, graph: Graph):
     """The event log as a DataFrame (for SQL over the DAG)."""
-    rows = [
-        (h, ev.cmd, json.dumps(ev.arg, sort_keys=True), dict(ev.deps))
-        for h, ev in sorted(graph.events.items())
-    ]
-    return spark.createDataFrame(rows, EVENTS_SCHEMA)
+    return spark.createDataFrame(_event_rows(graph), EVENTS_SCHEMA)

@@ -72,6 +72,19 @@ from ..functions.vectors import cosine_prenorm, norm
 from .topk import topk_per_group
 
 
+class CompactCellsError(RuntimeError):
+    """IVFIndexStore.compact_cells failed on some cells. ``report`` is the
+    {cell: (files_before, files_after)} of the cells that were swapped in
+    anyway; ``failed`` maps each failed cell to its exception."""
+
+    def __init__(self, report: dict, failed: dict):
+        super().__init__(
+            "compact_cells failed on "
+            + ", ".join(f"cell {c}: {e!r}" for c, e in sorted(failed.items()))
+        )
+        self.report = report
+        self.failed = failed
+
 
 def _assign_cells(e: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest-centroid assignment (cosine, ties to the lower cent_id):
@@ -1360,8 +1373,12 @@ class IVFIndexStore:
         q_stream_emb_index's pipeline appends to).
 
         Returns {cell: (files_before, files_after)} for the rewritten
-        cells. The driver loop is bounded by k (the codebook size),
-        never by corpus rows — same budget class as search's probe
+        cells. When some cells fail, every other cell still finishes and
+        CompactCellsError carries both the report of the cells that were
+        swapped in and the failed cells, whose directories keep their
+        old files (or, after a failure between the two renames, have
+        them restored by the next call). The driver loop is bounded by
+        k (the codebook size), never by corpus rows — same budget class as search's probe
         collect. Cell rewrites run CONCURRENTLY from a small driver
         thread pool (guide §2.6 — the per-cell jobs are independent:
         disjoint directories, disjoint rename targets, and Spark's
@@ -1438,8 +1455,24 @@ class IVFIndexStore:
             return cell, n_before, len(_files(cdir))
 
         with ThreadPoolExecutor(max_workers=min(8, len(todo))) as pool:
-            done = list(pool.map(_rewrite, todo))
-        return {cell: (nb, na) for cell, nb, na in sorted(done)}
+            futures = [pool.submit(_rewrite, job) for job in todo]
+        # read every outcome before raising, so one failed cell does not
+        # lose the report of the cells already swapped in
+        report, failed = {}, {}
+        for (cell, _, _), fut in zip(todo, futures):
+            err = fut.exception()
+            if err is None:
+                _, nb, na = fut.result()
+                report[cell] = (nb, na)
+            elif isinstance(err, Exception):
+                failed[cell] = err
+            else:
+                raise err  # an interrupt or exit, not a cell failure
+        if failed:
+            raise CompactCellsError(report, failed) from next(
+                iter(failed.values())
+            )
+        return report
 
     # ------------------------------------------------------------- load
     @staticmethod

@@ -619,6 +619,63 @@ def test_compact_cells_recovers_crash_residue(spark, tmp_path):
     assert st.search(q, nprobe=2, topk=3).count() > 0
 
 
+def test_compact_cells_partial_failure_keeps_report(
+    spark, tmp_path, monkeypatch
+):
+    """One cell's swap fails among three fragmented cells: the other two
+    still end compacted and appear in the error's report, and the failed
+    cell's files stay byte-untouched."""
+    import os
+
+    from esvc_spark.operators.ann_store import CompactCellsError
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 9), float(i % 4) + 0.5]) for i in range(30)],
+        "vec_id long, emb array<double>",
+    )
+    st = IVFIndexStore.build(spark, emb, str(tmp_path / "pidx"), k=3)
+    for lo in range(30, 60, 6):
+        st.add(
+            spark.createDataFrame(
+                [
+                    (i, [float(i % 9), float(i % 4) + 0.5])
+                    for i in range(lo, lo + 6)
+                ],
+                "vec_id long, emb array<double>",
+            )
+        )
+    root = tmp_path / "pidx" / "cells"
+
+    def files(cell):
+        d = root / f"cell={cell}"
+        return {
+            f: (d / f).read_bytes()
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        }
+
+    frag = {c: len(files(c)) for c in range(3)}
+    assert all(n > 1 for n in frag.values()), frag
+    victim = 1
+    before = files(victim)
+    real_rename = os.rename
+
+    def failing_rename(src, dst):
+        if str(src).endswith(f"cell={victim}"):
+            raise OSError(f"injected failure moving {src}")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(CompactCellsError) as exc:
+        st.compact_cells()
+    monkeypatch.setattr(os, "rename", real_rename)
+    err = exc.value
+    assert set(err.failed) == {victim}
+    assert err.report == {c: (frag[c], 1) for c in (0, 2)}
+    assert all(len(files(c)) == 1 for c in (0, 2))
+    assert files(victim) == before
+
+
 def _inventory(st):
     return sorted(
         (r["vec_id"], tuple(r["emb"])) for r in st.cells().collect()

@@ -366,10 +366,18 @@ def test_repl_w_writes_reference_format(tmp_path):
     dst = Repl(("alpha", "beta"))
     assert dst.handle_line(f"m< {p}", out, lambda: [])
     assert dst.materialize() == ("alpha", "beta", "gamma")
-    # parquet form without Spark reports, not crashes
+    # the parquet directory form needs no Spark session either
     out2 = io.StringIO()
     assert src.handle_line(f"w {tmp_path}/pq_dir", out2, lambda: [])
-    assert "needs a Spark session" in out2.getvalue()
+    dst2 = Repl(("alpha", "beta"))
+    assert dst2.handle_line(f"m< {tmp_path}/pq_dir", out2, lambda: [])
+    assert out2.getvalue() == ""
+    assert dst2.materialize() == ("alpha", "beta", "gamma")
+    # an unwritable store path reports instead of killing the session
+    (tmp_path / "a_file").write_text("x")
+    out3 = io.StringIO()
+    assert src.handle_line(f"w {tmp_path}/a_file", out3, lambda: [])
+    assert out3.getvalue().startswith("?w:")
 
 
 def test_repl_w_reports_unexportable_graph_instead_of_crashing():

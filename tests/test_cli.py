@@ -121,9 +121,13 @@ def test_m_import_bad_path_reports_not_editor_error():
     out = io.StringIO()
     assert r.handle_line("m< /no/such/file.exvc.zst", out, lambda: [])
     assert "no such file" in out.getvalue()
+    # a directory that is no graph store reports, and the session keeps
+    # its events
+    _drive(r, [("$a", ["unsaved"])])
     out2 = io.StringIO()
     assert r.handle_line("m< /tmp", out2, lambda: [])
-    assert "needs a Spark session" in out2.getvalue()
+    assert out2.getvalue().startswith("?m<:")
+    assert r.materialize() == ("hello", "unsaved")
 
 
 def test_m_import_corrupt_file_reports_and_survives(tmp_path):

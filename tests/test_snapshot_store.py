@@ -298,3 +298,76 @@ def test_repl_opts_into_snapshot_store(tmp_path):
     assert r.materialize()[0] == "first"
     assert isinstance(r.wc.sts, SnapshotStore)
     assert r.wc.sts.persist_budget == 2
+
+
+def _spill_then_damage(spark, tmp_path, damage):
+    """Spill every state of the chain, apply `damage` to one non-empty
+    part file of the final state's spill, then read the final state
+    back through a new session's store. Returns the read-back value,
+    that session's counting engine and store, and the final state."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    spill = str(tmp_path / "spill")
+    eng1 = SparkReplaceEngine(spark)
+    store1 = SnapshotStore(eng1, spill, persist_budget=2)
+    g, w1, hashes = _shelve_chain(eng1, sts=store1)
+    final_state = frozenset(hashes)
+    w1.materialize(g, set(hashes))
+    store1.flush()
+    base = store1._path(final_state)
+    assert eng1.snapshot_exists(base)
+    d = base + ".parquet"
+    part = next(
+        os.path.join(d, f)
+        for f in sorted(os.listdir(d))
+        if f.endswith(".parquet")
+        and pq.ParquetFile(os.path.join(d, f)).metadata.num_rows > 0
+    )
+    damage(part)
+
+    eng2 = _CountingEngine(SparkReplaceEngine(spark))
+    store2 = SnapshotStore(eng2, spill, persist_budget=2)
+    w2 = WorkCache(eng2, eng2.from_texts(_TEXTS), sts=store2)
+    assert final_state not in store2  # the damaged spill is a miss
+    dat = w2.materialize(g, set(hashes))
+    return dat, eng2, store2, final_state
+
+
+def _assert_true_fingerprint(dat, eng2, store2, final_state):
+    from esvc_spark.core.spark_engine import SparkDat
+
+    assert eng2.runs >= 1  # replayed instead of loading the damaged spill
+    fresh = SparkDat.create(dat.df, SparkReplaceEngine.COLS).fingerprint
+    assert dat.fingerprint == fresh
+    want = list(_TEXTS)
+    for arg in _EVENTS:
+        want = [t.replace(arg["search"], arg["replacement"]) for t in want]
+    assert sorted(r["text"] for r in dat.df.collect()) == sorted(want)
+    # the next spill rewrites the damaged files
+    store2.flush()
+    assert final_state in store2
+
+
+def test_truncated_spill_part_file_is_a_miss(spark, tmp_path):
+    """A spill whose parquet part file was truncated (sidecar intact)
+    must not load: the state is replayed and carries its true
+    fingerprint."""
+
+    def truncate(part):
+        with open(part, "rb") as f:
+            data = f.read()
+        with open(part, "wb") as f:
+            f.write(data[: len(data) // 2])
+
+    _assert_true_fingerprint(*_spill_then_damage(spark, tmp_path, truncate))
+
+
+def test_deleted_spill_part_file_is_a_miss(spark, tmp_path):
+    """A spill with one parquet part file deleted (sidecar intact) would
+    load fewer rows under the full state's fingerprint; it must be a
+    miss instead."""
+    import os
+
+    _assert_true_fingerprint(*_spill_then_damage(spark, tmp_path, os.remove))

@@ -11,6 +11,8 @@ from esvc_spark.core.engines import sear
 from esvc_spark.core.exparse import make_command, parse_address
 from esvc_spark.core.spark_engine import SparkExEngine, SparkReplaceEngine
 from esvc_spark.core.store import (
+    EVENTS_SCHEMA,
+    NSTATES_SCHEMA,
     append_head,
     compact_heads,
     import_merge,
@@ -146,6 +148,148 @@ def test_graph_store_roundtrip(spark, tmp_path, replace_engine):
     assert g2.events[h1].arg == g.events[h1].arg
     assert g2.events[h1].deps == g.events[h1].deps
     assert g2.nstates[""] == {h1}
+
+
+def _store_case(name: str) -> Graph:
+    """Graphs that exercise every column of the graph store."""
+    g = Graph()
+    if name == "empty":
+        return g
+    _, h1 = g.ensure_event(Event(cmd=0, arg=sear("a", "b")))
+    if name == "no_deps":
+        g.nstates[""] = {h1}
+        return g
+    _, h2 = g.ensure_event(Event(cmd=3, arg=sear("b", "c"), deps={h1: True}))
+    _, h3 = g.ensure_event(
+        Event(cmd=0, arg=sear("x", "y"), deps={h1: False, h2: True})
+    )
+    if name == "soft_deps":
+        g.nstates[""] = {h3}
+        return g
+    _, h4 = g.ensure_event(
+        Event(cmd=0, arg=sear("Grüße", "日本語 → ✓\n"), deps={h2: False})
+    )
+    g.nstates.update({"": {h3, h4}, "old": {h1}, "none": set(), "ü": {h4}})
+    return g
+
+
+_STORE_CASES = ["empty", "no_deps", "soft_deps", "named_heads_non_ascii"]
+
+
+def _assert_same_graph(got: Graph, want: Graph) -> None:
+    assert got.events == want.events  # Event equality covers the deps
+    assert got.nstates == want.nstates
+
+
+def _spark_save_graph(spark, graph: Graph, path: str) -> None:
+    """The Spark writer of the graph store before it moved to pyarrow:
+    one createDataFrame -> repartition(1) -> zstd write per table."""
+    import json
+    import os
+
+    rows = [
+        (h, ev.cmd, json.dumps(ev.arg, sort_keys=True), dict(ev.deps))
+        for h, ev in sorted(graph.events.items())
+    ]
+    spark.createDataFrame(rows, EVENTS_SCHEMA).repartition(1).write.mode(
+        "overwrite"
+    ).option("compression", "zstd").parquet(os.path.join(path, "events_log"))
+    nrows = [(n, sorted(hs)) for n, hs in sorted(graph.nstates.items())]
+    spark.createDataFrame(nrows, NSTATES_SCHEMA).repartition(1).write.mode(
+        "overwrite"
+    ).option("compression", "zstd").parquet(os.path.join(path, "nstates"))
+
+
+def test_graph_store_roundtrip_cases(tmp_path):
+    """Every case round-trips, each saved over the previous one in the
+    same directory (save_graph replaces both tables)."""
+    path = str(tmp_path / "graph")
+    for name in _STORE_CASES + _STORE_CASES[::-1]:
+        g = _store_case(name)
+        save_graph(None, g, path)
+        _assert_same_graph(load_graph(None, path), g)
+
+
+def test_graph_store_issues_no_spark_jobs(spark, tmp_path):
+    """save_graph + load_graph run on the driver: zero Spark jobs."""
+    g = _store_case("named_heads_non_ascii")
+    path = str(tmp_path / "graph")
+
+    def save_and_load():
+        save_graph(spark, g, path)
+        return load_graph(spark, path)
+
+    got, jobs = _jobs_of(spark, save_and_load)
+    assert jobs == 0
+    _assert_same_graph(got, g)
+
+
+@pytest.mark.parametrize("name", _STORE_CASES)
+def test_graph_store_loads_spark_written_dir(spark, tmp_path, name):
+    """A store written by Spark's parquet writer (part files, _SUCCESS,
+    .crc files) loads to an equal Graph, and save_graph can overwrite
+    it."""
+    import os
+
+    g = _store_case(name)
+    path = str(tmp_path / "graph")
+    _spark_save_graph(spark, g, path)
+    assert "_SUCCESS" in os.listdir(os.path.join(path, "events_log"))
+    _assert_same_graph(load_graph(spark, path), g)
+    save_graph(spark, _store_case("no_deps"), path)
+    _assert_same_graph(load_graph(spark, path), _store_case("no_deps"))
+
+
+def test_graph_store_schema_as_spark_reads_it(spark, tmp_path):
+    """Spark reads a save_graph store with the column names and types
+    of EVENTS_SCHEMA and NSTATES_SCHEMA, and the same rows."""
+    import os
+
+    g = _store_case("named_heads_non_ascii")
+    path = str(tmp_path / "graph")
+    save_graph(spark, g, path)
+    for table, schema, n in (
+        ("events_log", EVENTS_SCHEMA, len(g.events)),
+        ("nstates", NSTATES_SCHEMA, len(g.nstates)),
+    ):
+        df = spark.read.parquet(os.path.join(path, table))
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in schema
+        ]
+        assert df.count() == n
+    heads = {
+        r["name"]: {bytes(h) for h in r["heads"]}
+        for r in spark.read.parquet(os.path.join(path, "nstates")).collect()
+    }
+    assert heads == g.nstates
+
+
+def test_m_import_corrupt_graph_store_reports_and_survives(spark, tmp_path):
+    """`m<` on a store whose events_log part file is corrupt reports
+    `?m<:` (load_graph raises GraphError) and keeps the session."""
+    import io
+    import os
+
+    from esvc_spark.cli import Repl
+
+    path = str(tmp_path / "graph")
+    save_graph(spark, _store_case("soft_deps"), path)
+    part_dir = os.path.join(path, "events_log")
+    part = next(
+        os.path.join(part_dir, f)
+        for f in os.listdir(part_dir)
+        if f.startswith("part-")
+    )
+    with open(part, "rb") as f:
+        data = f.read()
+    with open(part, "wb") as f:
+        f.write(data[: len(data) // 2])
+    r = Repl(("keep-me",))
+    r.submit(make_command({"type": "last"}, "append", ["unsaved"]))
+    out = io.StringIO()
+    assert r.handle_line(f"m< {path}", out, lambda: [], spark=spark)
+    assert out.getvalue().startswith("?m<:")
+    assert r.materialize() == ("keep-me", "unsaved")
 
 
 def test_import_merge_two_graphs(spark, replace_engine):
