@@ -48,11 +48,7 @@ class Repl:
         # Engine-agnostic bootstrapping (the reference's whole point): the
         # in-memory ExEngine's Dat IS the line tuple; the Spark-backed
         # engine wraps the lines in a persisted DataFrame + fingerprint.
-        init = (
-            self.engine.init_data(list(init_lines))
-            if hasattr(self.engine, "init_data")
-            else tuple(init_lines)
-        )
+        init = self.engine.init_data(list(init_lines))
         self.graph = Graph()
         # spill_dir opts into the bounded SnapshotStore memo (parquet
         # spill by state key, reload across sessions) — the reference's
@@ -73,7 +69,7 @@ class Repl:
 
     def materialize(self) -> tuple[str, ...]:
         dat = self.wc.materialize(self.graph, self.heads)
-        return tuple(self.engine.lines(dat)) if hasattr(self.engine, "lines") else dat
+        return tuple(self.engine.lines(dat))
 
     # ---------------------------------------------------------------- ops
 

@@ -1,10 +1,26 @@
-"""Engine contract + in-memory engines.
+"""The engine contract (BaseEngine) + in-memory engines.
 
-The Engine trait (≙ crates/esvc-traits/src/lib.rs:15-28) is the whole
-plugin surface: a pure, deterministic, whole-value transform
-`run_event_bare(cmd, arg, dat) -> dat`, plus value equality (the
-reference's `Dat: PartialEq` bound) which the dependency-inference
-algorithm leans on.
+BaseEngine is the one engine contract (≙ the Engine trait,
+crates/esvc-traits/src/lib.rs:15-28): WorkCache, SnapshotStore and the
+REPL call its seams directly. An engine must define only
+run_event_bare(cmd, arg, dat) -> dat, a pure, deterministic,
+whole-value transform returning a NEW value (datasets are immutable).
+It may override the other seams, each of which has a default here:
+
+  - dat_eq(a, b): whole-value equality, the reference's `Dat: PartialEq`
+    bound, which dependency inference leans on (default `==`);
+  - run_event_transient(cmd, arg, dat): the transform for a result that
+    is only ever compared, never replayed from (default run_event_bare);
+  - commute_batch(ev, tests, cur_st): every commutation verdict of one
+    shelve round (default: the reference's sequential per-candidate
+    replay);
+  - release(dat): free a memoized value's resources (default no-op);
+  - dat_key(dat): a content digest stable across processes, which
+    names the base state's spill namespace (default blake2b of the
+    value's repr);
+  - the snapshot spill seam save_snapshot / load_snapshot /
+    snapshot_exists / drop_snapshot / pin_snapshot (default one pickle
+    file per state).
 
 In-memory engines (reference parity, used by the regression/property
 tests):
@@ -19,31 +35,46 @@ The Spark-native engines live in spark_engine.py.
 from __future__ import annotations
 
 import re
-from typing import Any, Protocol, runtime_checkable
-
-
-@runtime_checkable
-class Engine(Protocol):
-    def run_event_bare(self, cmd: int, arg: Any, dat: Any) -> Any:
-        """Apply command `cmd` with argument `arg` to dataset value `dat`,
-        returning a NEW value (datasets are immutable)."""
-        ...
-
-    def dat_eq(self, a: Any, b: Any) -> bool:
-        """Whole-dataset-value equality (load-bearing for shelve/merge)."""
-        ...
-
-    def release(self, dat: Any) -> None:
-        """Free resources held by a memoized value (optional)."""
-        ...
+from typing import Any
 
 
 class BaseEngine:
+    def run_event_bare(self, cmd: int, arg: Any, dat: Any) -> Any:
+        raise NotImplementedError
+
     def dat_eq(self, a: Any, b: Any) -> bool:
         return a == b
 
     def release(self, dat: Any) -> None:
         pass
+
+    def run_event_transient(self, cmd: int, arg: Any, dat: Any) -> Any:
+        """run_event_bare for a result that will only be compared."""
+        return self.run_event_bare(cmd, arg, dat)
+
+    def commute_batch(self, ev, tests, cur_st) -> dict:
+        """{key: independent?} for `tests` = [(key, conc_base, conc_ev)],
+        by the reference's commutation rule (workcache.rs:288-296):
+        ev_first = ev(conc_base), ev_first_then = conc_ev(ev_first),
+        independent iff ev_first != ev_first_then == cur_st."""
+        verdicts = {}
+        for key, conc_base, conc_ev in tests:
+            ev_first = self.run_event_transient(ev.cmd, ev.arg, conc_base)
+            ev_first_then = self.run_event_transient(
+                conc_ev.cmd, conc_ev.arg, ev_first
+            )
+            verdicts[key] = (
+                not self.dat_eq(ev_first, ev_first_then)
+            ) and self.dat_eq(ev_first_then, cur_st)
+        return verdicts
+
+    def dat_key(self, dat: Any) -> str:
+        """Hex content digest of `dat`, equal across processes for equal
+        values: the repr of str, bytes and tuples is (`hash()` is salted
+        per process; a pickle also encodes object identity)."""
+        import hashlib
+
+        return hashlib.blake2b(repr(dat).encode(), digest_size=8).hexdigest()
 
     # -- snapshot spill seam (store.SnapshotStore) -------------------------
     # Local engines hold plain picklable values (line tuples, text
@@ -71,6 +102,11 @@ class BaseEngine:
         import os
 
         return os.path.exists(path + ".json")
+
+    @staticmethod
+    def pin_snapshot(dat: Any) -> None:
+        """Make a loaded snapshot independent of its files, which
+        SnapshotStore.pop deletes next. A loaded pickle already is."""
 
     @staticmethod
     def drop_snapshot(path: str) -> None:
@@ -209,6 +245,12 @@ class ExEngine(BaseEngine):
     """ed/ex-style line editor over an immutable line vector
     (≙ en.rs:214-258: resolve address → apply command to selected runs →
     flatten)."""
+
+    def init_data(self, lines: list[str]) -> tuple[str, ...]:
+        return tuple(lines)
+
+    def lines(self, dat: tuple[str, ...]) -> tuple[str, ...]:
+        return dat
 
     def run_event_bare(self, cmd: int, arg: dict, dat: tuple[str, ...]) -> tuple[str, ...]:
         if cmd != 0:

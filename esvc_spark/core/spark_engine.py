@@ -48,6 +48,17 @@ from .engines import BaseEngine, CommandNotFound
 from .graph import canonical_json_encode
 
 
+def _fingerprint_aggs(h) -> list:
+    """(count, bit_xor, exact decimal sum) of the per-row hash column `h`."""
+    return [F.count(F.lit(1)).alias("n"), F.bit_xor(h).alias("x"),
+            F.sum(h.cast("decimal(38,0)")).alias("s")]
+
+
+def _fingerprint_of(row) -> tuple:
+    """An aggregate row as a fingerprint; the empty state is (0, 0, 0)."""
+    return (row["n"], row["x"] if row["n"] else 0, int(row["s"] or 0))
+
+
 @dataclass(frozen=True)
 class SparkDat:
     """An immutable dataset value: a persisted DataFrame plus its canonical
@@ -63,13 +74,8 @@ class SparkDat:
     @staticmethod
     def create(df: DataFrame, cols: list[str]) -> "SparkDat":
         df = df.persist()
-        row = df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64(*cols)).alias("x"),
-            F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("s"),
-        ).collect()[0]
-        fp = (row["n"], row["x"] if row["n"] else 0, int(row["s"]) if row["s"] is not None else 0)
-        return SparkDat(df=df, fingerprint=fp)
+        row = df.select(*_fingerprint_aggs(F.xxhash64(*cols))).collect()[0]
+        return SparkDat(df=df, fingerprint=_fingerprint_of(row))
 
     def __eq__(self, other: object) -> bool:
         return isinstance(other, SparkDat) and self.fingerprint == other.fingerprint
@@ -474,19 +480,27 @@ class SparkEngineBase(BaseEngine):
         if isinstance(dat, SparkDat):
             dat.df.unpersist()
 
+    def dat_key(self, dat: SparkDat) -> str:
+        return super().dat_key(dat.fingerprint)
+
     @staticmethod
     def _fp_key(cmd: int, arg, fingerprint: tuple) -> tuple:
         return (fingerprint, cmd, canonical_json_encode(arg))
+
+    def _plan(self, cmd: int, arg, dat: SparkDat) -> tuple:
+        """(plan over `dat` — `dat.df` itself on the no-op paths, memo
+        key, memoized output fingerprint or None)."""
+        key = self._fp_key(cmd, arg, dat.fingerprint)
+        plan = self._apply_plan(cmd, arg, dat.df, dat.count)
+        return plan, key, self._fps.get(key)
 
     def run_event_bare(self, cmd: int, arg: dict, dat: SparkDat) -> SparkDat:
         """The transform as a persisted state. A memo hit persists the
         lazy plan under the known fingerprint — no job until the state
         is read; a miss runs SparkDat.create's fingerprint job."""
-        out = self._apply_plan(cmd, arg, dat.df, dat.count)
+        out, key, fp = self._plan(cmd, arg, dat)
         if out is dat.df:
             return dat  # no-op path: same value, no re-persist, no job
-        key = self._fp_key(cmd, arg, dat.fingerprint)
-        fp = self._fps.get(key)
         if fp is not None:
             return SparkDat(df=out.persist(), fingerprint=fp)
         made = SparkDat.create(out, self.COLS)
@@ -494,16 +508,12 @@ class SparkEngineBase(BaseEngine):
         return made
 
     # -- batched commutation testing (WorkCache.shelve_event seam) --------
-    # One shelve round issues 2 eager fingerprint jobs (persist + collect)
-    # per candidate dependency. Both derived states are TRANSIENT — only
-    # their fingerprints feed the independence verdict — so the engine can
-    # compute every candidate's pair of fingerprints in TWO tagged
-    # aggregate jobs total (VERDICT r8 #6): union the lazy `_apply_plan`
-    # branches over the (persisted) complement bases, tag each branch, and
-    # group-aggregate the same (count, bit_xor, decimal-sum) triple
-    # SparkDat.create collects — so verdicts are bit-identical to the
-    # sequential path, proven by the differential test in
-    # tests/test_spark_core.py.
+    # Both states a commutation test derives are TRANSIENT — only their
+    # fingerprints feed the verdict — so the engine computes every
+    # candidate's pair in TWO tagged aggregate jobs total (VERDICT r8 #6)
+    # over the same triple SparkDat.create collects: verdicts are
+    # bit-identical to BaseEngine's sequential replay, proven by the
+    # differential test in tests/test_spark_core.py.
 
     def run_event_transient(self, cmd: int, arg, dat: SparkDat) -> SparkDat:
         """`run_event_bare` for a result that will only ever be COMPARED
@@ -513,11 +523,9 @@ class SparkEngineBase(BaseEngine):
         hit), no block writes, nothing to unpersist. WorkCache uses this
         for the expected-state, safety-net, and commutation-test
         transients (VERDICT r8 #6)."""
-        out = self._apply_plan(cmd, arg, dat.df, dat.count)
+        out, key, fp = self._plan(cmd, arg, dat)
         if out is dat.df:
             return dat  # no-op path: same value
-        key = self._fp_key(cmd, arg, dat.fingerprint)
-        fp = self._fps.get(key)
         if fp is None:
             fp = self._fps[key] = self._batched_fingerprints([(0, out)])[0]
         return SparkDat(df=out, fingerprint=fp)
@@ -533,9 +541,9 @@ class SparkEngineBase(BaseEngine):
         fp(ev_first_then) == fp(cur_st). Job 1 fingerprints every
         ev_first the transform memo lacks (also yielding its row count,
         which job 2's plans need); job 2 fingerprints every missing
-        ev_first_then. A job with nothing missing is skipped."""
-        if not tests:
-            return {}
+        ev_first_then. A no-op plan takes its input's fingerprint and a
+        job with nothing left to compute is skipped, so one candidate
+        costs no more jobs than two run_event_transient calls."""
         # build each ev_first plan at most once, and only if a job needs
         # it: plan construction is not free for renumbering commands
         ev_first_plans: dict = {}
@@ -552,7 +560,7 @@ class SparkEngineBase(BaseEngine):
             for key, base, _ in tests
         }
         self._memoize_fingerprints({
-            k1[key]: ev_first(key, base)
+            k1[key]: (ev_first(key, base), base.df, base.fingerprint)
             for key, base, _ in tests
             if k1[key] not in self._fps
         })
@@ -562,8 +570,12 @@ class SparkEngineBase(BaseEngine):
             for key, _, cev in tests
         }
         self._memoize_fingerprints({
-            k2[key]: self._apply_plan(
-                cev.cmd, cev.arg, ev_first(key, base), fp1[key][0]
+            k2[key]: (
+                self._apply_plan(
+                    cev.cmd, cev.arg, ev_first(key, base), fp1[key][0]
+                ),
+                ev_first(key, base),
+                fp1[key],
             )
             for key, base, cev in tests
             if k2[key] not in self._fps
@@ -575,10 +587,18 @@ class SparkEngineBase(BaseEngine):
         }
 
     def _memoize_fingerprints(self, plans: dict) -> None:
-        """Fingerprint {memo key: plan} into the transform memo in ONE
-        tagged aggregate job; no job when there is nothing to compute."""
-        if plans:
-            self._fps.update(self._batched_fingerprints(list(plans.items())))
+        """Fingerprint {memo key: (plan, input df, input fingerprint)}
+        into the transform memo in ONE tagged aggregate job. A no-op plan
+        (the input df itself) takes the input's fingerprint; no job runs
+        when nothing is left to compute."""
+        todo = []
+        for key, (plan, df, fp) in plans.items():
+            if plan is df:
+                self._fps[key] = fp
+            else:
+                todo.append((key, plan))
+        if todo:
+            self._fps.update(self._batched_fingerprints(todo))
 
     def _batched_fingerprints(self, tagged_plans) -> dict:
         """Content fingerprints of many plans in ONE aggregate job: tag
@@ -596,21 +616,10 @@ class SparkEngineBase(BaseEngine):
         rows = (
             reduce(DataFrame.unionByName, parts)
             .groupBy("_t")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor("_h").alias("x"),
-                F.sum(F.col("_h").cast("decimal(38,0)")).alias("s"),
-            )
+            .agg(*_fingerprint_aggs(F.col("_h")))
             .collect()
         )
-        got = {
-            r["_t"]: (
-                r["n"],
-                r["x"] if r["n"] else 0,
-                int(r["s"]) if r["s"] is not None else 0,
-            )
-            for r in rows
-        }
+        got = {r["_t"]: _fingerprint_of(r) for r in rows}
         return {
             key: got.get(i, (0, 0, 0))
             for i, (key, _) in enumerate(tagged_plans)

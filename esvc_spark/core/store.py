@@ -234,7 +234,7 @@ class SnapshotStore:
         self.spill_dir = spill_dir
         self.persist_budget = max(1, int(persist_budget))
         self._mem: "OrderedDict[frozenset, Any]" = OrderedDict()
-        self._ns = ""  # base-state namespace, set when init_data arrives
+        self._ns: str | None = None  # spill namespace, fixed by the first write
         self.spills = 0
         self.loads = 0
         os.makedirs(spill_dir, exist_ok=True)
@@ -249,12 +249,8 @@ class SnapshotStore:
         return h.hexdigest()
 
     def _path(self, st: frozenset) -> str:
-        # spill files are namespaced by the BASE state's content
-        # fingerprint: event hashes cover only (cmd, arg, deps), so two
-        # sessions sharing a spill dir over DIFFERENT init_data must not
-        # resolve the same logical state to each other's snapshots
         return os.path.join(
-            self.spill_dir, f"st_{self._ns}{self.state_key(st)}"
+            self.spill_dir, f"st_{self._ns or ''}{self.state_key(st)}"
         )
 
     # -- mapping protocol (exactly what WorkCache uses: in / [] / get /
@@ -277,28 +273,24 @@ class SnapshotStore:
         return dat
 
     def __setitem__(self, st: frozenset, dat) -> None:
-        if not st and not self._ns:
-            # the empty state IS the session's init_data: derive the
-            # namespace from its content fingerprint (engine-opaque
-            # datasets without one fall back to the shared namespace)
-            import hashlib
-
-            fp = getattr(dat, "fingerprint", None)
-            if fp is not None:
-                self._ns = (
-                    hashlib.blake2b(
-                        repr(fp).encode(), digest_size=8
-                    ).hexdigest()
-                    + "_"
-                )
+        if self._ns is None:
+            # spill files are namespaced by the BASE state's content
+            # digest: event hashes cover only (cmd, arg, deps), so two
+            # sessions sharing a spill dir over DIFFERENT init_data must
+            # not resolve the same logical state to each other's
+            # snapshots. WorkCache writes the empty state (its
+            # init_data) first; a store written before its base keeps
+            # the shared namespace, so no spilled state changes path
+            self._ns = self.engine.dat_key(dat) + "_" if not st else ""
         # OVERWRITE must invalidate a stale spill: _spill skips the save
         # when a file already exists (re-evicting an unchanged reloaded
         # state must not rewrite parquet), so a file predating this new
         # value would silently resurrect the old one on the next
         # evict/reload cycle (found by the dict-semantics property:
         # set k / evict k / set k again)
-        if self.engine.snapshot_exists(self._path(st)):
-            self._drop(st)
+        path = self._path(st)
+        if self.engine.snapshot_exists(path):
+            self.engine.drop_snapshot(path)
         self._insert(st, dat)
 
     def get(self, st: frozenset, default=None):
@@ -317,25 +309,17 @@ class SnapshotStore:
         entry for a value that is about to be forgotten) and PINNED off
         its files via the engine's pin_snapshot hook before they are
         deleted — a lazily-persisted scan would otherwise dangle."""
+        path = self._path(st)
         if st in self._mem:
             dat = self._mem.pop(st)
-            self._drop(st)
-            return dat
-        path = self._path(st)
-        if not self.engine.snapshot_exists(path):
+        elif self.engine.snapshot_exists(path):
+            dat = self.engine.load_snapshot(path)
+            self.engine.pin_snapshot(dat)
+            self.loads += 1
+        else:
             raise KeyError(st)
-        dat = self.engine.load_snapshot(path)
-        pin = getattr(self.engine, "pin_snapshot", None)
-        if pin is not None:
-            pin(dat)
-        self.loads += 1
-        self._drop(st)
+        self.engine.drop_snapshot(path)
         return dat
-
-    def _drop(self, st: frozenset) -> None:
-        drop = getattr(self.engine, "drop_snapshot", None)
-        if drop is not None:
-            drop(self._path(st))
 
     def clear_spill(self) -> int:
         """Delete every spill file in THIS store's namespace — the disk
@@ -346,21 +330,14 @@ class SnapshotStore:
         number of snapshots deleted."""
         import glob as _glob
 
-        n = 0
-        for side in _glob.glob(
-            os.path.join(self.spill_dir, f"st_{self._ns}*.json")
-        ):
-            base = side[: -len(".json")]
-            drop = getattr(self.engine, "drop_snapshot", None)
-            if drop is not None:
-                drop(base)
-            else:
-                try:
-                    os.remove(side)
-                except OSError:
-                    pass
-            n += 1
-        return n
+        # a state key is 32 hex digits, so the shared namespace's
+        # pattern matches no namespaced file
+        sides = _glob.glob(
+            os.path.join(self.spill_dir, f"st_{self._ns or ''}{'?' * 32}.json")
+        )
+        for side in sides:
+            self.engine.drop_snapshot(side[: -len(".json")])
+        return len(sides)
 
     def __iter__(self):
         return iter(list(self._mem))

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from .engines import Engine
+from .engines import BaseEngine
 from .graph import DatasetNotFound, Event, Graph, IncludeSpec
 from .hashing import format_hash
 
@@ -61,7 +61,7 @@ class NoopAtMerge(WorkCacheError):
 
 
 class WorkCache:
-    def __init__(self, engine: Engine, init_data: Any, sts=None):
+    def __init__(self, engine: BaseEngine, init_data: Any, sts=None):
         self.engine = engine
         # state (frozenset of event hashes) -> materialized dataset value.
         # Default: the reference's unbounded in-RAM memo (workcache.rs:
@@ -132,11 +132,9 @@ class WorkCache:
         """
         eng = self.engine
         # transient states (expected, safety-net, commutation tests) are
-        # only ever compared, never replayed from — engines that can
-        # compute a compare-only value cheaper (SparkEngineBase: lazy
-        # plan + one fingerprint job, no persist) expose
-        # run_event_transient; others fall back to run_event_bare
-        run_t = getattr(eng, "run_event_transient", eng.run_event_bare)
+        # only ever compared, never replayed from, so they need no
+        # release
+        run_t = eng.run_event_transient
         ev = Event(cmd=ev.cmd, arg=ev.arg, deps={})  # deps are inferred, not trusted
         cur_deps: dict[bytes, int] = {}
         seed_deps = set(seed_deps)
@@ -144,8 +142,6 @@ class WorkCache:
         base_st, _ = self.run_foreach_recursively(graph, {h: _ALL for h in seed_deps})
         cur_st = run_t(ev.cmd, ev.arg, base_st)
         if not cur_deps and eng.dat_eq(base_st, cur_st):
-            if cur_st is not base_st:
-                eng.release(cur_st)
             return None  # no-op event (workcache.rs:159-162)
 
         while seed_deps:
@@ -155,24 +151,15 @@ class WorkCache:
             # current expected state: live seeds (minus denied) + used deps
             incl = {h: _ALL for h in seed_deps if cur_deps.get(h) != _DENY}
             incl.update({h: _ALL for h, s in cur_deps.items() if s == _USE})
-            prev_cur, prev_base = cur_st, base_st
+            prev_base = base_st
             base_st, _ = self.run_foreach_recursively(graph, incl)
-            if base_st is prev_base:
-                # identical base VALUE (memo returned the same object) →
-                # the deterministic transform yields the identical
-                # expected state; reuse instead of recomputing (the
-                # round-1 incl always equals the pre-loop state, so this
-                # saves one engine job per shelve)
-                cur_st = prev_cur
-            else:
+            # an identical base VALUE (memo returned the same object)
+            # keeps the expected state: the transform is deterministic
+            # (the round-1 incl always equals the pre-loop state, so this
+            # saves one engine job per shelve)
+            if base_st is not prev_base:
                 cur_st = run_t(ev.cmd, ev.arg, base_st)
-                # the previous round's expected state is transient now
-                # (bases are memoized; never release those)
-                if prev_cur is not prev_base and prev_cur is not base_st:
-                    eng.release(prev_cur)
             if not cur_deps and eng.dat_eq(base_st, cur_st):
-                if cur_st is not base_st:
-                    eng.release(cur_st)
                 return None  # no-op (workcache.rs:208-211)
 
             # materialize each candidate's complement state (cur − conc)
@@ -193,13 +180,8 @@ class WorkCache:
                     complements[conc] = tmptt
 
             # Phase 1: resolve the free verdicts (revert / equal-arg need
-            # no replay) and collect the candidates that need the real
-            # commutation test. The test is a pure function of
-            # (ev, conc_base, conc_ev, cur_st) — no cross-candidate state
-            # — so an engine exposing `commute_batch` (the Spark engines:
-            # two tagged aggregate jobs for ALL candidates instead of two
-            # eager fingerprint jobs EACH) computes every verdict at once;
-            # other engines run the reference's sequential replay.
+            # no replay) and hand the candidates that need the real
+            # commutation test to the engine's commute_batch in one call.
             verdicts: dict[bytes, bool] = {}
             pending: list[tuple[bytes, Any, Event]] = []
             for conc in sorted(complements):
@@ -212,25 +194,7 @@ class WorkCache:
                     verdicts[conc] = False
                 else:
                     pending.append((conc, conc_base, conc_ev))
-            batch = getattr(eng, "commute_batch", None)
-            if batch is not None and len(pending) > 1:
-                verdicts.update(batch(ev, pending, cur_st))
-            else:
-                for conc, conc_base, conc_ev in pending:
-                    ev_first = run_t(ev.cmd, ev.arg, conc_base)
-                    ev_first_then = run_t(
-                        conc_ev.cmd, conc_ev.arg, ev_first
-                    )
-                    verdicts[conc] = (
-                        not eng.dat_eq(ev_first, ev_first_then)
-                    ) and eng.dat_eq(ev_first_then, cur_st)
-                    # both states are transient (only their equality
-                    # mattered) — release unless the no-op shortcut
-                    # returned a memoized value itself
-                    if ev_first_then is not ev_first and ev_first_then is not conc_base:
-                        eng.release(ev_first_then)
-                    if ev_first is not conc_base:
-                        eng.release(ev_first)
+            verdicts.update(eng.commute_batch(ev, pending, cur_st))
 
             # Phase 2: fold the verdicts in the reference's candidate
             # order (Deny marks must land exactly as the sequential walk
@@ -293,14 +257,12 @@ class WorkCache:
                 break
             seed_deps = new_seed_deps
 
-        # the inferred event is recorded; cur_st is transient from here.
-        # A later materialize replays the event with run_event_bare over
-        # its actual base state. Engines with a transform memo
+        # the inferred event is recorded; cur_st was transient. A later
+        # materialize replays the event with run_event_bare over its
+        # actual base state. Engines with a transform memo
         # (SparkEngineBase) skip that replay's fingerprint job when this
         # walk already applied ev to a state with the same fingerprint;
         # the replay still runs on the real predecessor value
-        if cur_st is not base_st:
-            eng.release(cur_st)
         final = Event(
             cmd=ev.cmd,
             arg=ev.arg,

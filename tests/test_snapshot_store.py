@@ -20,7 +20,7 @@ from __future__ import annotations
 import pytest
 
 from esvc_spark.core import Event, Graph, WorkCache
-from esvc_spark.core.engines import sear
+from esvc_spark.core.engines import BaseEngine, SearEngine, sear
 from esvc_spark.core.spark_engine import SparkReplaceEngine
 from esvc_spark.core.store import SnapshotStore
 
@@ -43,46 +43,6 @@ class _CountingEngine:
 
     def __getattr__(self, name):
         return getattr(self._inner, name)
-
-
-class FakeEngine:
-    """No-Spark spill seam: values are picklable ints, presence marker
-    is the .json sidecar (written last, deleted first) — shared by the
-    dict-semantics property and the directed regressions."""
-
-    def save_snapshot(self, dat, path):
-        import os
-        import pickle
-
-        with open(path + ".pkl", "wb") as f:
-            pickle.dump(dat, f)
-        with open(path + ".json", "w") as f:
-            f.write("{}")
-
-    def load_snapshot(self, path):
-        import pickle
-
-        with open(path + ".pkl", "rb") as f:
-            return pickle.load(f)
-
-    @staticmethod
-    def snapshot_exists(path):
-        import os
-
-        return os.path.exists(path + ".json")
-
-    @staticmethod
-    def drop_snapshot(path):
-        import os
-
-        for suffix in (".json", ".pkl"):
-            try:
-                os.remove(path + suffix)
-            except OSError:
-                pass
-
-    def release(self, dat):
-        pass
 
 
 _TEXTS = ["Hi, what's up??", "nothing up here", "Hi again", "what now"]
@@ -186,11 +146,53 @@ def test_spill_dir_not_shared_across_different_base_data(spark, tmp_path):
     assert got == sorted(want)
 
 
+def test_in_memory_spill_dir_not_shared_across_different_base_data(tmp_path):
+    """(d) for an in-memory engine: the namespace is the base value's
+    dat_key, so a second session over different init_data sharing the
+    spill dir replays instead of loading the first session's state, and
+    clear_spill deletes only its own namespace's files."""
+    spill = str(tmp_path / "spill")
+    eng = SearEngine()
+    g = Graph()
+    store1 = SnapshotStore(eng, spill, persist_budget=1)
+    w1 = WorkCache(eng, "aaa", sts=store1)
+    h = w1.shelve_event(g, set(), Event(cmd=0, arg=sear("a", "b")))
+    assert w1.materialize(g, {h}) == "bbb"
+    assert store1.flush() == 1
+
+    store2 = SnapshotStore(eng, spill, persist_budget=1)
+    w2 = WorkCache(eng, "xa", sts=store2)
+    assert w2.materialize(g, {h}) == "xb"
+    assert store2.loads == 0
+    assert store2.clear_spill() == 0
+    assert frozenset({h}) in store1  # the first session's spill survives
+    assert store1.clear_spill() == 1
+
+
+def test_repl_spill_dir_not_shared_across_different_init_lines(tmp_path):
+    """(d) through the REPL's in-memory ExEngine: the same inserted line
+    over different init_lines materializes each session's own lines."""
+    import io
+
+    from esvc_spark.cli import Repl
+
+    out = io.StringIO()
+    a = Repl(("hello",), spill_dir=str(tmp_path), persist_budget=1)
+    a.handle_line("0,i", out, lambda: ["first"])
+    assert a.materialize() == ("first", "hello")
+    assert a.wc.sts.flush() >= 1
+    b = Repl(("bye",), spill_dir=str(tmp_path), persist_budget=1)
+    b.handle_line("0,i", out, lambda: ["first"])
+    assert b.heads == a.heads  # the same event, over different lines
+    assert b.materialize() == ("first", "bye")
+
+
 def test_store_matches_dict_semantics_property():
     """(e) Hypothesis: under any interleaving of set / get / contains /
     pop against random state keys, SnapshotStore observationally equals
-    a plain dict — whatever the LRU budget spilled in between. Runs on a
-    fake engine (no Spark): values are ints, 'spill' is a pickle file."""
+    a plain dict — whatever the LRU budget spilled in between. Runs on
+    BaseEngine's spill seam (no Spark): values are ints, 'spill' is a
+    pickle file."""
     import os
     import pickle
     import tempfile
@@ -214,7 +216,7 @@ def test_store_matches_dict_semantics_property():
     @given(ops=ops, budget=st.integers(1, 3))
     def run(ops, budget):
         with tempfile.TemporaryDirectory() as d:
-            store = SnapshotStore(FakeEngine(), d, persist_budget=budget)
+            store = SnapshotStore(BaseEngine(), d, persist_budget=budget)
             model: dict = {}
             for op, ki, val in ops:
                 k = keys[ki]
@@ -245,7 +247,7 @@ def test_pop_of_spilled_state_forgets_it():
 
 
     with tempfile.TemporaryDirectory() as d:
-        store = SnapshotStore(FakeEngine(), d, persist_budget=1)
+        store = SnapshotStore(BaseEngine(), d, persist_budget=1)
         k0, k1, k2 = (frozenset([bytes([i])]) for i in range(3))
         store[k0], store[k1], store[k2] = 1, 2, 3  # k0 evicted + spilled
         assert store.spills >= 1 and k0 in store
@@ -258,7 +260,7 @@ def test_overwrite_invalidates_stale_spill(tmp_path):
     (code-review r8 #1): set k -> evict (spill) -> set k with a NEW
     value; the next eviction must not 'skip save' into the stale file
     and resurrect the old value."""
-    store = SnapshotStore(FakeEngine(), str(tmp_path), persist_budget=1)
+    store = SnapshotStore(BaseEngine(), str(tmp_path), persist_budget=1)
     k0, k1 = frozenset([b"\x00"]), frozenset([b"\x01"])
     store[k0] = 1
     store[k1] = 2  # k0 evicted, spilled as 1

@@ -815,10 +815,12 @@ def test_commute_batch_matches_sequential_shelve(spark, monkeypatch):
     """VERDICT r8 #6 differential: shelving through the batched
     commutation path (two tagged aggregate jobs per round) must infer
     EXACTLY the event hashes and dep maps the sequential per-candidate
-    replay infers — on a script engineered to hit multi-candidate
-    rounds, independence, dependence, and soft-dep cases on both Spark
-    engines."""
+    replay (BaseEngine.commute_batch) infers — on a script engineered to
+    hit multi-candidate rounds, independence, dependence, and soft-dep
+    cases on both Spark engines — and issue no more Spark jobs on each
+    script."""
     from esvc_spark.core import spark_engine as se
+    from esvc_spark.core.engines import BaseEngine
 
     def run_chain(eng, dat0, events):
         g = Graph()
@@ -828,29 +830,57 @@ def test_commute_batch_matches_sequential_shelve(spark, monkeypatch):
             h = w.shelve_event(g, set(xs), Event(cmd=0, arg=arg))
             if h is not None:
                 xs.add(h)
-        return g, w, xs
+        return xs, {h: ev.deps for h, ev in g.events.items()}
 
-    results = {}
+    scripts = [
+        (SparkReplaceEngine, lambda e: e.from_texts(_SEAR_TEXTS), _SEARS),
+        (SparkExEngine, lambda e: e.init_data(_EX_LINES), _EX_SCRIPT),
+        (SparkReplaceEngine, lambda e: e.from_texts(_SOFT_TEXTS),
+         _SOFT_SEARS),
+    ]
+    results, jobs = {}, {}
     for mode in ("batched", "sequential"):
         if mode == "sequential":
-            monkeypatch.setattr(se.SparkEngineBase, "commute_batch", None)
+            monkeypatch.setattr(
+                se.SparkEngineBase, "commute_batch", BaseEngine.commute_batch
+            )
         else:
             monkeypatch.undo()
-        r_eng = SparkReplaceEngine(spark)
-        g1, _, xs1 = run_chain(r_eng, r_eng.from_texts(_SEAR_TEXTS), _SEARS)
-        e_eng = SparkExEngine(spark)
-        g2, _, xs2 = run_chain(e_eng, e_eng.init_data(_EX_LINES), _EX_SCRIPT)
-        s_eng = SparkReplaceEngine(spark)
-        g3, _, xs3 = run_chain(
-            s_eng, s_eng.from_texts(_SOFT_TEXTS), _SOFT_SEARS
-        )
-        results[mode] = (
-            xs1, {h: ev.deps for h, ev in g1.events.items()},
-            xs2, {h: ev.deps for h, ev in g2.events.items()},
-            xs3, {h: ev.deps for h, ev in g3.events.items()},
-        )
+        for i, (cls, init, events) in enumerate(scripts):
+            eng = cls(spark)
+            dat0 = init(eng)
+            results[mode, i], jobs[mode, i] = _jobs_of(
+                spark, run_chain, eng, dat0, events
+            )
         spark.catalog.clearCache()
-    assert results["batched"] == results["sequential"]
+    for i in range(len(scripts)):
+        assert results["batched", i] == results["sequential", i], i
+        assert jobs["batched", i] <= jobs["sequential", i], (i, jobs)
+
+
+def test_commute_batch_single_candidate_costs_no_more_jobs(spark):
+    """One candidate through the batched path costs no more jobs than
+    the sequential replay, including a command that is a no-op on the
+    candidate's base (its plan IS the base DataFrame: the fingerprint is
+    the base's, no job)."""
+    from esvc_spark.core.engines import BaseEngine
+
+    noop = make_command({"type": "rng", "start": 50, "end": 60}, "delete")
+    edit = make_command({"type": "last"}, "append", ["tail"])
+    for ev_arg, conc_arg in ((noop, edit), (edit, noop), (edit, edit)):
+        ev, conc_ev = Event(cmd=0, arg=ev_arg), Event(cmd=0, arg=conc_arg)
+        got, jobs = {}, {}
+        for mode, batch in (("batched", SparkExEngine.commute_batch),
+                            ("sequential", BaseEngine.commute_batch)):
+            eng = SparkExEngine(spark)
+            base = eng.init_data(_EX_LINES[:3])
+            cur = eng.run_event_bare(0, conc_arg, base)
+            got[mode], jobs[mode] = _jobs_of(
+                spark, batch, eng, ev, [("c", base, conc_ev)], cur
+            )
+        assert got["batched"] == got["sequential"], (ev_arg, conc_arg)
+        assert jobs["batched"] <= jobs["sequential"], (ev_arg, conc_arg, jobs)
+    spark.catalog.clearCache()
 
 
 def _jobs_of(spark, fn, *args):
