@@ -21,10 +21,10 @@ micro-batches (at-least-once sources) cannot duplicate events.
 from __future__ import annotations
 
 import os
+import shutil
 from typing import Callable
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # The on-file physical timestamp type has varied across driver testdata
@@ -124,6 +124,33 @@ def run_to_memory(
     return df.sparkSession.table(name)
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether `path` exists, asked through Hadoop's FileSystem rather
+    than the driver's local filesystem (on HDFS/S3/DBFS os.path.exists
+    is always false). No Spark job, and no failed read for the listener
+    bus to log as an error."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
+
+
+def append_new_events(out: DataFrame, target: str) -> None:
+    """The one idempotent event-log append (Graph.ensure_event's
+    get-or-insert, crates/esvc-core/src/graph.rs:132-155): rows of `out`
+    whose event_id the parquet table at `target` already holds are
+    dropped by a left-anti join, the rest are appended. `out` must be
+    distinct on event_id. The table was written from frames of `out`'s
+    schema, so it is read with that schema instead of inferring one (an
+    inference is a Spark job). The anti-join's scan pins its file list
+    when the read resolves, so appending into the same directory is
+    self-consistent."""
+    spark = out.sparkSession
+    if _exists(spark, target):
+        existing = spark.read.schema(out.schema).parquet(target)
+        out = out.join(existing.select("event_id"), "event_id", "left_anti")
+    out.write.mode("append").option("compression", "zstd").parquet(target)
+
+
 def ingest_into_event_log(
     stream: DataFrame,
     log_dir: str,
@@ -140,21 +167,11 @@ def ingest_into_event_log(
     the events schema and treats event_id as the content address.
     """
 
+    target = os.path.join(log_dir, "events_stream")
+
     def _append(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         out = to_event(batch) if to_event is not None else batch
-        out = out.dropDuplicates(["event_id"])
-        target = os.path.join(log_dir, "events_stream")
-        # Probe the target THROUGH Spark, not the driver's local
-        # filesystem: on HDFS/S3/DBFS os.path.exists is always false and
-        # the anti-join would silently be skipped.
-        try:
-            existing = spark.read.parquet(target).select("event_id")
-        except AnalysisException:
-            existing = None
-        if existing is not None:
-            out = out.join(existing, "event_id", "left_anti")
-        out.write.mode("append").option("compression", "zstd").parquet(target)
+        append_new_events(out.dropDuplicates(["event_id"]), target)
 
     q = (
         stream.writeStream.foreachBatch(_append)
@@ -184,18 +201,38 @@ def ingest_into_event_log(
 #     divergence, same family as SURVEY §2's versioned-encoding note.
 #   * The append is MERGE-shaped and idempotent: dropDuplicates within
 #     the batch + left-anti join against the log on the content address
-#     (ensure_event's get-or-insert, ref graph.rs:132-155) — replayed
-#     micro-batches cannot duplicate events (proven by running the whole
-#     pipeline twice in q_stream_event_log).
-#   * append_head/compaction per batch: the head set gets every new
-#     event id appended; when it exceeds `head_threshold` it is
-#     re-minimized against the log (an event is superseded once its
-#     chain successor EXISTS in the log — presence-tested, exactly the
+#     (append_new_events, ensure_event's get-or-insert, ref
+#     graph.rs:132-155) — replayed micro-batches cannot duplicate events
+#     (proven by running the whole pipeline twice in q_stream_event_log).
+#   * append_head/compaction per batch: the head set gets every id the
+#     batch carries; when it exceeds `head_threshold` it is re-minimized
+#     against the log (an event is superseded once its chain successor
+#     EXISTS in the log — presence-tested, exactly the
 #     pending-supersession rule streaming_head_tracker uses, so sparse
-#     ids and out-of-order arrival are handled). The head table is
-#     bounded (≤ threshold + batch ids), swapped atomically per batch;
-#     a production deployment writes it through a transactional table
-#     format instead of a directory swap.
+#     ids and out-of-order arrival are handled).
+#   * The compaction decision costs no job in the common case. Both
+#     sizes it needs are known without a count: n_new, the batch's
+#     distinct ids, is observed on the append write (DataFrame.observe),
+#     and n_old, the heads table's rows, was observed on the previous
+#     heads write. Since max(n_old, n_new) <= |old ∪ new| <= n_old +
+#     n_new, the bounds decide unless the threshold falls between them;
+#     only then, or for the first batch after a restart (n_old unknown),
+#     is there a count job.
+#   * Every table the batch reads was written by this pipeline, so it
+#     is read with a pinned schema: no schema-inference job.
+#   * The heads table is replaced by a roll-forward swap, not an atomic
+#     one: the new head set is written to `heads_stage/`, then `heads/`
+#     is deleted and the stage renamed into place. A crash between
+#     those steps leaves the batch uncommitted, so Spark replays it, and
+#     the next batch first finishes the swap: a stage holding _SUCCESS
+#     (Spark's committer writes it when the write job commits) is the
+#     newest complete head set; a stage without it is deleted.
+#     A production deployment writes the heads through a transactional
+#     table format instead.
+#   * Reader contract: `heads/` is one table, bounded by threshold +
+#     batch ids but not minimal (compaction is threshold-triggered, and
+#     a redelivered batch re-adds ids), so every reader folds it through
+#     `_superseded` against the log.
 
 
 def _graph_event_rows(batch: DataFrame) -> DataFrame:
@@ -269,6 +306,23 @@ def _superseded(heads: DataFrame, log: DataFrame) -> DataFrame:
     return heads.join(succ, "head_src", "left_anti")
 
 
+def _swap_in(stage: str, heads_dir: str) -> None:
+    shutil.rmtree(heads_dir, ignore_errors=True)
+    os.replace(stage, heads_dir)
+
+
+def _recover_heads_swap(stage: str, heads_dir: str) -> None:
+    """Finish a heads swap a crash interrupted (see the swap note
+    above): a stage holding the committer's _SUCCESS marker replaces
+    `heads_dir`; a stage without it is a partial write and is deleted."""
+    if not os.path.isdir(stage):
+        return
+    if os.path.exists(os.path.join(stage, "_SUCCESS")):
+        _swap_in(stage, heads_dir)
+    else:
+        shutil.rmtree(stage)
+
+
 def event_log_stream_pipeline(
     stream: DataFrame,
     work_dir: str,
@@ -279,29 +333,27 @@ def event_log_stream_pipeline(
     content-addressed idempotent append into `work_dir`/events_log +
     per-batch append_head and >threshold compaction into
     `work_dir`/heads."""
-    import shutil
-
     log_dir = os.path.join(work_dir, "events_log")
     heads_dir = os.path.join(work_dir, "heads")
+    stage = heads_dir + "_stage"
+    # rows of heads/ as this query last wrote it; None until then, and
+    # after a restart, when it costs one count
+    n_old: int | None = None
 
     def _batch(batch: DataFrame, batch_id: int) -> None:
+        nonlocal n_old
         spark = batch.sparkSession
+        _recover_heads_swap(stage, heads_dir)
+
+        # ev is evaluated once, by the append: the head update below
+        # reads `batch` and the on-disk log, never ev. n_new counts the
+        # batch's distinct ids before the anti-join.
         ev = _graph_event_rows(batch)
-        try:
-            existing = spark.read.parquet(log_dir)
-        except AnalysisException:
-            existing = None
-        if existing is not None:
-            ev = ev.join(
-                existing.select("event_id"), "event_id", "left_anti"
-            )
-        # ONE job: the append write is ev's only consumer (the head
-        # update below reads `batch` and the on-disk log, never ev), so
-        # the former DISK_ONLY localCheckpoint wrote every batch to disk
-        # twice for nothing (round 12). The anti-join's `existing` scan
-        # pinned its file list when the read resolved, so appending into
-        # the same directory is self-consistent.
-        ev.write.mode("append").option("compression", "zstd").parquet(log_dir)
+        seen = Observation()
+        append_new_events(
+            ev.observe(seen, F.count(F.lit(1)).alias("n")), log_dir
+        )
+        n_new = seen.get["n"]
 
         # append_head ≙ main.rs:217-231: every id the BATCH carries joins
         # the head set — from the batch's deduped rows, NOT the
@@ -311,29 +363,35 @@ def event_log_stream_pipeline(
         # minimize can only REMOVE heads). Re-adding an already-compacted
         # id is harmless — supersession is monotone, so the next
         # compaction (or the reader's final fold) drops it again.
-        new_ids = batch.select(
+        heads = batch.select(
             F.col("event_id").cast("bigint").alias("head_src")
-        ).distinct()
-        try:
-            heads = spark.read.parquet(heads_dir).union(new_ids).distinct()
-        except AnalysisException:
-            heads = new_ids
-        # persist across the threshold count and the stage write: the
-        # union+distinct otherwise re-evaluates for the write (and as
-        # the compaction join's left side) — round 12; batch-scoped,
-        # released in finally (cache-hygiene rule)
-        pinned = heads.persist()
-        try:
-            heads = pinned
-            # compact_heads ≙ main.rs:232-249: only when past the threshold
-            if heads.count() > head_threshold:
-                heads = _superseded(heads, spark.read.parquet(log_dir))
-            stage = heads_dir + "_stage"
-            heads.write.mode("overwrite").parquet(stage)
-        finally:
-            pinned.unpersist()
-        shutil.rmtree(heads_dir, ignore_errors=True)
-        os.replace(stage, heads_dir)
+        )
+        if _exists(spark, heads_dir):
+            old = spark.read.schema("head_src BIGINT").parquet(heads_dir)
+            if n_old is None:
+                n_old = old.count()
+            heads = old.union(heads)
+        else:
+            n_old = 0
+        heads = heads.distinct()
+
+        # compact_heads ≙ main.rs:232-249: only when past the threshold
+        if max(n_old, n_new) > head_threshold:
+            compact = True
+        elif n_old + n_new <= head_threshold:
+            compact = False
+        else:
+            compact = heads.count() > head_threshold
+        if compact:
+            heads = _superseded(
+                heads, spark.read.schema(ev.schema).parquet(log_dir)
+            )
+        wrote = Observation()
+        heads.observe(wrote, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(stage)
+        n_old = wrote.get["n"]
+        _swap_in(stage, heads_dir)
 
     q = (
         stream.writeStream.foreachBatch(_batch)

@@ -340,3 +340,147 @@ def test_event_log_pipeline_recover_from_checkpoint(
             spark.conf.unset("spark.sql.shuffle.partitions")
         else:
             spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _write_slices(src, t, bounds, first=0):
+    """Write row slices of `t` as parquet files under `src`, one per
+    (lo, hi) bound, with increasing mtimes: the file source takes files
+    oldest first, so with maxFilesPerTrigger=1 each file is one batch,
+    in order."""
+    os.makedirs(src, exist_ok=True)
+    for i, (lo, hi) in enumerate(bounds, start=first):
+        path = os.path.join(src, f"part-{i:03d}.parquet")
+        pq.write_table(t.slice(lo, hi - lo), path)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def _dep_src(i):
+    """q_stream_heads' dependency rule: the 16-chain predecessor, except
+    every third generation starts a fresh chain."""
+    return i - 16 if i >= 16 and (i // 16) % 3 != 0 else None
+
+
+def test_event_log_heads_swap_survives_crash(spark, tmp_path, monkeypatch):
+    """A crash between deleting heads/ and renaming heads_stage/ into
+    place (injected: os.replace raises once, on the second batch's swap)
+    leaves the batch uncommitted. Restarted from the same checkpoint, the
+    pipeline rolls the complete stage forward before replaying the batch,
+    so no earlier head is lost: the folded heads equal the closed form."""
+    from pyspark.errors import StreamingQueryException
+
+    from esvc_spark.streaming.pipelines import (
+        _superseded,
+        event_log_stream_pipeline,
+    )
+
+    src, ckpt, work = (str(tmp_path / d) for d in ("src", "ckpt", "work"))
+    t = pq.read_table(EVENTS)
+    half = t.num_rows // 2
+    _write_slices(src, t, [(0, half), (half, t.num_rows)])
+
+    real_replace = os.replace
+    swaps = []
+
+    def crash_on_second_swap(src_path, dst_path, *a, **kw):
+        if str(src_path).endswith("heads_stage"):
+            swaps.append(src_path)
+            if len(swaps) == 2:
+                raise OSError("injected crash before the heads stage rename")
+        return real_replace(src_path, dst_path, *a, **kw)
+
+    def run():
+        event_log_stream_pipeline(
+            read_events_stream(spark, src, max_files_per_trigger=1),
+            work_dir=work, checkpoint_dir=ckpt,
+        )
+
+    monkeypatch.setattr(os, "replace", crash_on_second_swap)
+    with pytest.raises(StreamingQueryException):
+        run()
+    # the crash window: the old head set is gone, the new one is staged
+    assert not os.path.exists(os.path.join(work, "heads"))
+    run()
+    monkeypatch.undo()
+
+    log = spark.read.parquet(os.path.join(work, "events_log"))
+    want_ids = set(t.column("event_id").to_pylist())
+    assert log.count() == len(want_ids)
+    heads = _superseded(spark.read.parquet(os.path.join(work, "heads")), log)
+    got_heads = {r["head_src"] for r in heads.collect()}
+    want_heads = {
+        i for i in want_ids
+        if (i + 16) not in want_ids or ((i + 16) // 16) % 3 == 0
+    }
+    assert got_heads == want_heads
+
+
+@pytest.mark.parametrize(
+    "threshold, branches",
+    [
+        # below the batch size: the bounds alone say compact
+        (50, {"bound-compact"}),
+        # between max(n_old, n_new) and n_old + n_new: an exact count
+        # decides, both ways (batch 1 overlaps batch 0 by 100 ids)
+        (550, {"count-keep", "count-compact"}),
+        # above n_old + n_new: the bounds alone say keep
+        (10_000, {"bound-keep"}),
+    ],
+)
+def test_event_log_compaction_decision_matches_union_rule(
+    spark, tmp_path, monkeypatch, threshold, branches
+):
+    """After every batch the heads table equals a pure-Python model of
+    the union rule: the head set gains the batch's ids, and is minimized
+    against the log only when the union holds more than `threshold`
+    ids. The thresholds cover every way the pipeline can reach that
+    decision, and the run restarts from its checkpoint before the last
+    batch, so the heads' size is unknown to the restarted query."""
+    from esvc_spark.streaming.pipelines import event_log_stream_pipeline
+
+    src, ckpt, work = (str(tmp_path / d) for d in ("src", "ckpt", "work"))
+    t = pq.read_table(EVENTS).sort_by("event_id")
+    bounds = [(0, 300), (200, 500), (500, 800), (700, 1000)]
+    ids = t.column("event_id").to_pylist()
+
+    # the model, and which branch each batch's decision takes
+    want, seen = [], set()
+    heads, log = set(), set()
+    for lo, hi in bounds:
+        batch = set(ids[lo:hi])
+        log |= batch
+        n_old, n_new = len(heads), len(batch)
+        heads |= batch
+        compact = len(heads) > threshold
+        if max(n_old, n_new) > threshold or n_old + n_new <= threshold:
+            seen.add("bound-compact" if compact else "bound-keep")
+        else:
+            seen.add("count-compact" if compact else "count-keep")
+        if compact:
+            heads -= {_dep_src(i) for i in log}
+        want.append(heads.copy())
+    assert branches <= seen
+
+    real_replace = os.replace
+    got = []
+
+    def snapshot_after_swap(src_path, dst_path, *a, **kw):
+        real_replace(src_path, dst_path, *a, **kw)
+        if str(src_path).endswith("heads_stage"):
+            got.append(set(pq.read_table(dst_path).column("head_src").to_pylist()))
+
+    def run():
+        event_log_stream_pipeline(
+            read_events_stream(spark, src, max_files_per_trigger=1),
+            work_dir=work, checkpoint_dir=ckpt, head_threshold=threshold,
+        )
+
+    monkeypatch.setattr(os, "replace", snapshot_after_swap)
+    _write_slices(src, t, bounds[:3])
+    run()
+    _write_slices(src, t, bounds[3:], first=3)
+    run()
+    monkeypatch.undo()
+
+    assert len(got) == len(want)
+    for i, (g, w) in enumerate(zip(got, want)):
+        assert g == w, f"batch {i}: {len(g)} heads, want {len(w)}"

@@ -4,12 +4,15 @@ must be idempotent under micro-batch replay."""
 
 from __future__ import annotations
 
+import contextlib
 import os
+import re
 import shutil
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from esvc_spark.catalog import table as T
 from esvc_spark.streaming import (
@@ -235,3 +238,134 @@ def test_stream_fed_event_log_replays(spark, tmp_path):
         g2, {h: IncludeSpec.INCLUDE_ALL for h in heads}
     )
     assert got == want  # fingerprint equality over the whole dataset
+
+
+# ---------------------------------------------------------- job budgets
+class _RunIds(StreamingQueryListener):
+    """Records the runId of every streaming query started while
+    registered; a query's Spark jobs carry its runId as their job group."""
+
+    def __init__(self):
+        self.run_ids: list[str] = []
+
+    def onQueryStarted(self, event):
+        self.run_ids.append(str(event.runId))
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+@contextlib.contextmanager
+def _query_runs(spark):
+    listener = _RunIds()
+    spark.streams.addListener(listener)
+    try:
+        yield listener.run_ids
+    finally:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        spark.streams.removeListener(listener)
+
+
+def _jobs_per_batch(spark, run_id: str) -> dict[int, int]:
+    """Spark jobs of one streaming run, per micro-batch. The run's jobs
+    are its job group; each job's description names its batch."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    per: dict[int, int] = {}
+    for jid in sc.statusTracker().getJobIdsForGroup(run_id):
+        desc = store.job(jid).description()
+        batch = int(re.search(r"batch = (\d+)", desc.get()).group(1))
+        per[batch] = per.get(batch, 0) + 1
+    return per
+
+
+@contextlib.contextmanager
+def _driver_log(spark):
+    """Capture the driver's log4j output (every logger that reaches the
+    root) into a list of lines, available once the block exits."""
+    jvm = spark._jvm
+    log4j = jvm.org.apache.logging.log4j
+    ctx = log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    writer = jvm.java.io.StringWriter()
+    layout = log4j.core.layout.PatternLayout.newBuilder().withPattern(
+        "%p %c{1}: %m%n"
+    ).build()
+    name = f"capture-{uuid.uuid4().hex}"
+    appender = log4j.core.appender.WriterAppender.createAppender(
+        layout, None, writer, name, False, True
+    )
+    appender.start()
+    root.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    lines: list[str] = []
+    try:
+        yield lines
+    finally:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        root.removeAppender(name)
+        ctx.updateLoggers()
+        appender.stop()
+        lines += writer.toString().splitlines()
+
+
+def test_event_log_batch_job_budget(spark, tmp_path):
+    """A steady-state micro-batch of event_log_stream_pipeline issues
+    only the jobs that do work: the hashed anti-join append (3) and the
+    heads-stage write (3). No job infers a schema the pipeline wrote
+    itself, and none counts the head set to decide compaction. Reading
+    a table that does not exist yet never fails an analysis, so the
+    listener bus logs no error."""
+    import pyarrow.parquet as pq
+
+    from esvc_spark.streaming.pipelines import event_log_stream_pipeline
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    t = pq.read_table(EVENTS)
+    third = t.num_rows // 3
+    for i in range(3):
+        path = os.path.join(src, f"part-{i:03d}.parquet")
+        pq.write_table(t.slice(i * third, third), path)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    with _driver_log(spark) as log, _query_runs(spark) as runs:
+        event_log_stream_pipeline(
+            read_events_stream(spark, src, max_files_per_trigger=1),
+            str(tmp_path / "work"), str(tmp_path / "ckpt"),
+        )
+    jobs = _jobs_per_batch(spark, runs[-1])
+    assert sorted(jobs) == [0, 1, 2]
+    assert max(jobs[1], jobs[2]) <= 6, jobs
+    assert not [
+        line for line in log
+        if line.startswith("ERROR") and "ExecutionListenerBus" in line
+    ]
+
+
+def test_ingest_replay_infers_no_schema(spark, tmp_path):
+    """Once the event-log target exists, a batch of ingest_into_event_log
+    costs exactly one job more than the first batch did: the scan of the
+    existing log for the anti-join. No job infers the target's schema."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    shutil.copy(EVENTS, os.path.join(src, "part-000.parquet"))
+    log_dir = str(tmp_path / "log")
+
+    jobs = []
+    for attempt in ("first", "replay"):
+        with _query_runs(spark) as runs:
+            ingest_into_event_log(
+                read_events_stream(spark, src), log_dir,
+                str(tmp_path / f"ckpt_{attempt}"),
+            )
+        jobs.append(_jobs_per_batch(spark, runs[-1]))
+    first, replay = jobs
+    assert replay[0] == first[0] + 1, jobs
