@@ -16,18 +16,34 @@ ExEngine (default) or the Spark-backed one; the REPL logic is identical
 
 from __future__ import annotations
 
+import subprocess
 import sys
 from typing import Callable, TextIO
 
+from .core import storage
+from .core.bincode_io import BincodeError, export_reference_file
 from .core.dot import to_dot
-from .core.engines import ExEngine, resolve_addr
+from .core.engines import CommandNotFound, ExEngine, resolve_addr
 from .core.exparse import AddressParseError, make_command, parse_command
-from .core.graph import Event, Graph
+from .core.graph import Event, Graph, GraphError
 from .core.hashing import format_hash
 from .core.store import append_head
-from .core.workcache import WorkCache
+from .core.workcache import WorkCache, WorkCacheError
 
 _BODY_CMDS = {"append", "change", "insert"}
+
+# what reading or writing a graph (`w`, `m<`, the argv path at startup)
+# reports as a per-line error instead of letting it end the session
+_GRAPH_IO_ERRORS = (
+    BincodeError,
+    GraphError,
+    CommandNotFound,
+    WorkCacheError,
+    RuntimeError,
+    OSError,
+    KeyError,
+    subprocess.CalledProcessError,
+)
 
 
 class Repl:
@@ -116,9 +132,7 @@ class Repl:
         native id scheme before the standard import/merge. Neither form
         needs a Spark session; `spark` is passed through to
         store.load_graph, which ignores it."""
-        import os
-
-        if os.path.isfile(path):
+        if storage.exists(path) and not storage.isdir(path):
             from .core.bincode_io import import_reference_file
 
             import_reference_file(self.wc, self.graph, path)
@@ -169,40 +183,25 @@ class Repl:
             # (bincode+zstd, exactly what the Rust exvc's `w` writes —
             # main.rs:44-53). Anything else is the parquet directory
             # store. Neither needs a Spark session.
-            import os as _os
-
-            if (line == "w" and not _os.path.isdir(target)) or target.endswith(
-                (".zst", ".exvc")
-            ):
-                import subprocess
-
-                from .core.bincode_io import BincodeError, export_reference_file
-
-                # user errors (non-editor args from a merged-in registry
-                # session, missing zstd binary, unwritable path, a failing
-                # zstd subprocess) must report like every other bad REPL
-                # input — an escaped exception would kill the session and
-                # its unsaved events
-                try:
-                    export_reference_file(self.graph, target, state="")
-                except (
-                    BincodeError,
-                    RuntimeError,
-                    OSError,
-                    subprocess.CalledProcessError,
-                ) as e:
-                    out.write(f"?w: {e}\n")
-                return True
             from .core.store import save_graph
 
+            # user errors (non-editor args from a merged-in registry
+            # session, missing zstd binary, unwritable path, a failing
+            # zstd subprocess, a graph the store cannot hold) must report
+            # like every other bad REPL input — an escaped exception
+            # would kill the session and its unsaved events. A failed
+            # save_graph leaves the previous save intact.
             try:
-                save_graph(spark, self.graph, target)
-            except OSError as e:
+                if target.endswith((".zst", ".exvc")) or (
+                    line == "w" and not storage.isdir(target)
+                ):
+                    export_reference_file(self.graph, target, state="")
+                else:
+                    save_graph(spark, self.graph, target)
+            except _GRAPH_IO_ERRORS as e:
                 out.write(f"?w: {e}\n")
             return True
         if line == "m<" or line.startswith("m< "):
-            import os
-
             if line == "m<":
                 # bare `m<` reads the import path from the NEXT input
                 # line, the reference's interactive form (main.rs:54-58)
@@ -216,30 +215,20 @@ class Repl:
             # store needs a Spark session. Never fall through to the
             # editor parser — a typo'd path would masquerade as a syntax
             # error.
-            if os.path.exists(target):
-                import subprocess
-
-                from .core.bincode_io import BincodeError
-                from .core.graph import GraphError
-
-                # same containment contract as `w`: a corrupt/truncated
-                # file, a missing zstd binary, or a graph whose heads
-                # reference unknown events (DependencyNotFound et al.)
-                # reports per-line like the reference REPL (main.rs loop)
-                # instead of killing the session with its unsaved events
-                try:
+            # same containment contract as `w`: a corrupt/truncated file,
+            # a missing zstd binary, a path no filesystem serves, a graph
+            # whose heads reference unknown events (DependencyNotFound et
+            # al.), whose events use a command this engine lacks, or
+            # whose branch cannot be re-shelved onto ours (WorkCacheError)
+            # reports per-line like the reference REPL (main.rs loop)
+            # instead of killing the session with its unsaved events
+            try:
+                if storage.exists(target):
                     self.merge_from(target, spark)
-                except (
-                    BincodeError,
-                    GraphError,
-                    RuntimeError,
-                    OSError,
-                    KeyError,
-                    subprocess.CalledProcessError,
-                ) as e:
-                    out.write(f"?m<: {e}\n")
-            else:
-                out.write(f"?m<: no such file {target!r}\n")
+                else:
+                    out.write(f"?m<: no such file {target!r}\n")
+            except _GRAPH_IO_ERRORS as e:
+                out.write(f"?m<: {e}\n")
             return True
         if not line.strip():
             return True
@@ -287,26 +276,13 @@ def main(
     repl = Repl(path=argv[0] if argv else None)
 
     if argv:
-        import os
-        import subprocess
-
-        from .core.bincode_io import BincodeError
-        from .core.graph import GraphError
-
         path = argv[0]
         try:
-            if not os.path.exists(path):
+            if not storage.exists(path):
                 stdout.write(f"?load: no such file {path!r}\n")
             else:
                 repl.merge_from(path, spark)
-        except (
-            BincodeError,
-            GraphError,
-            RuntimeError,
-            OSError,
-            KeyError,
-            subprocess.CalledProcessError,
-        ) as e:
+        except _GRAPH_IO_ERRORS as e:
             stdout.write(f"?load: {e}\n")
 
     def read_body() -> list[str]:

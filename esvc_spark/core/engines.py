@@ -37,6 +37,8 @@ from __future__ import annotations
 import re
 from typing import Any
 
+from . import storage
+
 
 class BaseEngine:
     def run_event_bare(self, cmd: int, arg: Any, dat: Any) -> Any:
@@ -86,22 +88,17 @@ class BaseEngine:
     def save_snapshot(self, dat: Any, path: str) -> None:
         import pickle
 
-        with open(path + ".pkl", "wb") as f:
-            pickle.dump(dat, f)
-        with open(path + ".json", "w") as f:
-            f.write("{}")
+        storage.write_bytes(path + ".pkl", pickle.dumps(dat))
+        storage.write_bytes(path + ".json", b"{}")
 
     def load_snapshot(self, path: str) -> Any:
         import pickle
 
-        with open(path + ".pkl", "rb") as f:
-            return pickle.load(f)
+        return pickle.loads(storage.read_bytes(path + ".pkl"))
 
     @staticmethod
     def snapshot_exists(path: str) -> bool:
-        import os
-
-        return os.path.exists(path + ".json")
+        return storage.exists(path + ".json")
 
     @staticmethod
     def pin_snapshot(dat: Any) -> None:
@@ -110,13 +107,8 @@ class BaseEngine:
 
     @staticmethod
     def drop_snapshot(path: str) -> None:
-        import os
-
         for suffix in (".json", ".pkl"):
-            try:
-                os.remove(path + suffix)
-            except OSError:
-                pass
+            storage.delete(path + suffix)
 
 
 class CommandNotFound(Exception):

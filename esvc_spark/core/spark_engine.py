@@ -44,6 +44,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import storage
 from .engines import BaseEngine, CommandNotFound
 from .graph import canonical_json_encode
 
@@ -640,8 +641,10 @@ class SparkEngineBase(BaseEngine):
         dat.df.write.mode("overwrite").option("compression", "zstd").parquet(
             path + ".parquet"
         )
-        with open(path + ".json", "w") as f:
-            json.dump({"fingerprint": list(dat.fingerprint)}, f)
+        storage.write_bytes(
+            path + ".json",
+            json.dumps({"fingerprint": list(dat.fingerprint)}).encode(),
+        )
 
     def load_snapshot(self, path: str) -> SparkDat:
         """Reload a spilled dataset value. The DataFrame is persisted (the
@@ -649,8 +652,7 @@ class SparkEngineBase(BaseEngine):
         from the sidecar — no recompute job."""
         import json
 
-        with open(path + ".json") as f:
-            fp = tuple(json.load(f)["fingerprint"])
+        fp = tuple(json.loads(storage.read_bytes(path + ".json"))["fingerprint"])
         df = self.spark.read.parquet(path + ".parquet").persist()
         return SparkDat(df=df, fingerprint=fp)
 
@@ -658,28 +660,19 @@ class SparkEngineBase(BaseEngine):
     def snapshot_exists(path: str) -> bool:
         """A spill counts as present only when its sidecar exists AND its
         row count (fingerprint[0]) equals the row total in the parquet
-        footers, read on the driver with pyarrow (no Spark job). A
-        deleted or truncated part file thus makes the state a miss: it is
-        replayed, and the next spill rewrites it, instead of loading
-        wrong rows under the right fingerprint."""
+        footers, read on the driver (no Spark job). A deleted or
+        truncated part file thus makes the state a miss: it is replayed,
+        and the next spill rewrites it, instead of loading wrong rows
+        under the right fingerprint."""
         import json
-        import os
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         try:
-            with open(path + ".json") as f:
-                n = json.load(f)["fingerprint"][0]
-            d = path + ".parquet"
-            rows = sum(
-                pq.ParquetFile(os.path.join(d, name)).metadata.num_rows
-                for name in os.listdir(d)
-                if name.endswith(".parquet") and name[0] not in "._"
-            )
+            n = json.loads(storage.read_bytes(path + ".json"))["fingerprint"][0]
+            return storage.parquet_rows(path + ".parquet") == n
         except (OSError, ValueError, KeyError, pa.ArrowException):
             return False
-        return rows == n
 
     @staticmethod
     def pin_snapshot(dat: SparkDat) -> None:
@@ -693,14 +686,8 @@ class SparkEngineBase(BaseEngine):
     def drop_snapshot(path: str) -> None:
         """Delete a spilled snapshot. The sidecar goes FIRST — it is the
         presence marker, so a partial delete fails safe (absent)."""
-        import os
-        import shutil
-
-        try:
-            os.remove(path + ".json")
-        except OSError:
-            pass
-        shutil.rmtree(path + ".parquet", ignore_errors=True)
+        storage.delete(path + ".json")
+        storage.delete(path + ".parquet")
 
 
 class SparkReplaceEngine(SparkEngineBase):

@@ -15,13 +15,21 @@ A graph is driver-sized metadata, so save_graph and load_graph write and
 read both tables on the driver with pyarrow (zstd parquet, zero Spark
 jobs); Spark reads the same directories unchanged. Spark is used only by
 events_dataframe, which hands the event log to SQL.
+
+Every byte goes through core.storage, so a store path may be a plain
+path, a `file:` URI naming the directory Spark would, or another
+scheme pyarrow serves. save_graph stages each table (part file, then
+`_SUCCESS`) and swaps it in with storage.replace_dir; load_graph and
+save_graph first finish or undo a save a crash interrupted, with the
+nstates stage's marker as the save's commit point (_recover). The
+snapshot spills go through the engine's seam, which uses the same
+module.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import shutil
+import posixpath
 from typing import Any
 
 import pyarrow as pa
@@ -38,7 +46,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import storage
 from .graph import Event, Graph, GraphError, IncludeSpec
+from .hashing import format_hash
 from .workcache import WorkCache
 
 EVENTS_SCHEMA = StructType(
@@ -76,34 +86,54 @@ NSTATES_ARROW = pa.schema(
 
 
 def _event_rows(graph: Graph) -> list[tuple]:
-    """events_log rows in EVENTS_SCHEMA column order, sorted by hash."""
+    """events_log rows in EVENTS_SCHEMA column order, sorted by hash.
+    Raises GraphError naming an event whose cmd the int32 column cannot
+    hold (the reference's cmd is a u32)."""
+    for h, ev in graph.events.items():
+        if not -(2**31) <= ev.cmd < 2**31:
+            raise GraphError(
+                f"event {format_hash(h)}: cmd {ev.cmd} does not fit the "
+                f"store's int32 cmd column"
+            )
     return [
         (h, ev.cmd, json.dumps(ev.arg, sort_keys=True), dict(ev.deps))
         for h, ev in sorted(graph.events.items())
     ]
 
 
-def _write_table(rows: list[tuple], schema: pa.Schema, table_dir: str) -> None:
-    """Replace the parquet table at `table_dir` with one zstd part file.
-    The old table goes first, as with Spark's overwrite; the new part is
-    written under a dot-prefixed name and renamed into place, so readers
-    (pyarrow and Spark both skip `.` and `_` files) never see a partial
-    file."""
-    shutil.rmtree(table_dir, ignore_errors=True)
-    os.makedirs(table_dir)
-    table = pa.Table.from_pylist(
+def _arrow_table(rows: list[tuple], schema: pa.Schema) -> pa.Table:
+    return pa.Table.from_pylist(
         [dict(zip(schema.names, r)) for r in rows], schema=schema
     )
-    tmp = os.path.join(table_dir, ".part-00000.parquet.tmp")
-    pq.write_table(table, tmp, compression="zstd")
-    os.replace(tmp, os.path.join(table_dir, "part-00000.zstd.parquet"))
+
+
+def _tables(path: str) -> list[tuple[str, str]]:
+    """(table dir, its stage) for events_log and nstates, in save order."""
+    return [
+        (posixpath.join(path, t), posixpath.join(path, t + "_stage"))
+        for t in ("events_log", "nstates")
+    ]
+
+
+def _recover(path: str) -> None:
+    """Finish or undo a save_graph a crash interrupted. nstates is
+    staged last, so its complete stage is the save's commit point: with
+    it both stages roll forward, without it both are deleted (rolling
+    events_log forward alone would pair new events with old heads)."""
+    (events, ev_stage), (nstates, ns_stage) = _tables(path)
+    if storage.exists(posixpath.join(ns_stage, storage.SUCCESS)):
+        storage.recover_dir(ev_stage, events)
+        storage.recover_dir(ns_stage, nstates)
+    else:
+        storage.delete(ev_stage)
+        storage.delete(ns_stage)
 
 
 def _read_table(table_dir: str, schema: pa.Schema) -> list[dict]:
     """The rows of the parquet table at `table_dir`, which must have the
     columns and types of `schema` (field names inside map and list types
     may differ: Spark's writer names them differently)."""
-    table = pq.read_table(table_dir, columns=schema.names)
+    table = storage.read_parquet(table_dir, schema.names)
     got = {f.name: f.type for f in table.schema}
     want = {f.name: f.type for f in schema}
     if got != want:
@@ -114,22 +144,41 @@ def _read_table(table_dir: str, schema: pa.Schema) -> list[dict]:
 def save_graph(spark: SparkSession | None, graph: Graph, path: str) -> None:
     """Write `graph` as the parquet directory store at `path`
     (events_log/ and nstates/). Runs on the driver with pyarrow; `spark`
-    is unused and kept so existing callers need no change."""
-    _write_table(_event_rows(graph), EVENTS_ARROW, os.path.join(path, "events_log"))
-    nrows = [(name, sorted(heads)) for name, heads in sorted(graph.nstates.items())]
-    _write_table(nrows, NSTATES_ARROW, os.path.join(path, "nstates"))
+    is unused and kept so existing callers need no change. Both tables
+    are built before anything on disk changes (a graph the store cannot
+    hold raises GraphError and leaves the previous save intact), then
+    each is staged and swapped in through storage.replace_dir."""
+    events = _arrow_table(_event_rows(graph), EVENTS_ARROW)
+    nstates = _arrow_table(
+        [(name, sorted(heads)) for name, heads in sorted(graph.nstates.items())],
+        NSTATES_ARROW,
+    )
+    _recover(path)
+    for table, (_, stage) in zip((events, nstates), _tables(path)):
+        storage.makedirs(stage)
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf, compression="zstd")
+        storage.write_bytes(
+            posixpath.join(stage, "part-00000.zstd.parquet"), buf.getvalue()
+        )
+        storage.write_bytes(posixpath.join(stage, storage.SUCCESS), b"")
+    for table_dir, stage in _tables(path):
+        storage.replace_dir(stage, table_dir)
 
 
 def load_graph(
     spark: SparkSession | None, path: str, arg_decode=json.loads
 ) -> Graph:
     """Read the parquet directory store at `path`, whether save_graph or
-    Spark's writer produced it. Runs on the driver with pyarrow; `spark`
-    is unused and kept so existing callers need no change. Raises
-    GraphError when `path` is not a readable graph store."""
+    Spark's writer produced it, after finishing any save a crash
+    interrupted. Runs on the driver with pyarrow; `spark` is unused and
+    kept so existing callers need no change. Raises GraphError when
+    `path` is not a readable graph store."""
     try:
-        events = _read_table(os.path.join(path, "events_log"), EVENTS_ARROW)
-        nstates = _read_table(os.path.join(path, "nstates"), NSTATES_ARROW)
+        _recover(path)
+        (events_dir, _), (nstates_dir, _) = _tables(path)
+        events = _read_table(events_dir, EVENTS_ARROW)
+        nstates = _read_table(nstates_dir, NSTATES_ARROW)
         g = Graph()
         for r in events:
             g.events[r["event_id"]] = Event(
@@ -237,7 +286,7 @@ class SnapshotStore:
         self._ns: str | None = None  # spill namespace, fixed by the first write
         self.spills = 0
         self.loads = 0
-        os.makedirs(spill_dir, exist_ok=True)
+        storage.makedirs(spill_dir)
 
     @staticmethod
     def state_key(st: frozenset) -> str:
@@ -249,7 +298,7 @@ class SnapshotStore:
         return h.hexdigest()
 
     def _path(self, st: frozenset) -> str:
-        return os.path.join(
+        return posixpath.join(
             self.spill_dir, f"st_{self._ns or ''}{self.state_key(st)}"
         )
 
@@ -328,15 +377,18 @@ class SnapshotStore:
         one-way digests), so a targeted prune/pop can only reach states
         it knows by name; this is the wholesale complement. Returns the
         number of snapshots deleted."""
-        import glob as _glob
+        from fnmatch import fnmatchcase
 
         # a state key is 32 hex digits, so the shared namespace's
         # pattern matches no namespaced file
-        sides = _glob.glob(
-            os.path.join(self.spill_dir, f"st_{self._ns or ''}{'?' * 32}.json")
-        )
+        pattern = f"st_{self._ns or ''}{'?' * 32}.json"
+        sides = [
+            n for n in storage.listdir(self.spill_dir) if fnmatchcase(n, pattern)
+        ]
         for side in sides:
-            self.engine.drop_snapshot(side[: -len(".json")])
+            self.engine.drop_snapshot(
+                posixpath.join(self.spill_dir, side[: -len(".json")])
+            )
         return len(sides)
 
     def __iter__(self):

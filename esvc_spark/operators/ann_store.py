@@ -68,6 +68,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core import storage
 from ..functions.vectors import cosine_prenorm, norm
 from .topk import topk_per_group
 
@@ -452,37 +453,6 @@ def _seed_codes(emb: DataFrame, n_codes: int) -> DataFrame:
 _PROBE_COLLECT_ROWS = 1 << 17
 
 
-def _parquet_first_len(path: str, col: str) -> int | None:
-    """Driver-side length of the first row of array column ``col`` in a
-    small parquet directory (a codebook) — zero Spark jobs; None when
-    pyarrow is unavailable, the dir is unreadable or holds no rows."""
-    try:
-        import pyarrow.parquet as pq
-
-        vals = pq.read_table(path, columns=[col]).column(0)
-        return len(vals[0].as_py()) if len(vals) else None
-    except Exception:
-        return None
-
-
-def _parquet_nrows(path: str) -> int | None:
-    """Driver-side row count of a flat parquet directory from the file
-    footers — zero Spark jobs (the catalog.table_rows idea without a
-    session); None when pyarrow is unavailable or the dir is odd."""
-    try:
-        import pyarrow.parquet as pq
-    except Exception:
-        return None
-    try:
-        n = 0
-        for f in os.listdir(path):
-            if f.endswith(".parquet"):
-                n += pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-        return n
-    except Exception:
-        return None
-
-
 class IVFIndexStore:
     """A built (or loaded) IVF index rooted at ``path``.
 
@@ -699,10 +669,8 @@ class IVFIndexStore:
         cents.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
         cdf = spark.read.parquet(os.path.join(path, "centroids"))
         # the persisted truth — limit(k) may return fewer; read from the
-        # parquet footers driver-side (zero jobs — round 12), falling
-        # back to the count job when pyarrow is unavailable
-        n = _parquet_nrows(os.path.join(path, "centroids"))
-        k = n if n is not None else cdf.count()
+        # parquet footers driver-side (zero jobs — round 12)
+        k = storage.parquet_rows(os.path.join(path, "centroids"))
         if k == 0:
             # a zero-row codebook is a permanently dead index: every
             # later add() cross-joins against nothing and silently drops
@@ -720,10 +688,8 @@ class IVFIndexStore:
             # wrong book otherwise encodes silently into NULL distances.
             # The written centroids carry the embedding dim — read it
             # from the parquet driver-side, no Spark job
-            cdir = os.path.join(path, "centroids")
-            dim = _parquet_first_len(cdir, "cemb")
-            if dim is None:
-                dim = cdf.select(F.size("cemb")).first()[0]
+            cemb = storage.read_parquet(os.path.join(path, "centroids"), ["cemb"])
+            dim = len(cemb.column(0)[0].as_py() or ())
             m, subdim = pq_meta[0], pq_meta[1]
             if m != pq_m or m * subdim != dim:
                 raise ValueError(
@@ -844,8 +810,6 @@ class IVFIndexStore:
         codebook, so the result is not byte-equal to a full rebuild
         with the new codebook; queries whose probes ranked the old
         centroid now rank the sub-centroids instead."""
-        import shutil as _sh
-
         if n_sub < 2:
             raise ValueError(f"split_cell: n_sub must be >= 2, got {n_sub}")
         # heal crash residue (mid-swap codebook restore, stale tmp/old
@@ -935,19 +899,7 @@ class IVFIndexStore:
         cents_rows = [
             (c, list(v), n) for c, v, n in old_cents if c != cell
         ] + sub_rows
-        final = os.path.join(self.path, "centroids")
-        tmp = final + "._split_tmp"
-        self._local_df(
-            cents_rows, "cent_id bigint, cemb array<double>, cnrm double"
-        ).write.mode("overwrite").parquet(tmp)
-        old_dir = final + "._split_old"
-        os.rename(final, old_dir)
-        os.rename(tmp, final)
-        _sh.rmtree(old_dir, ignore_errors=True)
-        # the rows just written ARE the new codebook (memo stays hot)
-        self._cents_rows = [
-            (int(c), [float(x) for x in v], float(n)) for c, v, n in cents_rows
-        ]
+        self._swap_codebook(cents_rows, "split")
 
         from .cc import _scoped_conf
 
@@ -1042,19 +994,7 @@ class IVFIndexStore:
         ] + [(a, merged, py_norm(merged))]
 
         # (1) codebook first, atomic rename swap (split_cell pattern)
-        final = os.path.join(self.path, "centroids")
-        tmp = final + "._merge_tmp"
-        self._local_df(
-            cents_rows, "cent_id bigint, cemb array<double>, cnrm double"
-        ).write.mode("overwrite").parquet(tmp)
-        old_dir = final + "._merge_old"
-        os.rename(final, old_dir)
-        os.rename(tmp, final)
-        _sh.rmtree(old_dir, ignore_errors=True)
-        # the rows just written ARE the new codebook (memo stays hot)
-        self._cents_rows = [
-            (int(c), [float(x) for x in v], float(n)) for c, v, n in cents_rows
-        ]
+        self._swap_codebook(cents_rows, "merge")
 
         # (2) move b's rows into partition a (a's rows rewrite in place
         # with their cell id unchanged; dynamic overwrite touches ONLY
@@ -1089,6 +1029,29 @@ class IVFIndexStore:
             _sh.rmtree(junk, ignore_errors=True)
         self.k = len(cents_rows)
         return self
+
+    def _swap_codebook(self, cents_rows: list, tag: str) -> None:
+        """Replace the codebook with ``cents_rows`` by the rename swap
+        split_cell, merge_cells and drop_empty_cells share: write
+        ``centroids._<tag>_tmp``, rename the old codebook out to
+        ``._<tag>_old``, rename the tmp in, delete the old one. One
+        k-row write job and no delete-then-write window; a kill between
+        the renames is healed by _recover_codebook_swap."""
+        import shutil as _sh
+
+        final = os.path.join(self.path, "centroids")
+        tmp = final + f"._{tag}_tmp"
+        self._local_df(
+            cents_rows, "cent_id bigint, cemb array<double>, cnrm double"
+        ).write.mode("overwrite").parquet(tmp)
+        old_dir = final + f"._{tag}_old"
+        os.rename(final, old_dir)
+        os.rename(tmp, final)
+        _sh.rmtree(old_dir, ignore_errors=True)
+        # the rows just written ARE the new codebook (memo stays hot)
+        self._cents_rows = [
+            (int(c), [float(x) for x in v], float(n)) for c, v, n in cents_rows
+        ]
 
     def _recover_codebook_swap(self) -> None:
         """Crash-residue recovery for the centroid rename swap shared by
@@ -1297,8 +1260,6 @@ class IVFIndexStore:
         rename-swap only (no row data exists to move), same crash
         residue class as split/merge — _recover_codebook_swap heals a
         mid-swap kill at next entry."""
-        import shutil as _sh
-
         self._recover_orphan_cells()
         cents = {
             c: (v, n) for c, v, n in self._cents_collect()  # memoized
@@ -1327,19 +1288,7 @@ class IVFIndexStore:
             for cid, (v, n) in sorted(cents.items())
             if cid not in targets
         ]
-        final = os.path.join(self.path, "centroids")
-        tmp = final + "._merge_tmp"
-        self._local_df(
-            cents_rows, "cent_id bigint, cemb array<double>, cnrm double"
-        ).write.mode("overwrite").parquet(tmp)
-        old_dir = final + "._merge_old"
-        os.rename(final, old_dir)
-        os.rename(tmp, final)
-        _sh.rmtree(old_dir, ignore_errors=True)
-        # the rows just written ARE the new codebook (memo stays hot)
-        self._cents_rows = [
-            (int(c), [float(x) for x in v], float(n)) for c, v, n in cents_rows
-        ]
+        self._swap_codebook(cents_rows, "merge")
         self.k = len(cents_rows)
         return self
 
@@ -1482,13 +1431,8 @@ class IVFIndexStore:
         # centroids/ absent with the old codebook in ._split_old /
         # ._merge_old — restore it so a crashed store stays loadable
         store._recover_codebook_swap()
-        # footer-metadata count (zero jobs — round 12); count job fallback
-        n = _parquet_nrows(os.path.join(path, "centroids"))
-        store.k = (
-            n
-            if n is not None
-            else spark.read.parquet(os.path.join(path, "centroids")).count()
-        )
+        # footer-metadata count (zero jobs — round 12)
+        store.k = storage.parquet_rows(os.path.join(path, "centroids"))
         return store
 
     def centroids(self) -> DataFrame:

@@ -459,6 +459,24 @@ def _bounded_stream_confs(spark: SparkSession):
             spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _drain_to_memory(spark: SparkSession, df: DataFrame, prefix: str, mode: str):
+    """Run the bounded contract stream `df` to completion, under
+    _bounded_stream_confs, into a fresh in-memory table named
+    `stream_<prefix>_<n>`, and return that table."""
+    _STREAM_SEQ[0] += 1
+    name = f"stream_{prefix}_{_STREAM_SEQ[0]}"
+    with _bounded_stream_confs(spark):
+        q = (
+            df.writeStream.outputMode(mode).format("memory")
+            .queryName(name).start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return spark.table(name)
+
+
 def q_stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the file-stream source needs a directory basePath; a glob that
     # matches the single file keeps the parent dir as base
@@ -470,20 +488,7 @@ def q_stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         dsum("value", 2).alias("sum_value"),
     )
-    _STREAM_SEQ[0] += 1
-    name = f"stream_tumbling_{_STREAM_SEQ[0]}"
-    with _bounded_stream_confs(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return _drain_to_memory(spark, agg, "tumbling", "complete")
 
 
 _STREAM_TUMBLING_SQL = f"""
@@ -517,20 +522,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    _STREAM_SEQ[0] += 1
-    name = f"stream_sessionize_{_STREAM_SEQ[0]}"
-    with _bounded_stream_confs(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return _drain_to_memory(spark, agg, "sessionize", "complete")
 
 
 def _event_stream(spark: SparkSession, sf_dir: str):
@@ -602,20 +594,7 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_user").alias("user_id"),
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
     )
-    _STREAM_SEQ[0] += 1
-    name = f"stream_join_{_STREAM_SEQ[0]}"
-    with _bounded_stream_confs(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return _drain_to_memory(spark, joined, "join", "append")
 
 
 def q_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -650,20 +629,7 @@ def q_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("purchase_id").isNotNull(), 1).otherwise(0)
         .alias("matched"),
     )
-    _STREAM_SEQ[0] += 1
-    name = f"stream_left_join_{_STREAM_SEQ[0]}"
-    with _bounded_stream_confs(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return _drain_to_memory(spark, joined, "left_join", "append")
 
 
 # The oracle states the outer-join eviction rule explicitly: every
@@ -714,20 +680,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = stream.dropDuplicatesWithinWatermark(
         ["user_id", "event_type", "value"]
     ).select("user_id", "event_type", "value")
-    _STREAM_SEQ[0] += 1
-    name = f"stream_dedup_{_STREAM_SEQ[0]}"
-    with _bounded_stream_confs(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return _drain_to_memory(spark, deduped, "dedup", "append")
 
 
 _STREAM_DEDUP_SQL = """
@@ -756,20 +709,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         dsum("value", 2).alias("sum_value"),
     )
-    _STREAM_SEQ[0] += 1
-    name = f"stream_enrich_{_STREAM_SEQ[0]}"
-    with _bounded_stream_confs(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return _drain_to_memory(spark, agg, "enrich", "complete")
 
 
 _STREAM_ENRICH_SQL = f"""
@@ -796,20 +736,7 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_events"), F.asc("user_id"))
         .limit(5)
     )
-    _STREAM_SEQ[0] += 1
-    name = f"stream_topk_{_STREAM_SEQ[0]}"
-    with _bounded_stream_confs(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return _drain_to_memory(spark, agg, "topk", "complete")
 
 
 _STREAM_TOPK_SQL = f"""
@@ -832,20 +759,7 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy(
         F.window("ts", "1 hour").start.alias("hr"), F.col("event_type")
     ).agg(F.count(F.lit(1)).alias("n"))
-    _STREAM_SEQ[0] += 1
-    name = f"stream_anomaly_{_STREAM_SEQ[0]}"
-    with _bounded_stream_confs(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    hourly = spark.table(name)
+    hourly = _drain_to_memory(spark, agg, "anomaly", "complete")
     # the memory-sink view resolves to one set of attribute ids, so the
     # hourly⋈stats self-join needs the stats key re-aliased or analysis
     # sees "conflicting attributes"
@@ -913,20 +827,7 @@ def q_stream_heads(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("deps_json"),
     )
     tracked = streaming_head_tracker(stream)
-    _STREAM_SEQ[0] += 1
-    name = f"stream_heads_{_STREAM_SEQ[0]}"
-    with _bounded_stream_confs(spark):
-        q = (
-            tracked.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name).select(
+    return _drain_to_memory(spark, tracked, "heads", "update").select(
         "graph_key",
         F.array_join("heads", ",").alias("heads_csv"),
         F.size("heads").cast("bigint").alias("n_heads"),
@@ -1313,20 +1214,7 @@ def q_stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import running_user_totals
 
     totals = running_user_totals(_event_stream(spark, sf_dir))
-    _STREAM_SEQ[0] += 1
-    name = f"stream_running_{_STREAM_SEQ[0]}"
-    with _bounded_stream_confs(spark):
-        q = (
-            totals.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
+    return _drain_to_memory(spark, totals, "running", "update")
 
 
 _RUNNING_TOTALS_SQL = """

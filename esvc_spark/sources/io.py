@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..core import storage
+
 _FORMATS = {"parquet", "csv", "json", "orc"}
 
 
@@ -57,32 +59,29 @@ def compact_table(
     compression: str = "zstd",
 ) -> int:
     """Small-file compaction: rewrite a table directory into exactly
-    `target_files` files and atomically swap it in. The housekeeping pass
-    every long-lived dataset needs — streaming sinks and incremental
-    appends accumulate files far below the optimal scan granularity, and
-    at 100 TB the scan's task count (and the namenode/listing load) is
-    the file count. Uses repartition (even-sized output via round-robin),
-    writes to a sibling temp dir, then renames — readers never see a
-    half-written table. Returns the number of data files after compaction."""
-    import os
-    import shutil
-
+    `target_files` files and swap it in. The housekeeping pass every
+    long-lived dataset needs — streaming sinks and incremental appends
+    accumulate files far below the optimal scan granularity, and at
+    100 TB the scan's task count (and the namenode/listing load) is the
+    file count. Uses repartition (even-sized output via round-robin),
+    writes a sibling stage, then swaps it in with
+    core.storage.replace_dir; a crash mid-swap is rolled forward by the
+    next call (the stage holds Spark's _SUCCESS). Returns the number of
+    data files after compaction."""
+    stage = path.rstrip("/") + "._compact_tmp"
+    storage.recover_dir(stage, path)
     df = spark.read.format(fmt).load(path)
-    tmp = path.rstrip("/") + "._compact_tmp"
     (
         df.repartition(target_files)
         .write.format(fmt)
         .mode("overwrite")
         .option("compression", compression)
-        .save(tmp)
+        .save(stage)
     )
-    old = path.rstrip("/") + "._compact_old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    storage.replace_dir(stage, path)
     return sum(
         1
-        for f in os.listdir(path)
+        for f in storage.listdir(path)
         if f.endswith(f".{fmt}") or (fmt == "parquet" and f.endswith(".parquet"))
     )
 

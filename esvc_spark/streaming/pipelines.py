@@ -20,12 +20,13 @@ micro-batches (at-least-once sources) cannot duplicate events.
 
 from __future__ import annotations
 
-import os
-import shutil
+import posixpath
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ..core import storage
 
 # The on-file physical timestamp type has varied across driver testdata
 # generations (TIMESTAMP(NANOS) vs TIMESTAMP(MICROS) NTZ), so reads pin
@@ -124,14 +125,12 @@ def run_to_memory(
     return df.sparkSession.table(name)
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    """Whether `path` exists, asked through Hadoop's FileSystem rather
-    than the driver's local filesystem (on HDFS/S3/DBFS os.path.exists
-    is always false). No Spark job, and no failed read for the listener
-    bus to log as an error."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
+def _drain(stream: DataFrame, fn, checkpoint_dir: str) -> None:
+    """Run `fn(batch, batch_id)` on every micro-batch `stream` has
+    available now, checkpointed at `checkpoint_dir`."""
+    stream.writeStream.foreachBatch(fn).option(
+        "checkpointLocation", checkpoint_dir
+    ).trigger(availableNow=True).start().awaitTermination()
 
 
 def append_new_events(out: DataFrame, target: str) -> None:
@@ -145,7 +144,7 @@ def append_new_events(out: DataFrame, target: str) -> None:
     when the read resolves, so appending into the same directory is
     self-consistent."""
     spark = out.sparkSession
-    if _exists(spark, target):
+    if storage.exists(target):
         existing = spark.read.schema(out.schema).parquet(target)
         out = out.join(existing.select("event_id"), "event_id", "left_anti")
     out.write.mode("append").option("compression", "zstd").parquet(target)
@@ -167,19 +166,13 @@ def ingest_into_event_log(
     the events schema and treats event_id as the content address.
     """
 
-    target = os.path.join(log_dir, "events_stream")
+    target = posixpath.join(log_dir, "events_stream")
 
     def _append(batch: DataFrame, batch_id: int) -> None:
         out = to_event(batch) if to_event is not None else batch
         append_new_events(out.dropDuplicates(["event_id"]), target)
 
-    q = (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream, _append, checkpoint_dir)
 
 
 # ------------------------------------------------ streamed event-log loop
@@ -221,14 +214,17 @@ def ingest_into_event_log(
 #   * Every table the batch reads was written by this pipeline, so it
 #     is read with a pinned schema: no schema-inference job.
 #   * The heads table is replaced by a roll-forward swap, not an atomic
-#     one: the new head set is written to `heads_stage/`, then `heads/`
-#     is deleted and the stage renamed into place. A crash between
-#     those steps leaves the batch uncommitted, so Spark replays it, and
-#     the next batch first finishes the swap: a stage holding _SUCCESS
-#     (Spark's committer writes it when the write job commits) is the
-#     newest complete head set; a stage without it is deleted.
-#     A production deployment writes the heads through a transactional
-#     table format instead.
+#     one (core.storage.replace_dir / recover_dir, so it holds on any
+#     filesystem the path names, object stores included): the new head
+#     set is written to `heads_stage/`, then `heads/` is deleted and the
+#     stage moved into place. A crash between those steps leaves the
+#     batch uncommitted, so Spark replays it, and the next batch first
+#     finishes the swap: a stage holding _SUCCESS (Spark's committer
+#     writes it when the write job commits) is the newest complete head
+#     set; a stage without it is deleted. Existence probes go through
+#     the same module, so a `file:` URI names one directory for Spark
+#     and for the driver. A production deployment writes the heads
+#     through a transactional table format instead.
 #   * Reader contract: `heads/` is one table, bounded by threshold +
 #     batch ids but not minimal (compaction is threshold-triggered, and
 #     a redelivered batch re-adds ids), so every reader folds it through
@@ -306,23 +302,6 @@ def _superseded(heads: DataFrame, log: DataFrame) -> DataFrame:
     return heads.join(succ, "head_src", "left_anti")
 
 
-def _swap_in(stage: str, heads_dir: str) -> None:
-    shutil.rmtree(heads_dir, ignore_errors=True)
-    os.replace(stage, heads_dir)
-
-
-def _recover_heads_swap(stage: str, heads_dir: str) -> None:
-    """Finish a heads swap a crash interrupted (see the swap note
-    above): a stage holding the committer's _SUCCESS marker replaces
-    `heads_dir`; a stage without it is a partial write and is deleted."""
-    if not os.path.isdir(stage):
-        return
-    if os.path.exists(os.path.join(stage, "_SUCCESS")):
-        _swap_in(stage, heads_dir)
-    else:
-        shutil.rmtree(stage)
-
-
 def event_log_stream_pipeline(
     stream: DataFrame,
     work_dir: str,
@@ -333,8 +312,8 @@ def event_log_stream_pipeline(
     content-addressed idempotent append into `work_dir`/events_log +
     per-batch append_head and >threshold compaction into
     `work_dir`/heads."""
-    log_dir = os.path.join(work_dir, "events_log")
-    heads_dir = os.path.join(work_dir, "heads")
+    log_dir = posixpath.join(work_dir, "events_log")
+    heads_dir = posixpath.join(work_dir, "heads")
     stage = heads_dir + "_stage"
     # rows of heads/ as this query last wrote it; None until then, and
     # after a restart, when it costs one count
@@ -343,7 +322,7 @@ def event_log_stream_pipeline(
     def _batch(batch: DataFrame, batch_id: int) -> None:
         nonlocal n_old
         spark = batch.sparkSession
-        _recover_heads_swap(stage, heads_dir)
+        storage.recover_dir(stage, heads_dir)
 
         # ev is evaluated once, by the append: the head update below
         # reads `batch` and the on-disk log, never ev. n_new counts the
@@ -366,7 +345,7 @@ def event_log_stream_pipeline(
         heads = batch.select(
             F.col("event_id").cast("bigint").alias("head_src")
         )
-        if _exists(spark, heads_dir):
+        if storage.exists(heads_dir):
             old = spark.read.schema("head_src BIGINT").parquet(heads_dir)
             if n_old is None:
                 n_old = old.count()
@@ -391,15 +370,9 @@ def event_log_stream_pipeline(
             "overwrite"
         ).parquet(stage)
         n_old = wrote.get["n"]
-        _swap_in(stage, heads_dir)
+        storage.replace_dir(stage, heads_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream, _batch, checkpoint_dir)
 
 
 def index_embeddings_stream(
@@ -427,10 +400,4 @@ def index_embeddings_stream(
     def _append(batch: DataFrame, batch_id: int) -> None:
         store.add(batch.dropDuplicates(["vec_id"]), idempotent=True)
 
-    q = (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream, _append, checkpoint_dir)

@@ -22,3 +22,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+# The path forms every stateful path must accept. The `file:` URIs are
+# strings Spark accepts for the same directory; the last one holds a
+# space and a non-ASCII character, which a URI parser rejects.
+PATH_FORMS = ["plain", "file-uri", "file-uri-space-nonascii"]
+
+
+def path_in_form(base, form: str) -> str:
+    """A directory under `base` (a pathlib.Path) named in `form`."""
+    if form == "plain":
+        return str(base)
+    if form == "file-uri":
+        return "file://" + str(base)
+    return "file://" + str(base / "x y ü")
+
+
+@pytest.fixture
+def clean_cwd(tmp_path, monkeypatch):
+    """An empty working directory for the test. A path string taken as
+    a relative local path (a `file:` URI handed to `os`) would leave a
+    `file:` directory in it."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    return cwd

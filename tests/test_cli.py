@@ -7,6 +7,8 @@ from __future__ import annotations
 import io
 
 from esvc_spark.cli import Repl
+from esvc_spark.core.engines import ExEngine
+from esvc_spark.core.graph import Event, Graph
 
 
 def _drive(repl, script):
@@ -180,3 +182,90 @@ def test_main_startup_bad_path_reports_and_starts_empty():
     got = captured.getvalue()
     assert got.startswith("?load:")
     assert "blake2b512:" not in got  # empty graph, no heads
+
+
+def _reference_file(tmp_path, name, cmd, base=None):
+    """A reference-format graph file: the events of `base` (a Graph)
+    plus one editor event (append "theirs") under command id `cmd` that
+    depends on base's heads and is the file's only head."""
+    from esvc_spark.core.bincode_io import export_reference_file
+
+    donor = Repl()
+    _drive(donor, [("$a", ["theirs"])])
+    (arg,) = [ev.arg for ev in donor.graph.events.values()]
+    g = Graph()
+    deps = {}
+    if base is not None:
+        g.events.update(base.events)
+        deps = {h: True for h in base.nstates[""]}
+    _, h = g.ensure_event(Event(cmd=cmd, arg=arg, deps=deps))
+    g.nstates[""] = {h}
+    path = str(tmp_path / name)
+    export_reference_file(g, path)
+    return path
+
+
+class _AnyCmdEngine(ExEngine):
+    """Runs every command id as the editor command."""
+
+    def run_event_bare(self, cmd, arg, dat):
+        return super().run_event_bare(0, arg, dat)
+
+
+def test_w_of_unstorable_event_keeps_previous_save_and_session(tmp_path):
+    """cmd = 2**31 is valid in the reference's u32 bincode but not in
+    the store's int32 cmd column: `w` reports it as `?w:` naming the
+    event, the session goes on, and the previous save still loads."""
+    from esvc_spark.core.hashing import format_hash
+    from esvc_spark.core.store import load_graph
+
+    store = str(tmp_path / "store")
+    r = Repl(engine=_AnyCmdEngine())
+    _drive(r, [("$a", ["ours"])])
+    ref = _reference_file(tmp_path, "big.exvc.zst", 2**31, base=r.graph)
+    first = {h: ev for h, ev in r.graph.events.items()}
+    first_heads = r.heads
+    _drive(r, [(f"w {store}", None), (f"m< {ref}", None)])
+    (big,) = [h for h, ev in r.graph.events.items() if ev.cmd == 2**31]
+
+    out = io.StringIO()
+    assert r.handle_line(f"w {store}", out, lambda: [])
+    assert out.getvalue().startswith("?w:")
+    assert format_hash(big) in out.getvalue()
+    assert list(r.materialize()) == ["ours", "theirs"]  # session alive
+    saved = load_graph(None, store)
+    assert saved.events == first
+    assert saved.nstates == {"": first_heads}
+
+
+def test_m_import_unknown_command_reports_and_survives(tmp_path):
+    """A graph whose event carries a command the engine lacks reports
+    CommandNotFound as `?m<:` (and as `?load:` at startup) instead of
+    ending the session."""
+    from esvc_spark.cli import main
+
+    ref = _reference_file(tmp_path, "cmd7.exvc.zst", 7)
+    r = Repl()
+    _drive(r, [("$a", ["ours"])])
+    out = io.StringIO()
+    assert r.handle_line(f"m< {ref}", out, lambda: [])
+    assert out.getvalue().startswith("?m<:")
+    assert "command with ID 7" in out.getvalue()
+    assert list(r.materialize()) == ["ours"]
+
+    captured = io.StringIO()
+    main(argv=[ref], stdin=io.StringIO("*state\nq!\n"), stdout=captured)
+    assert captured.getvalue().startswith("?load:")
+
+
+def test_m_import_conflicting_branch_reports_and_survives(tmp_path):
+    """A branch whose event cannot be re-shelved onto ours without
+    changing its hard dependencies (HashChangeAtMerge) reports `?m<:`
+    and keeps the session."""
+    ref = _reference_file(tmp_path, "theirs.exvc.zst", 0)
+    r = Repl()
+    _drive(r, [("$a", ["ours"])])
+    out = io.StringIO()
+    assert r.handle_line(f"m< {ref}", out, lambda: [])
+    assert out.getvalue().startswith("?m<:")
+    assert list(r.materialize()) == ["ours"]

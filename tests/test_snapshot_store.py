@@ -24,6 +24,8 @@ from esvc_spark.core.engines import BaseEngine, SearEngine, sear
 from esvc_spark.core.spark_engine import SparkReplaceEngine
 from esvc_spark.core.store import SnapshotStore
 
+from .conftest import PATH_FORMS, path_in_form
+
 
 @pytest.fixture(scope="module")
 def replace_engine(spark):
@@ -83,11 +85,16 @@ def test_budgeted_session_matches_unbounded(spark, replace_engine, tmp_path):
     w_free.prune()
 
 
-def test_new_session_reuses_snapshot_without_replay(spark, tmp_path):
+@pytest.mark.parametrize("form", PATH_FORMS)
+def test_new_session_reuses_snapshot_without_replay(
+    spark, tmp_path, clean_cwd, form
+):
     """(b) a brand-new WorkCache over the same spill dir materializes a
     spilled state with ZERO engine transforms — the reference restarts
-    from scratch; we restart from parquet."""
-    spill = str(tmp_path / "spill")
+    from scratch; we restart from parquet. The spill dir may be named by
+    a `file:` URI, as Spark names it: sidecars and footers are then read
+    where Spark wrote the parquet."""
+    spill = path_in_form(tmp_path / "spill", form)
 
     eng1 = _CountingEngine(SparkReplaceEngine(spark))
     store1 = SnapshotStore(eng1, spill, persist_budget=2)
@@ -109,6 +116,7 @@ def test_new_session_reuses_snapshot_without_replay(spark, tmp_path):
     want = sorted(r["text"] for r in final_dat.df.collect())
     assert got == want
     assert final_state in store2  # membership answered from disk
+    assert not (clean_cwd / "file:").exists()
 
 
 def test_state_key_is_order_insensitive():

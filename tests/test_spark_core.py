@@ -20,6 +20,8 @@ from esvc_spark.core.store import (
     save_graph,
 )
 
+from .conftest import PATH_FORMS, path_in_form
+
 ALL = IncludeSpec.INCLUDE_ALL
 
 
@@ -200,14 +202,68 @@ def _spark_save_graph(spark, graph: Graph, path: str) -> None:
     ).option("compression", "zstd").parquet(os.path.join(path, "nstates"))
 
 
-def test_graph_store_roundtrip_cases(tmp_path):
+@pytest.mark.parametrize("form", PATH_FORMS)
+def test_graph_store_roundtrip_cases(tmp_path, clean_cwd, form):
     """Every case round-trips, each saved over the previous one in the
-    same directory (save_graph replaces both tables)."""
-    path = str(tmp_path / "graph")
+    same directory (save_graph replaces both tables), whether the store
+    is named by a plain path or a `file:` URI."""
+    path = path_in_form(tmp_path / "graph", form)
     for name in _STORE_CASES + _STORE_CASES[::-1]:
         g = _store_case(name)
         save_graph(None, g, path)
         _assert_same_graph(load_graph(None, path), g)
+    assert not (clean_cwd / "file:").exists()
+
+
+@pytest.mark.parametrize("table", ["events_log", "nstates"])
+def test_graph_store_swap_survives_crash(tmp_path, monkeypatch, table):
+    """A crash between deleting a table and moving its stage in
+    (injected in storage's move step) leaves the table absent; the next
+    load_graph rolls the staged tables forward and returns the new
+    graph."""
+    import os
+
+    from esvc_spark.core import storage
+
+    path = str(tmp_path / "graph")
+    save_graph(None, _store_case("no_deps"), path)
+    new = _store_case("named_heads_non_ascii")
+    real_move = storage._move
+
+    def crash_before_move(fs, src, dst):
+        if src.endswith(f"{table}_stage"):
+            raise OSError("injected crash before the stage move")
+        real_move(fs, src, dst)
+
+    monkeypatch.setattr(storage, "_move", crash_before_move)
+    with pytest.raises(OSError, match="injected"):
+        save_graph(None, new, path)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(path, table))  # the crash window
+    _assert_same_graph(load_graph(None, path), new)
+
+
+def test_graph_store_uncommitted_save_loads_old_graph(tmp_path, monkeypatch):
+    """A save that dies before the nstates stage is complete never
+    committed: load_graph deletes both stages, including the complete
+    events_log one, and returns the old graph whole."""
+    from esvc_spark.core import storage
+
+    path = str(tmp_path / "graph")
+    old = _store_case("soft_deps")
+    save_graph(None, old, path)
+    real_write = storage.write_bytes
+
+    def crash_on_nstates_marker(p, data):
+        if p.endswith("nstates_stage/_SUCCESS"):
+            raise OSError("injected crash before the nstates marker")
+        real_write(p, data)
+
+    monkeypatch.setattr(storage, "write_bytes", crash_on_nstates_marker)
+    with pytest.raises(OSError, match="injected"):
+        save_graph(None, _store_case("named_heads_non_ascii"), path)
+    monkeypatch.undo()
+    _assert_same_graph(load_graph(None, path), old)
 
 
 def test_graph_store_issues_no_spark_jobs(spark, tmp_path):

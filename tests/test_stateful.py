@@ -19,6 +19,8 @@ from esvc_spark.streaming.stateful import (
     streaming_head_tracker,
 )
 
+from .conftest import path_in_form
+
 SF_DIR = "/root/testdata/sf0.001"
 EVENTS = os.path.join(SF_DIR, "events.parquet")
 
@@ -278,15 +280,29 @@ def test_head_tracker_recover_from_checkpoint(spark, tmp_path, state_provider):
     assert out2.iloc[0]["n_events"] == 3
 
 
+# the `file:` URI forms run under one state-store provider
+@pytest.mark.parametrize(
+    "state_provider, form",
+    [
+        ("hdfs", "plain"),
+        ("rocksdb", "plain"),
+        ("hdfs", "file-uri"),
+        ("hdfs", "file-uri-space-nonascii"),
+    ],
+    ids=["hdfs", "rocksdb", "hdfs-file-uri", "hdfs-file-uri-space-nonascii"],
+    indirect=["state_provider"],
+)
 def test_event_log_pipeline_recover_from_checkpoint(
-    spark, tmp_path, state_provider
+    spark, tmp_path, clean_cwd, state_provider, form
 ):
     """The streamed event-log loop (pipelines.event_log_stream_pipeline:
     content-addressed MERGE append + per-batch append_head/compaction)
     survives a full query STOP + RESTART from the same checkpoint under
     both state-store providers: phase 2 processes ONLY the new file
     (checkpoint offsets recovered, no duplicate appends), and the final
-    log + minimized head set equal the closed form over all events."""
+    log + minimized head set equal the closed form over all events. The
+    work and checkpoint dirs may be named by `file:` URIs: the driver's
+    probes and heads swap then act on the directories Spark writes."""
     from esvc_spark.streaming.pipelines import (
         _superseded,
         event_log_stream_pipeline,
@@ -294,8 +310,8 @@ def test_event_log_pipeline_recover_from_checkpoint(
 
     src = str(tmp_path / "src")
     os.makedirs(src)
-    ckpt = str(tmp_path / "ckpt")
-    work = str(tmp_path / "work")
+    ckpt = path_in_form(tmp_path / "ckpt", form)
+    work = path_in_form(tmp_path / "work", form)
     t = pq.read_table(EVENTS)
     half = t.num_rows // 2
     pq.write_table(t.slice(0, half), os.path.join(src, "a.parquet"))
@@ -335,6 +351,12 @@ def test_event_log_pipeline_recover_from_checkpoint(
             if (i + 16) not in want_ids or ((i + 16) // 16) % 3 == 0
         }
         assert got_heads == want_heads
+        # every table sits where Spark's Hadoop Path puts the string
+        local = work.removeprefix("file://")
+        for d in ("events_log", "heads"):
+            assert os.path.isdir(os.path.join(local, d))
+        assert not os.path.exists(os.path.join(local, "heads_stage"))
+        assert not (clean_cwd / "file:").exists()
     finally:
         if old is None:
             spark.conf.unset("spark.sql.shuffle.partitions")
@@ -361,13 +383,15 @@ def _dep_src(i):
 
 
 def test_event_log_heads_swap_survives_crash(spark, tmp_path, monkeypatch):
-    """A crash between deleting heads/ and renaming heads_stage/ into
-    place (injected: os.replace raises once, on the second batch's swap)
-    leaves the batch uncommitted. Restarted from the same checkpoint, the
-    pipeline rolls the complete stage forward before replaying the batch,
-    so no earlier head is lost: the folded heads equal the closed form."""
+    """A crash between deleting heads/ and moving heads_stage/ into
+    place (injected: storage's move step raises once, on the second
+    batch's swap) leaves the batch uncommitted. Restarted from the same
+    checkpoint, the pipeline rolls the complete stage forward before
+    replaying the batch, so no earlier head is lost: the folded heads
+    equal the closed form."""
     from pyspark.errors import StreamingQueryException
 
+    from esvc_spark.core import storage
     from esvc_spark.streaming.pipelines import (
         _superseded,
         event_log_stream_pipeline,
@@ -378,15 +402,15 @@ def test_event_log_heads_swap_survives_crash(spark, tmp_path, monkeypatch):
     half = t.num_rows // 2
     _write_slices(src, t, [(0, half), (half, t.num_rows)])
 
-    real_replace = os.replace
+    real_move = storage._move
     swaps = []
 
-    def crash_on_second_swap(src_path, dst_path, *a, **kw):
-        if str(src_path).endswith("heads_stage"):
+    def crash_on_second_swap(fs, src_path, dst_path):
+        if src_path.endswith("heads_stage"):
             swaps.append(src_path)
             if len(swaps) == 2:
-                raise OSError("injected crash before the heads stage rename")
-        return real_replace(src_path, dst_path, *a, **kw)
+                raise OSError("injected crash before the heads stage move")
+        real_move(fs, src_path, dst_path)
 
     def run():
         event_log_stream_pipeline(
@@ -394,7 +418,7 @@ def test_event_log_heads_swap_survives_crash(spark, tmp_path, monkeypatch):
             work_dir=work, checkpoint_dir=ckpt,
         )
 
-    monkeypatch.setattr(os, "replace", crash_on_second_swap)
+    monkeypatch.setattr(storage, "_move", crash_on_second_swap)
     with pytest.raises(StreamingQueryException):
         run()
     # the crash window: the old head set is gone, the new one is staged
@@ -435,6 +459,7 @@ def test_event_log_compaction_decision_matches_union_rule(
     ids. The thresholds cover every way the pipeline can reach that
     decision, and the run restarts from its checkpoint before the last
     batch, so the heads' size is unknown to the restarted query."""
+    from esvc_spark.core import storage
     from esvc_spark.streaming.pipelines import event_log_stream_pipeline
 
     src, ckpt, work = (str(tmp_path / d) for d in ("src", "ckpt", "work"))
@@ -460,12 +485,12 @@ def test_event_log_compaction_decision_matches_union_rule(
         want.append(heads.copy())
     assert branches <= seen
 
-    real_replace = os.replace
+    real_move = storage._move
     got = []
 
-    def snapshot_after_swap(src_path, dst_path, *a, **kw):
-        real_replace(src_path, dst_path, *a, **kw)
-        if str(src_path).endswith("heads_stage"):
+    def snapshot_after_swap(fs, src_path, dst_path):
+        real_move(fs, src_path, dst_path)
+        if src_path.endswith("heads_stage"):
             got.append(set(pq.read_table(dst_path).column("head_src").to_pylist()))
 
     def run():
@@ -474,7 +499,7 @@ def test_event_log_compaction_decision_matches_union_rule(
             work_dir=work, checkpoint_dir=ckpt, head_threshold=threshold,
         )
 
-    monkeypatch.setattr(os, "replace", snapshot_after_swap)
+    monkeypatch.setattr(storage, "_move", snapshot_after_swap)
     _write_slices(src, t, bounds[:3])
     run()
     _write_slices(src, t, bounds[3:], first=3)
