@@ -1,8 +1,9 @@
 """The one way the stateful paths reach storage: the graph store, the
-snapshot spill seam, the event-log heads swap, table compaction and the
-REPL's path checks. Every operation takes the path string Spark is
-handed for the same location and resolves it to a `pyarrow.fs`
-filesystem:
+snapshot spill seam, the event-log heads swap, table compaction, the
+IVF index store (operators/ann_store.py: its codebook swaps, cell
+compactions and cell drops) and the REPL's path checks. Every operation
+takes the path string Spark is handed for the same location and
+resolves it to a `pyarrow.fs` filesystem:
 
   * a plain path (no `scheme:` before its first `/`, Hadoop's rule) is
     a `LocalFileSystem` path;

@@ -217,13 +217,20 @@ def ensure_events_idempotent(graph: Graph, other: Graph) -> None:
 def import_merge(wc: WorkCache, graph: Graph, other: Graph, state: str = "") -> set[bytes]:
     """Import a foreign graph and merge its head-set with ours
     (≙ main.rs:54-111). Returns the new merged head-set (also stored as
-    nstates[state])."""
-    ensure_events_idempotent(graph, other)
-    ours = graph.nstates.get(state, set())
-    theirs = other.nstates.get(state, set())
-    union = {h: False for h in ours | theirs}
-    minimized = set(graph.fold_state(union, expand=False).keys())
-    wc.try_merge(graph, set(minimized | ours | theirs))
+    nstates[state]). On any failure `graph.events` gets back its
+    events from before the import, so a failed merge adds nothing."""
+    before = set(graph.events)
+    try:
+        ensure_events_idempotent(graph, other)
+        ours = graph.nstates.get(state, set())
+        theirs = other.nstates.get(state, set())
+        union = {h: False for h in ours | theirs}
+        minimized = set(graph.fold_state(union, expand=False).keys())
+        wc.try_merge(graph, set(minimized | ours | theirs))
+    except BaseException:
+        for h in set(graph.events) - before:
+            del graph.events[h]
+        raise
     merged = set(
         graph.fold_state({h: False for h in ours | theirs}, expand=False).keys()
     )

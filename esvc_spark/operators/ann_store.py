@@ -452,6 +452,9 @@ def _seed_codes(emb: DataFrame, n_codes: int) -> DataFrame:
 # comment-only ceiling promoted to an enforced invariant).
 _PROBE_COLLECT_ROWS = 1 << 17
 
+# suffix of a staged directory the store swaps in (IVFIndexStore._recover)
+_STAGE = "_stage"
+
 
 class IVFIndexStore:
     """A built (or loaded) IVF index rooted at ``path``.
@@ -490,8 +493,8 @@ class IVFIndexStore:
     def _cents_collect(self) -> list[tuple[int, list[float], float]]:
         """The codebook as driver rows, collected once per handle (k rows
         — broadcast-sized by definition). Maintenance ops REPLACE the
-        memo with the rows they just wrote; a crash-recovery restore
-        clears it."""
+        memo with the rows they just wrote; _recover clears it when it
+        finishes a codebook swap."""
         if self._cents_rows is None:
             self._cents_rows = [
                 (int(r["cent_id"]), [float(x) for x in r["cemb"]], float(r["cnrm"]))
@@ -736,7 +739,12 @@ class IVFIndexStore:
         scanning ONLY the batch's target cell partitions: assignment is
         deterministic, so a redelivered vec_id always lands in the same
         cell, and the existence probe partition-prunes to the <= |batch|
-        cells the batch touches — never an O(index) rescan per batch."""
+        cells the batch touches — never an O(index) rescan per batch.
+
+        Runs _recover first: rows appended into a cell whose compaction
+        a crash interrupted would be lost when that stage rolls
+        forward."""
+        self._recover()
         e = emb.select("vec_id", "emb").withColumn("nrm", norm(F.col("emb")))
         if idempotent:
             # the at-least-once contract must hold WITHIN a batch too: a
@@ -795,9 +803,11 @@ class IVFIndexStore:
         of writing a dead centroid.
 
         Write order is crash-safe for a live index: the codebook swaps
-        FIRST (write-sibling-tmp + rename, the compact_table pattern —
-        a crash after it leaves a new centroid probing a still-complete
-        old cell, which is benign), then the cell rows move under
+        FIRST (_swap_codebook: a staged write, then storage.replace_dir;
+        _recover rolls a marked stage forward, so a crash at any step
+        leaves the old codebook or the new one — the new one with a new
+        centroid probing a still-complete old cell, which is benign),
+        then the cell rows move under
         dynamic partition overwrite, which replaces exactly the
         partitions present in the written frame — sibling partitions'
         files stay byte-untouched (mtime-asserted in
@@ -812,13 +822,12 @@ class IVFIndexStore:
         centroid now rank the sub-centroids instead."""
         if n_sub < 2:
             raise ValueError(f"split_cell: n_sub must be >= 2, got {n_sub}")
-        # heal crash residue (mid-swap codebook restore, stale tmp/old
-        # dirs, orphan cells) before reading — split's own rename swap
-        # below must never inherit a wedged ._split_old. One centroid
-        # collect serves the heal AND the codebook rewrite (round 11).
-        self._recover_codebook_swap()
+        # finish an interrupted swap and heal orphan cells before
+        # reading; one memoized centroid collect serves the heal AND the
+        # codebook rewrite
+        self._recover()
         old_cents = self._cents_collect()  # k rows, memoized driver copy
-        self._recover_orphan_cells(_known={c for c, _, _ in old_cents})
+        self._recover_orphan_cells()
         rows = (
             self.cells()
             .filter(F.col("cell") == cell)
@@ -894,12 +903,11 @@ class IVFIndexStore:
                 f"index untouched"
             )
 
-        # codebook first, atomically (write sibling tmp + rename — one
-        # write job on a k-row table, no delete-then-write window)
+        # codebook first (one write job on a k-row table)
         cents_rows = [
             (c, list(v), n) for c, v, n in old_cents if c != cell
         ] + sub_rows
-        self._swap_codebook(cents_rows, "split")
+        self._swap_codebook(cents_rows)
 
         from .cc import _scoped_conf
 
@@ -939,31 +947,27 @@ class IVFIndexStore:
         centroid) — a crash after leaves b's rows on disk but
         unreachable (no probe ranks b), a TEMPORARY recall loss, never
         wrong results; (2) rows move into partition a under dynamic
-        partition overwrite; (3) cell=b's directory is renamed out and
-        removed. A crash between (2) and (3) leaves b's rows
-        duplicated on disk but still invisible (b is not in the
-        codebook). Step (0) heals exactly these states: any on-disk
+        partition overwrite; (3) cell=b's directory is deleted. A crash
+        between (2) and (3), or partway through (3), leaves b's rows (or
+        a subset of them) duplicated on disk but still invisible (b is
+        not in the codebook). Step (0) heals exactly these states: any
+        on-disk
         cell absent from the codebook is folded into its nearest
         CURRENT centroid with an anti-join against already-indexed
         vec_ids — so rerunning merge_cells (or calling it for a new
         pair) completes an interrupted merge instead of compounding
         it."""
-        import shutil as _sh
-
         if a == b:
             raise ValueError(f"merge_cells: a == b == {a}")
         a, b = (int(min(a, b)), int(max(a, b)))
-        # one centroid collect serves residue recovery AND the merge
-        # math (round 11 — previously _recover_orphan_cells collected
-        # the ids and this method re-collected the rows: two jobs on
-        # the same k-row table). Swap recovery must still run FIRST so
-        # the collect never reads a mid-rename codebook; orphan healing
-        # moves rows only, never centroids, so the rows stay current.
-        self._recover_codebook_swap()
+        # swap recovery runs FIRST so the collect never reads a codebook
+        # a crash left mid-swap; orphan healing moves rows only, never
+        # centroids, so the memoized rows stay current
+        self._recover()
         cents = {
             c: (v, n) for c, v, n in self._cents_collect()  # memoized k rows
         }
-        self._recover_orphan_cells(_known=set(cents))
+        self._recover_orphan_cells()
         for c in (a, b):
             if c not in cents:
                 raise ValueError(f"merge_cells: cell {c} not in codebook")
@@ -993,8 +997,8 @@ class IVFIndexStore:
             if cid not in (a, b)
         ] + [(a, merged, py_norm(merged))]
 
-        # (1) codebook first, atomic rename swap (split_cell pattern)
-        self._swap_codebook(cents_rows, "merge")
+        # (1) codebook first (split_cell pattern)
+        self._swap_codebook(cents_rows)
 
         # (2) move b's rows into partition a (a's rows rewrite in place
         # with their cell id unchanged; dynamic overwrite touches ONLY
@@ -1017,136 +1021,106 @@ class IVFIndexStore:
             ).partitionBy("cell").parquet(
                 os.path.join(self.path, "cells")
             )
-        # (3) drop b's now-redundant directory (rename-out then remove,
-        # so a reader never lists a half-deleted partition)
-        bdir = os.path.join(self.path, "cells", f"cell={b}")
-        if os.path.isdir(bdir):
-            junk = os.path.join(self.path, f"._merge_drop_cell={b}")
-            # clear residue from a prior interrupted run first: renaming
-            # onto a surviving non-empty junk dir raises ENOTEMPTY
-            _sh.rmtree(junk, ignore_errors=True)
-            os.rename(bdir, junk)
-            _sh.rmtree(junk, ignore_errors=True)
+        # (3) drop b's now-redundant directory: every row in it is now
+        # in a, and b is in no codebook, so no search probes it
+        storage.delete(os.path.join(self.path, "cells", f"cell={b}"))
         self.k = len(cents_rows)
         return self
 
-    def _swap_codebook(self, cents_rows: list, tag: str) -> None:
-        """Replace the codebook with ``cents_rows`` by the rename swap
-        split_cell, merge_cells and drop_empty_cells share: write
-        ``centroids._<tag>_tmp``, rename the old codebook out to
-        ``._<tag>_old``, rename the tmp in, delete the old one. One
-        k-row write job and no delete-then-write window; a kill between
-        the renames is healed by _recover_codebook_swap."""
-        import shutil as _sh
-
+    def _swap_codebook(self, cents_rows: list) -> None:
+        """Replace the codebook with ``cents_rows``: one k-row write job
+        into ``centroids_stage`` (Spark's committer marks it complete
+        with _SUCCESS), then storage.replace_dir. The next _recover
+        finishes a swap a crash interrupted."""
         final = os.path.join(self.path, "centroids")
-        tmp = final + f"._{tag}_tmp"
+        stage = final + _STAGE
         self._local_df(
             cents_rows, "cent_id bigint, cemb array<double>, cnrm double"
-        ).write.mode("overwrite").parquet(tmp)
-        old_dir = final + f"._{tag}_old"
-        os.rename(final, old_dir)
-        os.rename(tmp, final)
-        _sh.rmtree(old_dir, ignore_errors=True)
+        ).write.mode("overwrite").parquet(stage)
+        storage.replace_dir(stage, final)
         # the rows just written ARE the new codebook (memo stays hot)
         self._cents_rows = [
             (int(c), [float(x) for x in v], float(n)) for c, v, n in cents_rows
         ]
 
-    def _recover_codebook_swap(self) -> None:
-        """Crash-residue recovery for the centroid rename swap shared by
-        split_cell and merge_cells (write ._X_tmp → rename(final, ._X_old)
-        → rename(tmp, final) → rmtree(old)). A kill between the two
-        renames leaves ``centroids/`` ABSENT (store unloadable) with the
-        complete old codebook in ._X_old — restore it: the row move had
-        not started, so the old codebook is the consistent one. A kill
-        after the swap leaves stale ._X_old / ._X_tmp dirs that would
-        wedge the NEXT swap's os.rename with ENOTEMPTY — delete them
-        (the post-swap orphan-cell state, if any, is _recover_orphan_
-        cells' job). Mirrors compact_cells' entry-time recovery block."""
-        import shutil as _sh
+    def _recover(self) -> None:
+        """Finish the swap a crash interrupted, before anything reads
+        the codebook or writes the store: storage.recover_dir rolls a
+        marked stage forward and deletes an unmarked one. One listing of
+        the store root finds every stage — ``centroids_stage`` for the
+        codebook, ``cell=X_stage`` for a compaction of ``cells/cell=X``
+        (outside cells/, where partition discovery would parse it as a
+        value). Rolling forward is safe for both: a codebook stage gives
+        the just-after-the-swap state split, merge and drop accept, and
+        a compaction stage holds exactly its cell's rows, because every
+        writer runs this first."""
+        for name in storage.listdir(self.path):
+            if not name.endswith(_STAGE):
+                continue
+            stage = os.path.join(self.path, name)
+            final = name[: -len(_STAGE)]
+            if final == "centroids":
+                storage.recover_dir(stage, os.path.join(self.path, final))
+                self._cents_rows = None  # the codebook may have changed
+                self.k = storage.parquet_rows(os.path.join(self.path, final))
+            elif final.startswith("cell="):
+                storage.recover_dir(
+                    stage, os.path.join(self.path, "cells", final)
+                )
 
-        final = os.path.join(self.path, "centroids")
-        for tag in ("._split", "._merge"):
-            old_dir = final + tag + "_old"
-            tmp = final + tag + "_tmp"
-            if os.path.isdir(old_dir) and not os.path.exists(final):
-                os.rename(old_dir, final)  # mid-swap crash: restore
-                self._cents_rows = None  # on-disk codebook changed
-            else:
-                _sh.rmtree(old_dir, ignore_errors=True)  # post-swap junk
-            _sh.rmtree(tmp, ignore_errors=True)  # tmp is always junk
-
-    def _recover_orphan_cells(
-        self, _known: set[int] | None = None
-    ) -> list[int]:
+    def _recover_orphan_cells(self) -> list[int]:
         """Heal cells present on disk but absent from the codebook (the
-        crash residue class of merge_cells step 1/2): fold each orphan
+        crash residue class of merge_cells steps 1-3): fold each orphan
         cell's rows into their nearest CURRENT centroid, anti-joining
         away vec_ids that are already indexed ANYWHERE (a merge step-2
         crash leaves the orphan's rows duplicated in the SURVIVOR
         partition, whose id need not be any orphan row's nearest current
         centroid — r10 review: filtering the probe to the reassignment's
         target cells missed exactly that state and re-appended
-        duplicates), then drop the orphan directory. The existence probe
-        is a column-pruned vec_id-only scan of the index — acceptable
+        duplicates), then delete the orphan directory. A delete cut
+        short leaves a subset of rows that are all indexed elsewhere,
+        which the next heal's anti-join removes; one that left no
+        parquet file is just deleted. The existence probe is a
+        column-pruned vec_id-only scan of the index — acceptable
         because this is the rare crash-recovery path, never per-search
-        or per-add. Returns the healed cell ids.
-
-        ``_known``: the current codebook's cent_ids, when the caller has
-        ALREADY run _recover_codebook_swap and collected the centroids —
-        split/merge need the full centroid rows themselves, and passing
-        the ids here spares a duplicate collect job on the common
-        no-residue path (round 11)."""
-        import shutil as _sh
-
-        if _known is None:
-            self._recover_codebook_swap()
+        or per-add. Callers run _recover first. Returns the healed cell
+        ids."""
         root = os.path.join(self.path, "cells")
-        if not os.path.isdir(root):
+        if not storage.isdir(root):
             return []
         on_disk = {
             int(e.split("=", 1)[1])
-            for e in os.listdir(root)
+            for e in storage.listdir(root)
             if e.startswith("cell=")
         }
-        known = (
-            set(_known)
-            if _known is not None
-            else {c for c, _, _ in self._cents_collect()}
-        )
-        orphans = sorted(on_disk - known)
+        orphans = sorted(on_disk - {c for c, _, _ in self._cents_collect()})
         if not orphans:
             return []
         cdf = self._cents_local()
         for orph in orphans:
             odir = os.path.join(root, f"cell={orph}")
-            # leaf-dir read: no `cell` partition column; every stored
-            # payload column (incl. PQ codes) is preserved verbatim
-            rows = self.spark.read.parquet(odir).localCheckpoint()
-            assigned = _assign_cells(rows, cdf).localCheckpoint()
-            # all NON-orphan cells: the orphan partitions themselves sit
-            # under cells/, and a bare all-ids probe would see the
-            # orphan's own rows and anti-join the whole heal away (rows
-            # silently lost once the dir drops); other orphans' rows are
-            # excluded too — each gets its own heal iteration
-            existing = (
-                self.cells()
-                .filter(~F.col("cell").isin([int(o) for o in orphans]))
-                .select("vec_id")
-            )
-            assigned.join(existing, "vec_id", "left_anti").repartition(
-                F.col("cell")
-            ).sortWithinPartitions("cell", "vec_id").write.mode(
-                "append"
-            ).partitionBy("cell").parquet(root)
-            junk = os.path.join(self.path, f"._merge_drop_cell={orph}")
-            # a prior interrupted heal/merge can leave this junk path
-            # half-deleted (the rmtree below is ignore_errors) — clear it
-            # first or os.rename wedges with ENOTEMPTY
-            _sh.rmtree(junk, ignore_errors=True)
-            os.rename(odir, junk)
-            _sh.rmtree(junk, ignore_errors=True)
+            if storage.parquet_rows(odir):
+                # leaf-dir read: no `cell` partition column; every stored
+                # payload column (incl. PQ codes) is preserved verbatim
+                rows = self.spark.read.parquet(odir).localCheckpoint()
+                assigned = _assign_cells(rows, cdf).localCheckpoint()
+                # all NON-orphan cells: the orphan partitions themselves
+                # sit under cells/, and a bare all-ids probe would see
+                # the orphan's own rows and anti-join the whole heal away
+                # (rows silently lost once the dir drops); other orphans'
+                # rows are excluded too — each gets its own heal
+                # iteration
+                existing = (
+                    self.cells()
+                    .filter(~F.col("cell").isin([int(o) for o in orphans]))
+                    .select("vec_id")
+                )
+                assigned.join(existing, "vec_id", "left_anti").repartition(
+                    F.col("cell")
+                ).sortWithinPartitions("cell", "vec_id").write.mode(
+                    "append"
+                ).partitionBy("cell").parquet(root)
+            storage.delete(odir)
         return orphans
 
     # -------------------------------------------------- maintenance_plan
@@ -1215,9 +1189,9 @@ class IVFIndexStore:
         root = os.path.join(self.path, "cells")
         for c in sorted(counts):
             d = os.path.join(root, f"cell={c}")
-            if os.path.isdir(d):
+            if storage.isdir(d):
                 nf = sum(
-                    1 for f in os.listdir(d) if f.endswith(".parquet")
+                    1 for f in storage.listdir(d) if f.endswith(".parquet")
                 )
                 if nf > max_files:
                     plan.append(("compact", c, None, nf))
@@ -1256,10 +1230,11 @@ class IVFIndexStore:
         for dead probe slots (a centroid whose list decayed to nothing
         still costs a probe rank and a directory stat on every search).
         Refuses a cell that has rows (that is merge_cells' job) or one
-        absent from the codebook; refuses to drop every cell. Codebook
-        rename-swap only (no row data exists to move), same crash
-        residue class as split/merge — _recover_codebook_swap heals a
-        mid-swap kill at next entry."""
+        absent from the codebook; refuses to drop every cell. A codebook
+        swap only (no row data exists to move), through the same
+        _swap_codebook as split/merge, so the next _recover finishes a
+        swap a crash interrupted."""
+        self._recover()
         self._recover_orphan_cells()
         cents = {
             c: (v, n) for c, v, n in self._cents_collect()  # memoized
@@ -1288,7 +1263,7 @@ class IVFIndexStore:
             for cid, (v, n) in sorted(cents.items())
             if cid not in targets
         ]
-        self._swap_codebook(cents_rows, "merge")
+        self._swap_codebook(cents_rows)
         self.k = len(cents_rows)
         return self
 
@@ -1305,69 +1280,47 @@ class IVFIndexStore:
         per inverted list was the fix; add() erodes it back).
 
         Per-cell swap semantics: each targeted cell directory is fully
-        rewritten to a tmp OUTSIDE cells/ and swapped in by two renames,
-        so a reader never sees a half-compacted MIX of old and new
-        files; the honest residual is the instant between the renames,
-        where the cell directory is briefly absent (a crash there
-        leaves the complete old cell in ._compact_old_*, which the
-        NEXT compact_cells call restores automatically before doing
-        any new work — never silent data loss, and stale residue can
-        never wedge later maintenance with ENOTEMPTY). Every
-        NON-targeted cell's
-        files stay byte-untouched (mtime-asserted in tests). Contents
-        are preserved verbatim (the rows only change file grouping);
-        search results are therefore bit-identical, no probe map
-        needed. Default: every cell above ``max_files`` fragments; pass
-        ``cells`` to target known-hot lists (e.g. the ones
+        rewritten to a stage OUTSIDE cells/ and swapped in by
+        storage.replace_dir, so a reader never sees a half-compacted MIX
+        of old and new files; the honest residual is the instant between
+        the delete and the move, where the cell directory is briefly
+        absent. A crash there leaves the complete, marked stage, which
+        the next _recover (the first step of every mutating call and of
+        load) rolls forward — never silent data loss. Every NON-targeted
+        cell's files stay byte-untouched (mtime-asserted in tests).
+        Contents are preserved verbatim (the rows only change file
+        grouping); search results are therefore bit-identical, no probe
+        map needed. Default: every cell above ``max_files`` fragments;
+        pass ``cells`` to target known-hot lists (e.g. the ones
         q_stream_emb_index's pipeline appends to).
 
         Returns {cell: (files_before, files_after)} for the rewritten
         cells. When some cells fail, every other cell still finishes and
         CompactCellsError carries both the report of the cells that were
         swapped in and the failed cells, whose directories keep their
-        old files (or, after a failure between the two renames, have
-        them restored by the next call). The driver loop is bounded by
-        k (the codebook size), never by corpus rows — same budget class as search's probe
-        collect. Cell rewrites run CONCURRENTLY from a small driver
-        thread pool (guide §2.6 — the per-cell jobs are independent:
-        disjoint directories, disjoint rename targets, and Spark's
-        scheduler happily overlaps them, so wall time is the slowest
-        cell, not the sum of k scheduling floors; measured 16 serial
-        jobs ≈ 4.6 s → overlapped for the 8-cell stream query). Swap
-        semantics per cell are unchanged — each thread performs its own
-        write → rename → rename sequence on paths no other thread
-        touches."""
-        import shutil as _sh
+        old files (or, after a failure between the delete and the move,
+        get the compacted ones from the next call's _recover). The
+        driver loop is bounded by k (the codebook size), never by corpus
+        rows — same budget class as search's probe collect. Cell
+        rewrites run CONCURRENTLY from a small driver thread pool (guide
+        §2.6 — the per-cell jobs are independent: disjoint directories,
+        disjoint stages, and Spark's scheduler happily overlaps them, so
+        wall time is the slowest cell, not the sum of k scheduling
+        floors; measured 16 serial jobs ≈ 4.6 s → overlapped for the
+        8-cell stream query). Each thread performs its own write → swap
+        sequence on paths no other thread touches."""
         from concurrent.futures import ThreadPoolExecutor
 
+        self._recover()
         root = os.path.join(self.path, "cells")
-        if not os.path.isdir(root):
+        if not storage.isdir(root):
             return {}
 
-        # Crash-residue recovery BEFORE any new work (review r10): a
-        # kill between the two renames leaves the cell directory absent
-        # with its complete contents in ._compact_old_* — restore it
-        # (otherwise searches silently omit that inverted list); a kill
-        # after the swap leaves a stale old/tmp dir that would fail the
-        # next rename with ENOTEMPTY — delete it. Recovery scans ALL
-        # residue, not just this call's targets, so one interrupted run
-        # can never wedge later maintenance.
-        for name in sorted(os.listdir(self.path)):
-            full = os.path.join(self.path, name)
-            if name.startswith("._compact_old_cell="):
-                cdir = os.path.join(root, name[len("._compact_old_") :])
-                if not os.path.exists(cdir):
-                    os.rename(full, cdir)  # pre-swap crash: restore
-                else:
-                    _sh.rmtree(full, ignore_errors=True)  # post-swap junk
-            elif name.startswith("._compact_tmp_cell="):
-                _sh.rmtree(full, ignore_errors=True)  # tmp is always junk
-
         def _files(d: str) -> list[str]:
-            return [f for f in os.listdir(d) if f.endswith(".parquet")]
+            return [f for f in storage.listdir(d) if f.endswith(".parquet")]
 
         todo: list[tuple[int, str, int]] = []
-        for entry in sorted(os.listdir(root)):
+        for entry in sorted(storage.listdir(root)):
             if not entry.startswith("cell="):
                 continue
             cell = int(entry.split("=", 1)[1])
@@ -1384,11 +1337,7 @@ class IVFIndexStore:
         def _rewrite(job: tuple[int, str, int]) -> tuple[int, int, int]:
             cell, entry, n_before = job
             cdir = os.path.join(root, entry)
-            # tmp/old live OUTSIDE cells/: a sibling directory named
-            # `cell=3._compact_old` would parse as a partition VALUE
-            # during discovery and poison every read of the table
-            tmp = os.path.join(self.path, f"._compact_tmp_{entry}")
-            old = os.path.join(self.path, f"._compact_old_{entry}")
+            stage = os.path.join(self.path, entry + _STAGE)
             # a per-cell read has no `cell` column (it IS the directory);
             # coalesce not repartition: no shuffle, just fewer writers;
             # the per-partition sort restores vec_id clustering that
@@ -1397,10 +1346,8 @@ class IVFIndexStore:
                 max_files
             ).sortWithinPartitions("vec_id").write.mode(
                 "overwrite"
-            ).parquet(tmp)
-            os.rename(cdir, old)
-            os.rename(tmp, cdir)
-            _sh.rmtree(old, ignore_errors=True)
+            ).parquet(stage)
+            storage.replace_dir(stage, cdir)
             return cell, n_before, len(_files(cdir))
 
         with ThreadPoolExecutor(max_workers=min(8, len(todo))) as pool:
@@ -1426,11 +1373,11 @@ class IVFIndexStore:
     # ------------------------------------------------------------- load
     @staticmethod
     def load(spark: SparkSession, path: str) -> "IVFIndexStore":
+        """The store at ``path``, after _recover finishes any swap a
+        crash interrupted (a codebook swap cut after its delete leaves
+        centroids/ absent until then)."""
         store = IVFIndexStore(spark, path, 0)
-        # a kill between a maintenance swap's two renames leaves
-        # centroids/ absent with the old codebook in ._split_old /
-        # ._merge_old — restore it so a crashed store stays loadable
-        store._recover_codebook_swap()
+        store._recover()
         # footer-metadata count (zero jobs — round 12)
         store.k = storage.parquet_rows(os.path.join(path, "centroids"))
         return store
@@ -1446,7 +1393,7 @@ class IVFIndexStore:
         if self._pq_book_df is not None:
             return self._pq_book_df
         p = os.path.join(self.path, "pq")
-        if not os.path.isdir(p):
+        if not storage.isdir(p):
             return None
         self._pq_book_df = self.spark.read.parquet(p)
         return self._pq_book_df
@@ -1469,7 +1416,7 @@ class IVFIndexStore:
             df = self.spark.read.parquet(os.path.join(self.path, "cells"))
         except AnalysisException:
             schema = self._CELLS_SCHEMA
-            if os.path.isdir(os.path.join(self.path, "pq")):
+            if storage.isdir(os.path.join(self.path, "pq")):
                 # a PQ store's empty frame carries the codes column too,
                 # so both branches return one schema
                 schema = schema.replace(

@@ -16,6 +16,8 @@ from esvc_spark.queries.embeddings import (
     q_emb_ivf_knn,
 )
 
+from .conftest import PATH_FORMS, path_in_form
+
 
 @pytest.fixture(scope="module")
 def store(spark, sf_dir, tmp_path_factory):
@@ -570,11 +572,11 @@ def test_compact_cells_defragments_preserving_content_and_siblings(
 
 
 def test_compact_cells_recovers_crash_residue(spark, tmp_path):
-    """Review r10: a kill between compact's two renames leaves the cell
-    dir ABSENT (its contents complete in ._compact_old_*) — the next
-    compact_cells must restore it before any new work, or searches
-    silently omit an inverted list; post-swap residue (stale old/tmp
-    dirs) must be cleaned, or the next rename dies ENOTEMPTY."""
+    """A compaction cut between its delete and its move leaves the cell
+    dir ABSENT beside its complete, marked stage — the next
+    compact_cells must roll it forward before any new work, or searches
+    silently omit an inverted list; an unmarked stage (a write cut
+    short) must be deleted, never swapped in."""
     import os
     import shutil
 
@@ -586,31 +588,33 @@ def test_compact_cells_recovers_crash_residue(spark, tmp_path):
     before = sorted(
         (r["vec_id"], tuple(r["emb"]), r["cell"]) for r in st.cells().collect()
     )
-    cells_root = tmp_path / "ridx" / "cells"
+    store_root = tmp_path / "ridx"
+    cells_root = store_root / "cells"
     victims = sorted(
         int(e.split("=")[1])
         for e in os.listdir(cells_root)
         if e.startswith("cell=")
     )[:2]
-    # pre-swap crash on victim 0: cell dir moved to old, nothing swapped in
+    # (a) cut after the delete on victim 0: its cell dir is gone, its
+    # complete stage (marked with _SUCCESS) sits beside cells/
     v0 = victims[0]
-    os.rename(cells_root / f"cell={v0}", tmp_path / "ridx" / f"._compact_old_cell={v0}")
-    # post-swap crash on victim 1: cell dir present, stale old + tmp remain
+    stage0 = store_root / f"cell={v0}_stage"
+    shutil.copytree(cells_root / f"cell={v0}", stage0)
+    (stage0 / "_SUCCESS").write_bytes(b"")
+    shutil.rmtree(cells_root / f"cell={v0}")
+    # (b) cut during the stage write on victim 1: its cell dir is
+    # intact, beside an unmarked stage holding a partial file
     v1 = victims[1]
-    shutil.copytree(
-        cells_root / f"cell={v1}", tmp_path / "ridx" / f"._compact_old_cell={v1}"
-    )
-    os.makedirs(tmp_path / "ridx" / f"._compact_tmp_cell={v1}")
-    (tmp_path / "ridx" / f"._compact_tmp_cell={v1}" / "junk.parquet").write_bytes(b"x")
+    stage1 = store_root / f"cell={v1}_stage"
+    os.makedirs(stage1)
+    (stage1 / "junk.parquet").write_bytes(b"x")
 
     st.compact_cells()  # recovery runs first, then normal compaction
     after = sorted(
         (r["vec_id"], tuple(r["emb"]), r["cell"]) for r in st.cells().collect()
     )
     assert after == before  # victim 0's rows are back; nothing lost
-    residue = [
-        e for e in os.listdir(tmp_path / "ridx") if e.startswith("._compact_")
-    ]
+    residue = [e for e in os.listdir(store_root) if e.endswith("_stage")]
     assert residue == []
     # and the recovered store still compacts/serves normally
     q = emb.filter(F.col("vec_id") < 3).select(
@@ -619,61 +623,150 @@ def test_compact_cells_recovers_crash_residue(spark, tmp_path):
     assert st.search(q, nprobe=2, topk=3).count() > 0
 
 
+def _fragmented_store(spark, path):
+    """A k=3 store whose three cells each hold more than one file."""
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [(i, [float(i % 9), float(i % 4) + 0.5]) for i in range(lo, hi)],
+            "vec_id long, emb array<double>",
+        )
+
+    st = IVFIndexStore.build(spark, rows(0, 30), path, k=3)
+    for lo in range(30, 60, 6):
+        st.add(rows(lo, lo + 6))
+    return st
+
+
+def _cell_files(root, cell):
+    """{parquet file name: bytes} of cells/cell=<cell> under `root`."""
+    import os
+
+    d = root / f"cell={cell}"
+    return {
+        f: (d / f).read_bytes() for f in os.listdir(d) if f.endswith(".parquet")
+    }
+
+
+def _cell_rows(st):
+    return sorted(
+        (r["vec_id"], tuple(r["emb"]), r["cell"]) for r in st.cells().collect()
+    )
+
+
 def test_compact_cells_partial_failure_keeps_report(
     spark, tmp_path, monkeypatch
 ):
     """One cell's swap fails among three fragmented cells: the other two
     still end compacted and appear in the error's report, and the failed
     cell's files stay byte-untouched."""
-    import os
-
+    from esvc_spark.core import storage
     from esvc_spark.operators.ann_store import CompactCellsError
 
-    emb = spark.createDataFrame(
-        [(i, [float(i % 9), float(i % 4) + 0.5]) for i in range(30)],
-        "vec_id long, emb array<double>",
-    )
-    st = IVFIndexStore.build(spark, emb, str(tmp_path / "pidx"), k=3)
-    for lo in range(30, 60, 6):
-        st.add(
-            spark.createDataFrame(
-                [
-                    (i, [float(i % 9), float(i % 4) + 0.5])
-                    for i in range(lo, lo + 6)
-                ],
-                "vec_id long, emb array<double>",
-            )
-        )
+    st = _fragmented_store(spark, str(tmp_path / "pidx"))
     root = tmp_path / "pidx" / "cells"
 
     def files(cell):
-        d = root / f"cell={cell}"
-        return {
-            f: (d / f).read_bytes()
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        }
+        return _cell_files(root, cell)
 
     frag = {c: len(files(c)) for c in range(3)}
     assert all(n > 1 for n in frag.values()), frag
     victim = 1
     before = files(victim)
-    real_rename = os.rename
+    real_replace = storage.replace_dir
 
-    def failing_rename(src, dst):
-        if str(src).endswith(f"cell={victim}"):
-            raise OSError(f"injected failure moving {src}")
-        return real_rename(src, dst)
+    def failing_replace(stage, final):
+        # fails before the swap's first filesystem step
+        if final.endswith(f"cell={victim}"):
+            raise OSError(f"injected failure swapping {stage}")
+        return real_replace(stage, final)
 
-    monkeypatch.setattr(os, "rename", failing_rename)
+    monkeypatch.setattr(storage, "replace_dir", failing_replace)
     with pytest.raises(CompactCellsError) as exc:
         st.compact_cells()
-    monkeypatch.setattr(os, "rename", real_rename)
+    monkeypatch.setattr(storage, "replace_dir", real_replace)
     err = exc.value
     assert set(err.failed) == {victim}
     assert err.report == {c: (frag[c], 1) for c in (0, 2)}
     assert all(len(files(c)) == 1 for c in (0, 2))
     assert files(victim) == before
+
+
+def test_compact_cells_failure_after_delete_rolls_forward(
+    spark, tmp_path, monkeypatch
+):
+    """One cell's swap fails after its delete, at the move: its cell dir
+    is absent, and the next compact_cells rolls its stage forward — one
+    file, every row unchanged."""
+    from esvc_spark.core import storage
+    from esvc_spark.operators.ann_store import CompactCellsError
+
+    st = _fragmented_store(spark, str(tmp_path / "fidx"))
+    root = tmp_path / "fidx" / "cells"
+    frag = {c: len(_cell_files(root, c)) for c in range(3)}
+    assert all(n > 1 for n in frag.values()), frag
+    before = _cell_rows(st)
+    victim = 1
+    real_move = storage._move
+
+    def failing_move(fs, src, dst):
+        if dst.endswith(f"cell={victim}"):
+            raise OSError(f"injected failure moving {src}")
+        return real_move(fs, src, dst)
+
+    monkeypatch.setattr(storage, "_move", failing_move)
+    with pytest.raises(CompactCellsError) as exc:
+        st.compact_cells()
+    monkeypatch.setattr(storage, "_move", real_move)
+    err = exc.value
+    assert set(err.failed) == {victim}
+    assert err.report == {c: (frag[c], 1) for c in (0, 2)}
+    assert not (root / f"cell={victim}").exists()
+
+    assert st.compact_cells() == {}  # nothing left fragmented
+    assert len(_cell_files(root, victim)) == 1
+    assert _cell_rows(st) == before
+
+
+def test_add_after_interrupted_compact_keeps_every_vector(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction killed at the victim's move leaves the victim's cell
+    dir absent beside its marked stage. An add() of vectors that land in
+    that cell, then the next compact_cells, must keep every vec_id
+    exactly once: add() recovers first, so its append goes into the
+    rolled-forward cell instead of being replaced by the stage (or the
+    stage being thrown away for it)."""
+    from esvc_spark.core import storage
+
+    st = _fragmented_store(spark, str(tmp_path / "aidx"))
+    root = tmp_path / "aidx" / "cells"
+    victim = 1
+    embs = [
+        list(r["emb"])
+        for r in st.cells().filter(F.col("cell") == victim).limit(3).collect()
+    ]
+    ids = sorted(r["vec_id"] for r in st.cells().collect())
+    real_move = storage._move
+
+    def killing_move(fs, src, dst):
+        if dst.endswith(f"cell={victim}"):
+            raise _Kill(f"kill before moving {src}")
+        return real_move(fs, src, dst)
+
+    monkeypatch.setattr(storage, "_move", killing_move)
+    with pytest.raises(_Kill):
+        st.compact_cells()
+    monkeypatch.setattr(storage, "_move", real_move)
+    assert not (root / f"cell={victim}").exists()
+
+    # equal embeddings assign to the same cell: the victim
+    new = [(1000 + j, e) for j, e in enumerate(embs)]
+    st.add(spark.createDataFrame(new, "vec_id long, emb array<double>"))
+    st.compact_cells()
+    cells = {int(r["vec_id"]): int(r["cell"]) for r in st.cells().collect()}
+    assert {cells[i] for i, _ in new} == {victim}
+    got = sorted(r["vec_id"] for r in st.cells().collect())
+    assert got == sorted(ids + [i for i, _ in new])
 
 
 def _inventory(st):
@@ -869,10 +962,10 @@ def test_orphan_heal_skips_ids_duplicated_in_any_cell(spark, tmp_path):
 
 
 def test_codebook_swap_crash_recovery(spark, tmp_path):
-    """Review r10 (low): a kill between the codebook swap's two renames
-    leaves centroids/ ABSENT (old codebook complete in ._merge_old) —
-    load() must restore it; stale post-swap residue (non-empty old/tmp
-    dirs) must not wedge the next maintenance rename with ENOTEMPTY."""
+    """A codebook swap cut after its delete leaves centroids/ ABSENT
+    beside its complete, marked stage — load() must roll it forward; a
+    stale unmarked stage (a write cut short) must not stop the next
+    maintenance swap."""
     import os
     import shutil
 
@@ -884,22 +977,23 @@ def test_codebook_swap_crash_recovery(spark, tmp_path):
     k0 = st.k
     inv = _inventory(st)
     final = str(tmp_path / "swap" / "centroids")
+    stage = final + "_stage"
 
-    # mid-swap crash: centroids/ gone, old codebook in ._merge_old,
-    # fully-written new codebook stranded in ._merge_tmp
-    shutil.copytree(final, final + "._merge_tmp")
-    os.rename(final, final + "._merge_old")
+    # cut after the delete: centroids/ gone, the complete stage (Spark's
+    # committer marked it with _SUCCESS) left beside it
+    shutil.copytree(final, stage)
+    assert os.path.exists(os.path.join(stage, "_SUCCESS"))
+    shutil.rmtree(final)
     re = IVFIndexStore.load(spark, str(tmp_path / "swap"))
     assert re.k == k0 and _inventory(re) == inv
     assert os.path.isdir(final)
-    assert not os.path.exists(final + "._merge_old")
-    assert not os.path.exists(final + "._merge_tmp")
+    assert not os.path.exists(stage)
 
-    # post-swap residue: stale non-empty old+tmp dirs for BOTH tags must
-    # be cleared at entry, not crash the swap's os.rename
-    for tag in ("._merge", "._split"):
-        shutil.copytree(final, final + tag + "_old")
-        shutil.copytree(final, final + tag + "_tmp")
+    # cut during the stage write: an unmarked stage holding a partial
+    # file must be cleared at entry, not swapped in
+    os.makedirs(stage)
+    with open(os.path.join(stage, "junk.parquet"), "wb") as f:
+        f.write(b"x")
     sizes = {
         int(r["cell"]): int(r["n"])
         for r in re.cells().groupBy("cell").agg(F.count("*").alias("n")).collect()
@@ -908,38 +1002,81 @@ def test_codebook_swap_crash_recovery(spark, tmp_path):
     re.merge_cells(int(min(cold)), int(max(cold)))
     assert re.k == k0 - 1
     assert _inventory(re) == inv
-    residue = [
-        e
-        for e in os.listdir(tmp_path / "swap")
-        if "._merge" in e or "._split" in e
-    ]
+    residue = [e for e in os.listdir(tmp_path / "swap") if e.endswith("_stage")]
     assert residue == []
 
 
-def test_merge_survives_stale_drop_dir_residue(spark, tmp_path):
-    """Review r10 (low): a prior interrupted run can leave a non-empty
-    ._merge_drop_cell={b} junk dir; the next merge's rename-out of b's
-    directory must clear it first instead of dying ENOTEMPTY."""
+def _cut_delete(monkeypatch, keep_parquet: bool):
+    """Make the next storage.delete die partway through a directory:
+    it removes the directory's first parquet file (keep_parquet) or all
+    of them, leaves the rest, and raises _Kill."""
     import os
 
-    emb = spark.createDataFrame(
-        [(i, [float(i % 5) + 0.1, float(i % 3) + 0.4]) for i in range(24)],
-        "vec_id long, emb array<double>",
-    )
-    st = IVFIndexStore.build(spark, emb, str(tmp_path / "junk"), k=4)
-    inv = _inventory(st)
+    from esvc_spark.core import storage
+
+    def cut(path):
+        names = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        for f in names[:1] if keep_parquet else names:
+            os.remove(os.path.join(path, f))
+        raise _Kill(f"kill partway through deleting {path}")
+
+    monkeypatch.setattr(storage, "delete", cut)
+
+
+def _half_dropped_merge(spark, tmp_path, monkeypatch, keep_parquet: bool):
+    """Merge the two coldest cells of a fragmented store, killed partway
+    through step 3's delete of cell=b. Returns (store, every vec_id, b)."""
+    import os
+
+    st = _fragmented_store(spark, str(tmp_path / "half"))
+    ids = sorted(r["vec_id"] for r in st.cells().collect())
     sizes = {
         int(r["cell"]): int(r["n"])
         for r in st.cells().groupBy("cell").agg(F.count("*").alias("n")).collect()
     }
-    cold = sorted(sizes, key=lambda c: (sizes[c], c))[:2]
-    a, b = int(min(cold)), int(max(cold))
-    junk = tmp_path / "junk" / f"._merge_drop_cell={b}"
-    os.makedirs(junk)
-    (junk / "stale.parquet").write_bytes(b"x")
-    st.merge_cells(a, b)
-    assert _inventory(st) == inv
-    assert not os.path.exists(junk)
+    a, b = sorted(sorted(sizes, key=lambda c: (sizes[c], c))[:2])
+    bdir = tmp_path / "half" / "cells" / f"cell={b}"
+    n_files = len(_cell_files(bdir.parent, b))
+    assert n_files > 1
+    _cut_delete(monkeypatch, keep_parquet)
+    with pytest.raises(_Kill):
+        st.merge_cells(a, b)
+    monkeypatch.undo()
+    # b is out of the codebook and its rows are duplicated in a
+    assert b not in {int(r["cent_id"]) for r in st.centroids().collect()}
+    in_a = {
+        r["vec_id"] for r in st.cells().filter(F.col("cell") == a).collect()
+    }
+    assert len(in_a) == sizes[a] + sizes[b]
+    left = len(_cell_files(bdir.parent, b))
+    assert left == (n_files - 1 if keep_parquet else 0) and os.path.isdir(bdir)
+    return st, ids, b
+
+
+def test_merge_survives_stale_drop_dir_residue(spark, tmp_path, monkeypatch):
+    """A merge killed partway through deleting cell=b leaves a subset of
+    b's files: b is absent from the codebook and its rows are already in
+    a. The next merge_cells heals it first and leaves every vec_id
+    exactly once."""
+    st, ids, b = _half_dropped_merge(spark, tmp_path, monkeypatch, True)
+    c, d = sorted(int(r["cent_id"]) for r in st.centroids().collect())[:2]
+    st.merge_cells(c, d)
+    assert sorted(r["vec_id"] for r in st.cells().collect()) == ids
+    assert not (tmp_path / "half" / "cells" / f"cell={b}").exists()
+
+
+def test_orphan_heal_deletes_drop_dir_left_without_parquet(
+    spark, tmp_path, monkeypatch
+):
+    """A delete killed after the last parquet file of cell=b leaves a
+    directory Spark cannot read (no file to infer a schema from); the
+    heal deletes it instead of failing every later merge, split and
+    drop."""
+    st, ids, b = _half_dropped_merge(spark, tmp_path, monkeypatch, False)
+    re = IVFIndexStore.load(spark, st.path)
+    assert re._recover_orphan_cells() == [b]
+    assert sorted(r["vec_id"] for r in re.cells().collect()) == ids
+    assert not (tmp_path / "half" / "cells" / f"cell={b}").exists()
 
 
 class _Kill(BaseException):
@@ -947,17 +1084,27 @@ class _Kill(BaseException):
     inside the op can swallow it."""
 
 
+# kills fired by test_maintenance_kill_point_interleaving's schedule when
+# it injected them through os.rename, before the store's swaps went
+# through core.storage
+_RENAME_ERA_KILLS = 3
+
+
 def test_maintenance_kill_point_interleaving(spark, tmp_path):
     """VERDICT r10 #5: randomized kill points over an interleaved
-    add/split/merge/compact schedule. After every kill the store must
-    heal (load + _recover_orphan_cells + compact_cells) to an inventory
-    with every indexed vector exactly once, and at the end its
-    exhaustive-probe search must be IDENTICAL to a fresh build over the
-    same corpus — the search-identical reload invariant the individual
-    crash tests can't cover across op interactions."""
+    add/split/merge/compact schedule, each kill at the N-th call to
+    storage._move or storage._delete (the filesystem steps of every
+    swap and drop). After every kill the store must heal (load +
+    _recover_orphan_cells + compact_cells) to an inventory with every
+    indexed vector exactly once, and at the end its exhaustive-probe
+    search must be IDENTICAL to a fresh build over the same corpus —
+    the search-identical reload invariant the individual crash tests
+    can't cover across op interactions."""
+    import itertools
     import math
-    import os as _os
     import random
+
+    from esvc_spark.core import storage
 
     rng = random.Random(411)
     # distinct-angle unit-ish vectors: no parallel pair, so split_cell's
@@ -972,30 +1119,35 @@ def test_maintenance_kill_point_interleaving(spark, tmp_path):
     path = str(tmp_path / "kp")
     st = IVFIndexStore.build(spark, emb, path, k=4)
 
-    real_rename = _os.rename
+    real_move, real_delete = storage._move, storage._delete
+    kills = []
 
     def run_with_kill(op, kill_at):
-        """Run op() with os.rename raising on the kill_at-th call
-        (0 = no kill). Returns True if the op completed."""
+        """Run op() with the kill_at-th storage._move/_delete call
+        raising (0 = no kill). Returns True if the op completed."""
         if kill_at == 0:
             op()
             return True
-        calls = {"n": 0}
+        calls = itertools.count(1)  # next() is atomic across threads
 
-        def killing_rename(src, dst):
-            calls["n"] += 1
-            if calls["n"] == kill_at:
-                raise _Kill(f"kill at rename #{kill_at}: {src} -> {dst}")
-            return real_rename(src, dst)
+        def killing(real):
+            def step(*args):
+                n = next(calls)
+                if n == kill_at:
+                    raise _Kill(f"kill at storage step #{n}: {args[1:]}")
+                return real(*args)
 
-        _os.rename = killing_rename
+            return step
+
+        storage._move, storage._delete = killing(real_move), killing(real_delete)
         try:
             op()
             return True
         except _Kill:
+            kills.append((op_name, kill_at))
             return False
         finally:
-            _os.rename = real_rename
+            storage._move, storage._delete = real_move, real_delete
 
     def heal():
         s = IVFIndexStore.load(spark, path)
@@ -1037,6 +1189,8 @@ def test_maintenance_kill_point_interleaving(spark, tmp_path):
         st = heal()
         ids = sorted(r["vec_id"] for r in st.cells().collect())
         assert ids == sorted(c[0] for c in corpus), f"step {step} ({op_name})"
+    print(f"kill-point schedule: {len(kills)} kills fired (op, N): {kills}")
+    assert len(kills) >= _RENAME_ERA_KILLS
 
     # end-state search identity vs a fresh build over the same corpus
     full = spark.createDataFrame(corpus, "vec_id long, emb array<double>")
@@ -1285,13 +1439,17 @@ def test_train_pq_book_sample_mod_is_deterministic_slice(spark):
     assert b1 == b3
 
 
-def test_maintenance_plan_and_apply(spark, tmp_path):
+@pytest.mark.parametrize("form", PATH_FORMS)
+def test_maintenance_plan_and_apply(spark, tmp_path, clean_cwd, form):
     """maintenance_plan emits the integer-exact triad decision
     (split hot / merge-or-drop cold / compact fragmented) and
     apply_plan executes it: dead pairs route to drop_empty_cells
     (merge_cells refuses empty-empty), the store reloads with the
-    smaller codebook, and every vector stays served."""
+    smaller codebook, and every vector stays served — whether the store
+    is named by a plain path or a `file:` URI."""
     from esvc_spark.operators.ann_store import IVFIndexStore
+
+    path = path_in_form(tmp_path / "plan", form)
 
     emb = _pq_emb(spark, n=60)
     # codebook: 4 real centroids + two DEAD slots — 2x-scaled copies of
@@ -1306,8 +1464,7 @@ def test_maintenance_plan_and_apply(spark, tmp_path):
             F.transform("emb", lambda x: x * F.lit(2.0)).alias("cemb"),
         )
     )
-    st = IVFIndexStore.build(spark, emb, str(tmp_path / "plan"), k=4,
-                             centroids=cents)
+    st = IVFIndexStore.build(spark, emb, path, k=4, centroids=cents)
     counts = {int(r["cent_id"]): 0
               for r in st.centroids().select("cent_id").collect()}
     for r in st.cells().groupBy("cell").count().collect():
@@ -1341,7 +1498,7 @@ def test_maintenance_plan_and_apply(spark, tmp_path):
     # real merges fold one id away each, splits add one centroid each
     # (NOTE: split reuses freed ids, so identity assertions on 4/5
     # would be wrong — count instead)
-    re = IVFIndexStore.load(spark, str(tmp_path / "plan"))
+    re = IVFIndexStore.load(spark, path)
     ids = {int(r["cent_id"]) for r in re.centroids().select("cent_id").collect()}
     assert (
         re.k
@@ -1362,6 +1519,7 @@ def test_maintenance_plan_and_apply(spark, tmp_path):
         F.col("vec_id").alias("query_id"), "emb"
     )
     assert re.search(q, nprobe=re.k, topk=3).count() == 9
+    assert not (clean_cwd / "file:").exists()
 
 
 def test_drop_empty_cells_guards(spark, tmp_path):

@@ -261,11 +261,14 @@ def test_m_import_unknown_command_reports_and_survives(tmp_path):
 def test_m_import_conflicting_branch_reports_and_survives(tmp_path):
     """A branch whose event cannot be re-shelved onto ours without
     changing its hard dependencies (HashChangeAtMerge) reports `?m<:`
-    and keeps the session."""
+    and keeps the session, without the branch's events: a later `w`
+    must not save what the failed merge imported."""
     ref = _reference_file(tmp_path, "theirs.exvc.zst", 0)
     r = Repl()
     _drive(r, [("$a", ["ours"])])
+    n_events = len(r.graph.events)
     out = io.StringIO()
     assert r.handle_line(f"m< {ref}", out, lambda: [])
     assert out.getvalue().startswith("?m<:")
     assert list(r.materialize()) == ["ours"]
+    assert len(r.graph.events) == n_events

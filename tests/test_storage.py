@@ -54,6 +54,8 @@ _SEAM_MODULES = [
     "core/spark_engine.py",
     "core/engines.py",
     "streaming/pipelines.py",
+    "operators/ann_store.py",
+    "sources/io.py",
 ]
 _FORBIDDEN_CALLS = {
     "os.listdir",
