@@ -16,7 +16,6 @@ ExEngine (default) or the Spark-backed one; the REPL logic is identical
 
 from __future__ import annotations
 
-import subprocess
 import sys
 from typing import Callable, TextIO
 
@@ -42,7 +41,6 @@ _GRAPH_IO_ERRORS = (
     RuntimeError,
     OSError,
     KeyError,
-    subprocess.CalledProcessError,
 )
 
 
@@ -186,11 +184,11 @@ class Repl:
             from .core.store import save_graph
 
             # user errors (non-editor args from a merged-in registry
-            # session, missing zstd binary, unwritable path, a failing
-            # zstd subprocess, a graph the store cannot hold) must report
-            # like every other bad REPL input — an escaped exception
-            # would kill the session and its unsaved events. A failed
-            # save_graph leaves the previous save intact.
+            # session, unwritable path, a path no filesystem serves, a
+            # graph the store cannot hold) must report like every other
+            # bad REPL input — an escaped exception would kill the
+            # session and its unsaved events. A failed save_graph
+            # leaves the previous save intact.
             try:
                 if target.endswith((".zst", ".exvc")) or (
                     line == "w" and not storage.isdir(target)
@@ -216,12 +214,12 @@ class Repl:
             # editor parser — a typo'd path would masquerade as a syntax
             # error.
             # same containment contract as `w`: a corrupt/truncated file,
-            # a missing zstd binary, a path no filesystem serves, a graph
-            # whose heads reference unknown events (DependencyNotFound et
-            # al.), whose events use a command this engine lacks, or
-            # whose branch cannot be re-shelved onto ours (WorkCacheError)
-            # reports per-line like the reference REPL (main.rs loop)
-            # instead of killing the session with its unsaved events
+            # a path no filesystem serves, a graph whose heads reference
+            # unknown events (DependencyNotFound et al.), whose events
+            # use a command this engine lacks, or whose branch cannot be
+            # re-shelved onto ours (WorkCacheError) reports per-line like
+            # the reference REPL (main.rs loop) instead of killing the
+            # session with its unsaved events
             try:
                 if storage.exists(target):
                     self.merge_from(target, spark)

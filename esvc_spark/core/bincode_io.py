@@ -49,19 +49,22 @@ order, translating each event's dep keys through the old→new map. The
 translation is total and structure-preserving; only the id scheme
 changes.
 
-zstd framing goes through the system `zstd` binary (the frames exvc
-writes are streaming frames without a content-size header, which
-one-shot in-process decoders refuse).
+The file reaches disk through core.storage (so a `file:` URI names the
+same file Spark's Hadoop `Path` would) and its zstd frame goes through
+pyarrow's bundled codec. A streaming decoder reads the frames exvc
+writes, which carry no content-size header; corrupt or truncated input
+raises OSError.
 """
 
 from __future__ import annotations
 
 import io
-import shutil
 import struct
-import subprocess
 from typing import Any, Callable
 
+import pyarrow as pa
+
+from . import storage
 from .graph import Event, Graph, HashCollision, IncludeSpec
 from .hashing import calculate_hash
 
@@ -270,27 +273,26 @@ def reference_event_hash(ev: Event) -> bytes:
     return calculate_hash(encode_event(ev))
 
 
-def decode_graph(data: bytes, verify_hashes: bool = True) -> Graph:
+def decode_graph(data: bytes) -> Graph:
     """Decode a bincode `Graph<Command>` byte string into a Graph whose
-    keys are the file's OWN (reference-scheme) event ids. With
-    `verify_hashes` every event is re-encoded and re-hashed and must
-    reproduce its map key — the reference's own identity invariant —
-    which catches both corrupted files and any codec drift."""
+    keys are the file's OWN (reference-scheme) event ids. Every event is
+    re-encoded and re-hashed and must reproduce its map key — the
+    reference's own identity invariant — which catches both corrupted
+    files and any codec drift."""
     r = _Reader(data)
     g = Graph()
     n_events = r.u64()
     for _ in range(n_events):
         h = _read_hash(r)
         ev = _read_event(r)
-        if verify_hashes:
-            got = reference_event_hash(ev)
-            if got != h:
-                from .hashing import format_hash
+        got = reference_event_hash(ev)
+        if got != h:
+            from .hashing import format_hash
 
-                raise BincodeError(
-                    "event hash mismatch (corrupted file or codec drift): "
-                    f"key {format_hash(h)} vs content {format_hash(got)}"
-                )
+            raise BincodeError(
+                "event hash mismatch (corrupted file or codec drift): "
+                f"key {format_hash(h)} vs content {format_hash(got)}"
+            )
         g.events[h] = ev
     n_states = r.u64()
     for _ in range(n_states):
@@ -327,71 +329,28 @@ def encode_graph(g: Graph) -> bytes:
 # ------------------------------------------------------------- zstd I/O
 
 
-def _zstd_bin() -> str:
-    import os
-
-    # explicit override first: deployments pin the binary here instead of
-    # relying on library-baked paths (r11: the previous hardcoded
-    # /root/miniconda fallback silently exec'd whatever lived at that path
-    # on other machines)
-    override = os.environ.get("ZSTD_BIN")
-    if override:
-        if os.path.isfile(override) and os.access(override, os.X_OK):
-            return override
-        raise RuntimeError(
-            f"ZSTD_BIN={override!r} is not an executable file"
-        )
-    exe = shutil.which("zstd")
-    if exe is None:
-        # PATH is environment-fragile (r10: a login shell that put conda's
-        # condabin but not bin/ on PATH lost the binary and failed 14
-        # tests): probe the condabin-sibling bin/ before giving up.
-        candidates = [
-            os.path.join(d, "zstd")
-            for p in os.environ.get("PATH", "").split(os.pathsep)
-            if p.rstrip("/").endswith("condabin")
-            for d in (p.rstrip("/")[: -len("condabin")] + "bin",)
-        ]
-        for c in candidates:
-            if os.path.isfile(c) and os.access(c, os.X_OK):
-                return c
-        raise RuntimeError(
-            "reference graph files are zstd-framed and no `zstd` binary "
-            "is on PATH; set ZSTD_BIN to the binary's path, or "
-            "decompress the file externally and use decode_graph on the "
-            "raw bytes"
-        )
-    return exe
+_ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
 
 
-def read_graph_file(path: str, verify_hashes: bool = True) -> Graph:
+def read_graph_file(path: str) -> Graph:
     """Load a Rust-exvc-written graph file (zstd frame around bincode;
     ref main.rs:267-276). Accepts an uncompressed bincode file too (the
     4-byte zstd magic disambiguates)."""
-    with open(path, "rb") as fh:
-        raw = fh.read()
-    if raw[:4] == b"\x28\xb5\x2f\xfd":
-        raw = subprocess.run(
-            [_zstd_bin(), "-d", "-c", "-q"],
-            input=raw,
-            capture_output=True,
-            check=True,
-        ).stdout
-    return decode_graph(raw, verify_hashes=verify_hashes)
+    raw = storage.read_bytes(path)
+    if raw[:4] == _ZSTD_MAGIC:
+        raw = pa.input_stream(pa.BufferReader(raw), compression="zstd").read()
+    return decode_graph(raw)
 
 
-def write_graph_file(g: Graph, path: str, level: int = 19) -> None:
+def write_graph_file(g: Graph, path: str) -> None:
     """Write a graph in the reference's on-disk format (`w` command,
     ref main.rs:44-53 — zstd level 20 there; any level decodes the
-    same)."""
-    comp = subprocess.run(
-        [_zstd_bin(), f"-{level}", "-c", "-q"],
-        input=encode_graph(g),
-        capture_output=True,
-        check=True,
-    ).stdout
-    with open(path, "wb") as fh:
-        fh.write(comp)
+    same). The file is opened only once the bytes are complete, so a
+    graph that fails to encode leaves the old file intact."""
+    comp = pa.Codec("zstd", compression_level=19).compress(
+        encode_graph(g), asbytes=True
+    )
+    storage.write_bytes(path, comp)
 
 
 # ----------------------------------------------------- native rehashing

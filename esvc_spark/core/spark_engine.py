@@ -27,7 +27,7 @@ Engines:
     lines DataFrame (line_no, text). Spark rows are unordered, so the
     reference's implicit vector order is an explicit line_no column
     (SURVEY.md §1.2). Renumbering switches on dataset size: below
-    _RENUMBER_LOCAL_ROWS a single row_number window (one-task sort, the
+    TWO_PHASE_MIN_ROWS a single row_number window (one-task sort, the
     cheapest plan at editor scale); above it a distributed two-phase
     prefix sum (range-partition on the order key, per-partition counts,
     cumulative offsets broadcast back, within-partition rank + offset) —
@@ -95,7 +95,8 @@ def _DISK_ONLY():
 # machinery (repartitionByRange sampling pass + shuffle + DISK_ONLY
 # checkpoint + offsets collect+join: a fixed ~0.3-0.5 s per invocation
 # on this host, vs one small sort). Crossover measured in-process,
-# min-of-5 interleaved, `scripts/ab_offset_path.py --helpers` (round 8):
+# min-of-5 interleaved, global/grouped row-number and prefix-sum helpers
+# on a synthetic frame, local window vs two-phase plan (round 8):
 #   1e4 rows  global 0.12 vs 0.39 s  grouped 0.17 vs 0.38 s  (local wins)
 #   1e5 rows  global 0.14 vs 0.35 s  grouped 0.23 vs 0.37 s  (local wins)
 #   1e6 rows  global 0.43 vs 0.41 s  grouped 0.24 vs 0.51 s  (parity/local)
@@ -104,10 +105,10 @@ def _DISK_ONLY():
 # The global crossover sits at ~1e6; the grouped local window
 # parallelizes over groups so it stays ahead longer, but n_rows bounds
 # TOTAL rows (not the largest group), so one conservative constant
-# serves both: 1<<20, the bound the editor's renumber gate has proven
-# since r5 (_RENUMBER_LOCAL_ROWS). The probe's grouped3 arm (3 balanced
-# groups — the zonemap/zorder max_group_rows shape, its worst case
-# short of one group) backs the per-group bound: at 1e6 rows / 333k per
+# serves both: 1<<20, the bound the editor's renumber gate
+# (SparkExEngine._global_index) has used since r5. The probe's grouped3
+# arm (3 balanced groups — the zonemap/zorder max_group_rows shape, its
+# worst case short of one group) backs the per-group bound: at 1e6 rows / 333k per
 # group local wins 0.21 vs 0.44 s, and even at 4e6 / 1.33M per group
 # (past the bound) it still edges the two-phase plan 0.62 vs 0.85 s —
 # the gate flips conservatively before the crossover, never after. Callers thread `n_rows` (any cheap
@@ -732,21 +733,15 @@ class SparkExEngine(SparkEngineBase):
 
     # -- helpers ---------------------------------------------------------
 
-    # Below this many rows a single-task row_number window is the cheapest
-    # renumber (one tiny sort beats three distributed jobs); above it the
-    # two-phase prefix sum keeps every stage partition-parallel. The
-    # threshold is an upper bound on rows ONE task must sort — 1M short
-    # lines is a few tens of MB.
-    _RENUMBER_LOCAL_ROWS = 1 << 20
-
     def _global_index(
-        self, df: DataFrame, order_cols: list[str], n_rows: int | None
+        self, df: DataFrame, order_cols: list[str], n_rows: int
     ) -> DataFrame:
         """(line_no, text) with line_no = 0-based contiguous global rank in
         `order_cols` order — the exclusive prefix sum of 1s, delegated to
         `exclusive_prefix_sum` (two-phase partition-parallel above
-        _RENUMBER_LOCAL_ROWS, single tiny window below)."""
-        local = n_rows is None or n_rows <= self._RENUMBER_LOCAL_ROWS
+        TWO_PHASE_MIN_ROWS, single tiny window below: 1M short lines, the
+        most ONE task sorts, is a few tens of MB)."""
+        local = n_rows <= TWO_PHASE_MIN_ROWS
         bucket = None
         if not local:
             # the order key's domain IS known here: the leading column is
@@ -779,7 +774,7 @@ class SparkExEngine(SparkEngineBase):
         )
         return out.select(F.col("line_no").cast("bigint").alias("line_no"), "text")
 
-    def _renumber(self, df: DataFrame, n_rows: int | None = None) -> DataFrame:
+    def _renumber(self, df: DataFrame, n_rows: int) -> DataFrame:
         """Reassign contiguous line_no by (pos, sub) order."""
         return self._global_index(df, ["pos", "sub"], n_rows)
 
@@ -865,7 +860,7 @@ class SparkExEngine(SparkEngineBase):
         raise ValueError(f"unknown command kind {k!r}")
 
     def _rgx_plan(
-        self, df: DataFrame, kind: dict, pattern: str, n: int | None = None
+        self, df: DataFrame, kind: dict, pattern: str, n: int
     ) -> DataFrame:
         """Per-line segments: each matching line is its own selected run
         (en.rs:143-148), so append/insert/change expand per matching line."""

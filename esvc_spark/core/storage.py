@@ -1,9 +1,11 @@
 """The one way the stateful paths reach storage: the graph store, the
-snapshot spill seam, the event-log heads swap, table compaction, the
-IVF index store (operators/ann_store.py: its codebook swaps, cell
-compactions and cell drops) and the REPL's path checks. Every operation
-takes the path string Spark is handed for the same location and
-resolves it to a `pyarrow.fs` filesystem:
+reference-format graph file (core/bincode_io.py: the REPL's `w x.zst`,
+`m< x.zst` and startup load), the snapshot spill seam, the event-log
+heads swap, table compaction, the IVF index store
+(operators/ann_store.py: its codebook swaps, cell compactions and cell
+drops) and the REPL's path checks. Every operation takes the path
+string Spark is handed for the same location and resolves it to a
+`pyarrow.fs` filesystem:
 
   * a plain path (no `scheme:` before its first `/`, Hadoop's rule) is
     a `LocalFileSystem` path;
@@ -13,7 +15,10 @@ resolves it to a `pyarrow.fs` filesystem:
     is `/a%20b`). `FileSystem.from_uri` rejects the first and decodes
     the second;
   * any other scheme (hdfs://, s3://, ...) goes to
-    `FileSystem.from_uri`; a scheme it cannot serve raises OSError.
+    `FileSystem.from_uri`; a scheme it cannot serve raises OSError. The
+    filesystem is built once per scheme, authority and query (building
+    an S3 one looks up the bucket's region), and later paths under it
+    are derived as `from_uri` derives them.
 
 Correctness rests on commit markers, not on an atomic rename, which an
 object store lacks (there a directory move is a copy and a delete):
@@ -33,6 +38,7 @@ from __future__ import annotations
 
 import posixpath
 import re
+from urllib.parse import unquote, urlsplit
 
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
@@ -44,19 +50,51 @@ _LOCAL = pafs.LocalFileSystem()
 _MISSING = pafs.FileType.NotFound
 
 
+# the path inside the filesystem that `FileSystem.from_uri` names for a
+# URI's (authority, percent-decoded path), per scheme: object stores
+# prefix the bucket and drop a trailing slash, mock drops the leading
+# slash, hdfs keeps the path. A scheme not listed is resolved uncached.
+def _bucket_path(auth: str, p: str) -> str:
+    return (auth.rpartition("@")[2] + p).rstrip("/")
+
+
+_FS_PATH = {
+    "s3": _bucket_path,
+    "gs": _bucket_path,
+    "gcs": _bucket_path,
+    "hdfs": lambda auth, p: p,
+    "viewfs": lambda auth, p: p,
+    "mock": lambda auth, p: p.lstrip("/"),
+}
+_FS: dict[str, pafs.FileSystem] = {}
+
+
+def _from_uri(uri: str) -> tuple[pafs.FileSystem, str]:
+    try:
+        return pafs.FileSystem.from_uri(uri)
+    except ValueError as e:  # ArrowInvalid: no filesystem for the scheme
+        raise OSError(f"no filesystem for {uri!r}: {e}") from e
+
+
 def _resolve(path: str) -> tuple[pafs.FileSystem, str]:
     m = _SCHEME.match(path)
     if m is None:
         return _LOCAL, path
-    if m.group(1).lower() == "file":
+    scheme = m.group(1).lower()
+    if scheme == "file":
         rest = path[m.end():]
         if rest.startswith("//"):  # drop the (empty or host) authority
             rest = rest[rest.find("/", 2):] if "/" in rest[2:] else "/"
         return _LOCAL, rest
-    try:
-        return pafs.FileSystem.from_uri(path)
-    except ValueError as e:  # ArrowInvalid: no filesystem for the scheme
-        raise OSError(f"no filesystem for {path!r}: {e}") from e
+    fs_path = _FS_PATH.get(scheme)
+    if fs_path is None:
+        return _from_uri(path)
+    u = urlsplit(path)
+    root = f"{scheme}://{u.netloc}" + (f"?{u.query}" if u.query else "")
+    fs = _FS.get(root)
+    if fs is None:  # threads racing here all keep the first one stored
+        fs = _FS.setdefault(root, _from_uri(root)[0])
+    return fs, fs_path(u.netloc, unquote(u.path))
 
 
 def _type(fs: pafs.FileSystem, p: str) -> pafs.FileType:
@@ -97,15 +135,18 @@ def read_parquet(path: str, columns: list[str]):
 
 
 def read_bytes(path: str) -> bytes:
+    """The bytes of the file `path` as stored: no codec is guessed from
+    its name (pyarrow would inflate a `.zst` or `.gz` file)."""
     fs, p = _resolve(path)
-    with fs.open_input_stream(p) as f:
+    with fs.open_input_stream(p, compression=None) as f:
         return f.read()
 
 
 def write_bytes(path: str, data) -> None:
-    """Write `data` as the file `path`; its directory must exist."""
+    """Write `data` as the file `path`, byte for byte (no codec guessed
+    from its name); its directory must exist."""
     fs, p = _resolve(path)
-    with fs.open_output_stream(p) as f:
+    with fs.open_output_stream(p, compression=None) as f:
         f.write(data)
 
 

@@ -242,21 +242,20 @@ def _word_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-conditional (round 7, closing the seam the r6 docstring only
     named): broadcast while |documents| ≤ _ED_OFFS_BROADCAST_DOCS
     (measured min-of-5 0.264 s vs 0.278 s for the shuffled join at
-    sf0.1, scripts/ab_offset_path.py --join — broadcast wins small, and
-    the gap widens with executor count since the hash join re-shuffles
+    sf0.1 — broadcast wins small, and the gap widens with executor count since the hash join re-shuffles
     the offsets), a doc_id-partitioned hash join past it — a ~10⁸-row
     offsets table (~1.6 GB of (id, off)) no longer
     fits a broadcast, and both sides already hash-partition on doc_id
     so the swap adds one bounded exchange, never a driver-sized one."""
     from ..catalog import table_rows
-    from ..core.spark_engine import SparkExEngine, exclusive_prefix_sum
+    from ..core.spark_engine import exclusive_prefix_sum
 
-    # size-conditional offset plan, same policy as the engine's renumber
-    # (_RENUMBER_LOCAL_ROWS): the offsets table is |documents| rows, so
+    # size-conditional offset plan, the same TWO_PHASE_MIN_ROWS gate as
+    # the engine's renumber: the offsets table is |documents| rows, so
     # below the threshold one tiny window beats the two-phase prefix
-    # sum's three jobs (measured: 0.28 vs 1.08 s at sf0.1 — see
-    # scripts/ab_offset_path.py); above it the two-phase path keeps the
-    # plan free of single-task stages. The count is parquet-metadata-only.
+    # sum's three jobs (measured: 0.28 vs 1.08 s at sf0.1); above it the
+    # two-phase path keeps the plan free of single-task stages. The
+    # count is parquet-metadata-only.
     n_docs = table_rows(spark, sf_dir, "documents")
     # partition count scales with the corpus (~1e6 docs per task bounds
     # the exploded lines table's task size at any scale), floor 8 — the
@@ -276,7 +275,7 @@ def _word_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["doc_id"],
         "nw",
         "off",
-        local=n_docs <= SparkExEngine._RENUMBER_LOCAL_ROWS,
+        n_rows=n_docs,
     ).select("doc_id", "off")
     joined = (
         docs.join(F.broadcast(offs), "doc_id")

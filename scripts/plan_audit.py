@@ -143,7 +143,7 @@ _IMPERATIVE = {
 # corpus-proportional frame through core.spark_engine's rank/prefix
 # helpers (or relational._ordered_runs), which switch on a
 # parquet-metadata row-count bound — at or below TWO_PHASE_MIN_ROWS
-# (1<<20, measured crossover: scripts/ab_offset_path.py --helpers) the
+# (1<<20, the measured crossover in core/spark_engine.py) the
 # plan is ONE small window (the 1p exchange the profile shows at
 # sf0.001 — bounded BY THE GATE, never corpus-proportional), above it
 # the two-phase partition-parallel checkpoint plan r7 shipped

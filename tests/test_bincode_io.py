@@ -12,14 +12,16 @@ on the checked-in fixture."""
 
 from __future__ import annotations
 
+import shutil
 import struct
+import subprocess
 
+import pyarrow as pa
 import pytest
 
 from esvc_spark.cli import Repl
 from esvc_spark.core.bincode_io import (
     BincodeError,
-    _zstd_bin,
     decode_graph,
     encode_event,
     encode_graph,
@@ -28,11 +30,21 @@ from esvc_spark.core.bincode_io import (
     read_graph_file,
     reference_event_hash,
     rehash_to_native,
+    write_graph_file,
 )
 from esvc_spark.core.graph import Event
 from esvc_spark.core.hashing import calculate_hash
 
+from .conftest import PATH_FORMS, path_in_form
+
 FIXTURE = "tests/fixtures/reference_graph.exvc.zst"
+
+
+def _fixture_bincode() -> bytes:
+    """The fixture's bincode payload, unwrapped from its zstd streaming
+    frame (written by the zstd CLI: no content-size header)."""
+    with open(FIXTURE, "rb") as fh:
+        return pa.input_stream(fh, compression="zstd").read()
 
 
 def _fixture_repl() -> Repl:
@@ -137,23 +149,13 @@ def test_fixture_decodes_and_verifies_reference_hashes():
 
 
 def test_fixture_byte_roundtrip_is_exact():
-    import subprocess
-
-    raw = subprocess.run(
-        [_zstd_bin(), "-d", "-c", "-q", FIXTURE], capture_output=True, check=True
-    ).stdout
+    raw = _fixture_bincode()
     g = decode_graph(raw)
     assert encode_graph(g) == raw
 
 
 def test_corrupted_payload_fails_hash_verification():
-    import subprocess
-
-    raw = bytearray(
-        subprocess.run(
-            [_zstd_bin(), "-d", "-c", "-q", FIXTURE], capture_output=True, check=True
-        ).stdout
-    )
+    raw = bytearray(_fixture_bincode())
     # flip a byte inside the first event's argument payload (past the
     # 8-byte map count + 76-byte first key)
     raw[120] ^= 0xFF
@@ -161,12 +163,21 @@ def test_corrupted_payload_fails_hash_verification():
         decode_graph(bytes(raw))
 
 
-def test_uncompressed_bincode_file_accepted(tmp_path):
-    import subprocess
-
+@pytest.mark.skipif(shutil.which("zstd") is None, reason="no zstd CLI")
+def test_written_file_decodes_with_the_zstd_cli(tmp_path):
+    """A file write_graph_file frames in-process is a standard zstd
+    frame: the zstd CLI unwraps it to exactly the graph's bincode."""
+    g = read_graph_file(FIXTURE)
+    p = tmp_path / "written.exvc.zst"
+    write_graph_file(g, str(p))
     raw = subprocess.run(
-        [_zstd_bin(), "-d", "-c", "-q", FIXTURE], capture_output=True, check=True
+        ["zstd", "-d", "-c", "-q", str(p)], capture_output=True, check=True
     ).stdout
+    assert raw == encode_graph(g) == _fixture_bincode()
+
+
+def test_uncompressed_bincode_file_accepted(tmp_path):
+    raw = _fixture_bincode()
     p = tmp_path / "graph.bin"
     p.write_bytes(raw)
     g = read_graph_file(str(p))
@@ -378,6 +389,38 @@ def test_repl_w_writes_reference_format(tmp_path):
     out3 = io.StringIO()
     assert src.handle_line(f"w {tmp_path}/a_file", out3, lambda: [])
     assert out3.getvalue().startswith("?w:")
+
+
+@pytest.mark.parametrize("form", PATH_FORMS)
+def test_reference_file_at_every_path_form(tmp_path, clean_cwd, form):
+    """`w <form>/g.exvc.zst`, `m<` of it, bare `w` on a session whose
+    path is in that form, and `main` started on that path all reach the
+    one file a plain path names, and no `./file:` directory appears."""
+    import io
+
+    from esvc_spark.cli import main
+    from esvc_spark.core.exparse import make_command
+
+    (tmp_path / "g" / "x y ü").mkdir(parents=True)
+    base = path_in_form(tmp_path / "g", form)
+    src = Repl()
+    src.submit(make_command({"type": "last"}, "append", ["alpha", "beta"]))
+    out = io.StringIO()
+    assert src.handle_line(f"w {base}/g.exvc.zst", out, lambda: [])
+    dst = Repl()
+    assert dst.handle_line(f"m< {base}/g.exvc.zst", out, lambda: [])
+    assert out.getvalue() == ""
+    assert dst.materialize() == ("alpha", "beta")
+
+    bare = f"{base}/bare.exvc.zst"
+    s2 = Repl(path=bare)
+    s2.submit(make_command({"type": "last"}, "append", ["gamma"]))
+    assert s2.handle_line("w", out, lambda: [])
+    assert out.getvalue() == ""
+    captured = io.StringIO()
+    main(argv=[bare], stdin=io.StringIO("0,\nq!\n"), stdout=captured)
+    assert captured.getvalue().split() == ["1", "gamma"]
+    assert not (clean_cwd / "file:").exists()
 
 
 def test_repl_w_reports_unexportable_graph_instead_of_crashing():

@@ -99,9 +99,10 @@ def test_spark_ex_distributed_renumber_matches_local(spark, ex_engine, monkeypat
     sum) by zeroing the threshold and check the full editor script stays
     bit-identical to the in-memory ExEngine — the differential contract
     for the no-single-task-sort plan."""
+    from esvc_spark.core import spark_engine
     from esvc_spark.core.engines import ExEngine as LocalEx
 
-    monkeypatch.setattr(SparkExEngine, "_RENUMBER_LOCAL_ROWS", 0)
+    monkeypatch.setattr(spark_engine, "TWO_PHASE_MIN_ROWS", 0)
     local = LocalEx()
     eng = ex_engine
     # enough lines to span several range partitions
