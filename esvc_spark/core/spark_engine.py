@@ -26,13 +26,16 @@ Engines:
   - SparkExEngine: the ed/ex line editor (en.rs:214-258) over an ordered
     lines DataFrame (line_no, text). Spark rows are unordered, so the
     reference's implicit vector order is an explicit line_no column
-    (SURVEY.md §1.2). Renumbering switches on dataset size: below
-    TWO_PHASE_MIN_ROWS a single row_number window (one-task sort, the
-    cheapest plan at editor scale); above it a distributed two-phase
-    prefix sum (range-partition on the order key, per-partition counts,
-    cumulative offsets broadcast back, within-partition rank + offset) —
-    no single-task stage at any size, so the editor holds up on
-    corpus-of-lines datasets too.
+    (SURVEY.md §1.2). Every address resolves to row predicates and
+    every command kind is one plan shape whatever the address: a
+    projection (substitute), a filter (delete), or one array per row
+    exploded in place (append/insert/change). Renumbering orders by
+    (input line_no, array position) and switches on dataset size: below
+    TWO_PHASE_MIN_ROWS a single window (one-task sort, the cheapest plan
+    at editor scale); above it a distributed prefix sum over fixed
+    line_no buckets (per-bucket counts, cumulative offsets broadcast
+    back, within-bucket rank + offset) — no single-task stage at any
+    size, so the editor holds up on corpus-of-lines datasets too.
 """
 
 from __future__ import annotations
@@ -118,12 +121,10 @@ def _DISK_ONLY():
 TWO_PHASE_MIN_ROWS = 1 << 20
 
 
-def _use_local(local: bool | None, n_rows: int | None) -> bool:
-    """Resolve the path switch: an explicit `local` wins; otherwise go
-    local only when the caller PROVED the input small (n_rows is an
-    upper bound ≤ TWO_PHASE_MIN_ROWS). Unknown size → distributed."""
-    if local is not None:
-        return local
+def _use_local(n_rows: int | None) -> bool:
+    """The path switch: local only when the caller PROVED the input
+    small (n_rows is an upper bound ≤ TWO_PHASE_MIN_ROWS). Unknown size
+    → distributed."""
     return n_rows is not None and n_rows <= TWO_PHASE_MIN_ROWS
 
 
@@ -134,7 +135,6 @@ def exclusive_prefix_sum(
     value_col: str,
     out_col: str,
     *,
-    local: bool | None = None,
     n_rows: int | None = None,
     bucket_of=None,
 ) -> DataFrame:
@@ -162,90 +162,47 @@ def exclusive_prefix_sum(
     exactly-summable value types (integers/decimals): the bucketed
     addition order differs from the sampled-range order.
 
-    Distributed path (default): two-phase prefix sum —
-    1. range-partition on the order key and PIN the partitioning with an
-       eager localCheckpoint (repartitionByRange samples its boundaries,
-       so two jobs over the lazy plan could see different partition ids);
-    2. one small aggregate collects per-partition sums (P rows) and turns
-       them into cumulative offsets on the driver;
-    3. within-partition running sum (ROWS frame, pinned — RANGE would
-       merge ties) + broadcast offset. Every stage is partition-parallel;
-       the only driver-side data is P partial sums. This is the renumber
-       strategy behind SparkExEngine at corpus scale, factored out so
-       other prefix-sum consumers (e.g. global line numbering of an
-       exploded corpus) share it.
+    Without `bucket_of` this is grouped_exclusive_prefix_sum with no
+    group columns: below TWO_PHASE_MIN_ROWS (`n_rows`, any cheap upper
+    bound on df's rows — the parquet-metadata base-table count at the
+    query call sites) one small window, else (or unknown) the two-phase
+    plan — range-partition pinned by localCheckpoint, P partial sums
+    collected into offsets, within-partition running sum + broadcast
+    offset. Both paths are bit-identical (tests/test_spark_core.py
+    differential suite).
 
-    `local=True` keeps the single-window plan — cheapest when the CALLER
-    knows the input is small (one tiny sort beats three jobs). With
-    `local=None` (default) the path is derived from `n_rows`, any cheap
-    upper bound on df's rows (parquet-metadata base-table count at the
-    query call sites): ≤ TWO_PHASE_MIN_ROWS → local window, else (or
-    unknown) the two-phase plan. Both paths are bit-identical
-    (tests/test_spark_core.py differential suite).
-
-    NULL `value_col` rows count as 0 in BOTH paths (coalesced below, to
-    match the driver-side offset coalescing `_s or 0`), so a nullable
-    caller gets shifted-by-0 rows, never mixed NULL/shifted output.
+    NULL `value_col` rows count as 0 in every path, so a nullable caller
+    gets shifted-by-0 rows, never mixed NULL/shifted output.
     """
     from pyspark.sql import Window
 
+    if bucket_of is None or _use_local(n_rows):
+        return grouped_exclusive_prefix_sum(
+            spark, df, [], order_cols, value_col, out_col, n_rows=n_rows
+        )
     val = F.coalesce(F.col(value_col), F.lit(0))
-    if _use_local(local, n_rows):
-        w = (
-            Window.orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return df.withColumn(out_col, F.sum(val).over(w) - val)
-    if bucket_of is not None:
-        base = df.withColumn("_b", bucket_of.cast("int"))
-        off_w = Window.orderBy("_b").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        # P rows total: the offset window's single task is trivial
-        offs = (
-            base.groupBy("_b")
-            .agg(F.sum(val).alias("_s"))
-            .select(
-                "_b",
-                F.coalesce(F.sum("_s").over(off_w), F.lit(0)).alias("_off"),
-            )
-        )
-        w = (
-            Window.partitionBy("_b")
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return (
-            base.join(F.broadcast(offs), "_b")
-            .withColumn(out_col, F.sum(val).over(w) - val + F.col("_off"))
-            .drop("_b", "_off")
-        )
-    p = max(spark.sparkContext.defaultParallelism, 2)
-    part = (
-        df.repartitionByRange(p, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        # DISK_ONLY: checkpoint blocks live outside the CacheManager and
-        # survive clearCache(), so a long session running many prefix-sum
-        # queries would otherwise accumulate them in the heap (observed:
-        # OOM halfway through the 224-query sf0.1 attestation); the block
-        # is scanned twice, disk read is fine
-        .localCheckpoint(storageLevel=_DISK_ONLY())
+    base = df.withColumn("_b", bucket_of.cast("int"))
+    off_w = Window.orderBy("_b").rowsBetween(
+        Window.unboundedPreceding, -1
     )
-    sums = part.groupBy("_pid").agg(F.sum(value_col).alias("_s")).collect()
-    offs, acc = [], 0
-    for r in sorted(sums, key=lambda r: r["_pid"]):
-        offs.append((r["_pid"], acc))
-        acc += r["_s"] or 0
-    off_df = spark.createDataFrame(offs, "_pid INT, _off BIGINT")
+    # P rows total: the offset window's single task is trivial
+    offs = (
+        base.groupBy("_b")
+        .agg(F.sum(val).alias("_s"))
+        .select(
+            "_b",
+            F.coalesce(F.sum("_s").over(off_w), F.lit(0)).alias("_off"),
+        )
+    )
     w = (
-        Window.partitionBy("_pid")
+        Window.partitionBy("_b")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        part.join(F.broadcast(off_df), "_pid")
+        base.join(F.broadcast(offs), "_b")
         .withColumn(out_col, F.sum(val).over(w) - val + F.col("_off"))
-        .drop("_pid", "_off")
+        .drop("_b", "_off")
     )
 
 
@@ -257,7 +214,6 @@ def grouped_exclusive_prefix_sum(
     value_col: str,
     out_col: str,
     *,
-    local: bool | None = None,
     n_rows: int | None = None,
     max_group_rows: int | None = None,
 ) -> DataFrame:
@@ -274,7 +230,7 @@ def grouped_exclusive_prefix_sum(
     group is small and the window already parallelizes), fold them into
     per-group offsets, and add the within-partition running sum.
     NULL `value_col` counts as 0 (matching exclusive_prefix_sum).
-    `local`/`n_rows` switch to a plain per-group window below
+    `n_rows` switches to a plain per-group window below
     TWO_PHASE_MIN_ROWS (see exclusive_prefix_sum) — at that size even
     the largest group is one small task. The per-group window's real
     single-task cost is the LARGEST GROUP's sort, so a caller whose
@@ -285,9 +241,7 @@ def grouped_exclusive_prefix_sum(
     from pyspark.sql import Window
 
     val = F.coalesce(F.col(value_col), F.lit(0))
-    if _use_local(local, n_rows) or (
-        local is None and _use_local(None, max_group_rows)
-    ):
+    if _use_local(n_rows) or _use_local(max_group_rows):
         w = (
             Window.partitionBy(*group_cols)
             .orderBy(*order_cols)
@@ -298,7 +252,12 @@ def grouped_exclusive_prefix_sum(
     part = (
         df.repartitionByRange(p, *group_cols, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(storageLevel=_DISK_ONLY())  # heap-safe, see above
+        # DISK_ONLY: checkpoint blocks live outside the CacheManager and
+        # survive clearCache(), so a long session running many prefix-sum
+        # queries would otherwise accumulate them in the heap (observed:
+        # OOM halfway through the 224-query sf0.1 attestation); the block
+        # is scanned twice, disk read is fine
+        .localCheckpoint(storageLevel=_DISK_ONLY())
     )
     sums = part.groupBy("_pid", *group_cols).agg(
         F.sum(value_col).alias("_s")
@@ -359,7 +318,6 @@ def grouped_row_number(
     order_cols: list,
     out_col: str,
     *,
-    local: bool | None = None,
     n_rows: int | None = None,
     max_group_rows: int | None = None,
 ) -> DataFrame:
@@ -367,13 +325,12 @@ def grouped_row_number(
     partition-parallel via grouped_exclusive_prefix_sum of a constant 1
     — the scale replacement for `row_number().over(Window.partitionBy(
     low_cardinality_key).orderBy(...))`. Deterministic iff (group,
-    order) is a total order. `local`/`n_rows`/`max_group_rows`: see
+    order) is a total order. `n_rows`/`max_group_rows`: see
     grouped_exclusive_prefix_sum (threaded through)."""
     tmp = "_grn_one"
     out = grouped_exclusive_prefix_sum(
         spark, df.withColumn(tmp, F.lit(1)), group_cols, order_cols,
-        tmp, out_col, local=local, n_rows=n_rows,
-        max_group_rows=max_group_rows,
+        tmp, out_col, n_rows=n_rows, max_group_rows=max_group_rows,
     )
     return out.withColumn(
         out_col, (F.col(out_col) + F.lit(1)).cast("bigint")
@@ -387,7 +344,6 @@ def global_running_max(
     value_col: str,
     out_col: str,
     *,
-    local: bool | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
     """`df` plus `out_col` = running MAX of `value_col` over the rows at
@@ -397,12 +353,12 @@ def global_running_max(
     collect the P per-partition maxima, turn them into exclusive prefix
     maxima on the driver, then greatest(within-partition running max,
     broadcast offset). Partition-parallel at any scale; NULL values are
-    ignored by max in both phases. `local`/`n_rows` switch to one small
+    ignored by max in both phases. `n_rows` switches to one small
     single-task window below TWO_PHASE_MIN_ROWS (see
     exclusive_prefix_sum)."""
     from pyspark.sql import Window
 
-    if _use_local(local, n_rows):
+    if _use_local(n_rows):
         w = (
             Window.orderBy(*order_cols)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -441,28 +397,19 @@ def global_row_number(
     order_cols: list,  # str names or Column sort orders (F.desc(...))
     out_col: str,
     *,
-    local: bool | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
     """`df` plus `out_col` = 1-based global ROW_NUMBER() in `order_cols`
-    order, computed partition-parallel as exclusive_prefix_sum of a
-    constant 1 (per-partition row_number + broadcast partition offsets)
-    — never an unpartitioned window funnelling the whole table through
-    one task. Deterministic iff `order_cols` is a total order (unique
-    full key); ties would land on whichever side of a sampled range
-    boundary they fall. Spark's ASC default (NULLS FIRST) applies to
-    both the range partitioning and the within-partition window, so a
-    DuckDB oracle twin must pin NULLS FIRST explicitly. `local`/`n_rows`:
-    see exclusive_prefix_sum (threaded through).
+    order: grouped_row_number with no group columns (per-partition
+    row_number + broadcast partition offsets) — never an unpartitioned
+    window funnelling the whole table through one task. Deterministic
+    iff `order_cols` is a total order (unique full key); ties would land
+    on whichever side of a sampled range boundary they fall. Spark's ASC
+    default (NULLS FIRST) applies to both the range partitioning and the
+    within-partition window, so a DuckDB oracle twin must pin NULLS
+    FIRST explicitly. `n_rows`: see exclusive_prefix_sum.
     """
-    tmp = "_grn_one"
-    out = exclusive_prefix_sum(
-        spark, df.withColumn(tmp, F.lit(1)), order_cols, tmp, out_col,
-        local=local, n_rows=n_rows,
-    )
-    return out.withColumn(
-        out_col, (F.col(out_col) + F.lit(1)).cast("bigint")
-    ).drop(tmp)
+    return grouped_row_number(spark, df, [], order_cols, out_col, n_rows=n_rows)
 
 
 class SparkEngineBase(BaseEngine):
@@ -717,16 +664,21 @@ class SparkReplaceEngine(SparkEngineBase):
 
 class SparkExEngine(SparkEngineBase):
     """ed/ex editor over an ordered lines DataFrame (line_no BIGINT
-    0-based contiguous, text STRING). Address → selection; command →
-    declarative DataFrame transform; renumber via row_number."""
+    0-based contiguous, text STRING). One algorithm for every address,
+    as in ExEngine (en.rs:105-188): the address resolves to row
+    predicates (`_segments`) and each command kind is one plan shape —
+    substitute a projection, delete a filter, append/insert/change one
+    array per row exploded in place — renumbered by `_global_index`."""
 
     COLS = ["line_no", "text"]
 
-    def init_data(self, lines: list[str]) -> SparkDat:
-        df = self.spark.createDataFrame(
+    def _lines_df(self, lines: list[str]) -> DataFrame:
+        return self.spark.createDataFrame(
             list(enumerate(lines)), "line_no BIGINT, text STRING"
         )
-        return SparkDat.create(df, self.COLS)
+
+    def init_data(self, lines: list[str]) -> SparkDat:
+        return SparkDat.create(self._lines_df(lines), self.COLS)
 
     def lines(self, dat: SparkDat) -> list[str]:
         return [r["text"] for r in dat.df.orderBy("line_no").collect()]
@@ -741,48 +693,54 @@ class SparkExEngine(SparkEngineBase):
         `exclusive_prefix_sum` (two-phase partition-parallel above
         TWO_PHASE_MIN_ROWS, single tiny window below: 1M short lines, the
         most ONE task sorts, is a few tens of MB)."""
-        local = n_rows <= TWO_PHASE_MIN_ROWS
         bucket = None
-        if not local:
+        if not _use_local(n_rows):
             # the order key's domain IS known here: the leading column is
-            # a (possibly fractional) position in [-0.5, n_rows], so a
-            # fixed range bucketing is monotone and near-balanced by
-            # construction — the deterministic bucket_of path keeps the
-            # renumber a PURE PLAN (no eager checkpoint/collect at every
-            # _apply_plan construction inside the shelve loop — round 12)
+            # the input's line_no in [0, n_rows), so a fixed range
+            # bucketing is monotone and balanced by construction — the
+            # deterministic bucket_of path keeps the renumber a PURE PLAN
+            # (no eager checkpoint/collect at every _apply_plan
+            # construction inside the shelve loop)
             p = max(self.spark.sparkContext.defaultParallelism, 2)
-            lead = F.col(order_cols[0]).cast("double")
-            bucket = F.least(
-                F.lit(p - 1),
-                F.greatest(
-                    F.lit(0),
-                    F.floor(
-                        (lead + F.lit(1.0))
-                        * F.lit(float(p))
-                        / F.lit(float(n_rows + 2))
-                    ),
-                ),
-            )
+            bucket = F.floor(F.col(order_cols[0]) * F.lit(p) / F.lit(n_rows))
         out = exclusive_prefix_sum(
             self.spark,
             df.withColumn("_one", F.lit(1).cast("bigint")),
             order_cols,
             "_one",
             "line_no",
-            local=local,
+            n_rows=n_rows,
             bucket_of=bucket,
         )
         return out.select(F.col("line_no").cast("bigint").alias("line_no"), "text")
 
-    def _renumber(self, df: DataFrame, n_rows: int) -> DataFrame:
-        """Reassign contiguous line_no by (pos, sub) order."""
-        return self._global_index(df, ["pos", "sub"], n_rows)
-
-    def _new_rows(self, lines: list[str], pos, sub_start: int = 1) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(float(pos), sub_start + k, t) for k, t in enumerate(lines)],
-            "pos DOUBLE, sub BIGINT, text STRING",
-        )
+    @staticmethod
+    def _segments(addr: dict, n: int):
+        """The address over `n` > 0 rows as row predicates (sel, first,
+        last): the selected rows, and the first and the last row of each
+        selected run (≙ resolve_addr). None when no row is selected."""
+        t = addr["type"]
+        if t == "rgx":
+            pattern = addr["pattern"]
+            try:  # patterns are Rust-regex syntax; Java accepts the same basics
+                re.compile(pattern)
+            except re.error:
+                raise ValueError(f"invalid regex {pattern!r}") from None
+            # each matching line is its own one-line run (en.rs:143-148)
+            sel = F.col("text").rlike(pattern)
+            return sel, sel, sel
+        if t == "rng":
+            lo, hi = addr["start"], min(addr["end"], n)
+        elif t == "rngf":
+            lo, hi = addr["start"], n
+        elif t == "last":
+            lo, hi = n - 1, n
+        else:
+            raise ValueError(f"unknown address type {t!r}")
+        if lo >= hi:
+            return None
+        line = F.col("line_no")
+        return (line >= lo) & (line < hi), line == lo, line == hi - 1
 
     def _apply_plan(self, cmd: int, arg: dict, df: DataFrame, n: int) -> DataFrame:
         """The command as a PURE PLAN over `df` (known to hold `n` rows):
@@ -794,85 +752,26 @@ class SparkExEngine(SparkEngineBase):
         addr, kind = arg["addr"], arg["kind"]
         k = kind["kind"]
         t = addr["type"]
+        inserts = k in ("append", "insert", "change")
 
         # ---- empty dataset special cases (en.rs:107-114)
         if n == 0:
             selects_insertion = (t == "rngf" and addr["start"] == 0) or t == "last"
-            if not selects_insertion:
+            if selects_insertion and inserts:
+                return self._lines_df(kind["lines"])
+            return df  # nothing selected, or delete/substitute of nothing
+
+        if t == "rngf" and addr["start"] == n:
+            # the empty insertion point after the last line: inserting
+            # there appends to the last line; delete/substitute are no-ops
+            if not inserts:
                 return df
-            if k in ("append", "insert", "change"):
-                return self.spark.createDataFrame(
-                    list(enumerate(kind["lines"])), "line_no BIGINT, text STRING"
-                )
-            return df  # delete/substitute of an empty segment: no-op
+            addr, k = {"type": "last"}, "append"
+        seg = self._segments(addr, n)
+        if seg is None:
+            return df
+        sel, first, last = seg
 
-        if t == "rgx":
-            return self._rgx_plan(df, kind, addr["pattern"], n)
-
-        # ---- contiguous selection [lo, hi) on n rows
-        if t == "rng":
-            s, e = addr["start"], addr["end"]
-            if s >= n or s >= e:
-                return df
-            lo, hi = s, min(e, n)
-        elif t == "rngf":
-            s = addr["start"]
-            if s > n:
-                return df
-            lo, hi = s, n  # s == n → empty insertion point at end
-        elif t == "last":
-            lo, hi = n - 1, n
-        else:
-            raise ValueError(f"unknown address type {t!r}")
-
-        sel = (F.col("line_no") >= lo) & (F.col("line_no") < hi)
-
-        if k == "substitute":
-            return df.withColumn(
-                "text",
-                F.when(sel, F.regexp_replace("text", kind["pat"], kind["repl"])).otherwise(
-                    F.col("text")
-                ),
-            )
-
-        base = df.select(
-            F.col("line_no").cast("double").alias("pos"), F.lit(0).alias("sub"), "text"
-        )
-        if k == "delete":
-            return self._renumber(
-                base.filter(~((F.col("pos") >= lo) & (F.col("pos") < hi))), n
-            )
-        if k == "append":
-            # new lines right after the selected segment: boundary hi
-            return self._renumber(
-                base.unionByName(self._new_rows(kind["lines"], hi - 0.5)), n
-            )
-        if k == "insert":
-            # before the segment: boundary lo
-            return self._renumber(
-                base.unionByName(self._new_rows(kind["lines"], lo - 0.5)), n
-            )
-        if k == "change":
-            kept = base.filter(~((F.col("pos") >= lo) & (F.col("pos") < hi)))
-            return self._renumber(
-                kept.unionByName(self._new_rows(kind["lines"], lo - 0.5)), n
-            )
-        raise ValueError(f"unknown command kind {k!r}")
-
-    def _rgx_plan(
-        self, df: DataFrame, kind: dict, pattern: str, n: int
-    ) -> DataFrame:
-        """Per-line segments: each matching line is its own selected run
-        (en.rs:143-148), so append/insert/change expand per matching line."""
-        java_ok = True
-        try:  # patterns are Rust-regex syntax; Java accepts the same basics
-            re.compile(pattern)
-        except re.error:
-            java_ok = False
-        if not java_ok:
-            raise ValueError(f"invalid regex {pattern!r}")
-        sel = F.col("text").rlike(pattern)
-        k = kind["kind"]
         if k == "substitute":
             return df.withColumn(
                 "text",
@@ -882,20 +781,17 @@ class SparkExEngine(SparkEngineBase):
             )
         if k == "delete":
             return self._global_index(df.filter(~sel), ["line_no"], n)
-        lines_arr = F.array(*[F.lit(x) for x in kind["lines"]])
+        text = F.array(F.col("text"))
+        new = F.array(*[F.lit(x) for x in kind["lines"]])
         if k == "append":
-            arr = F.when(sel, F.concat(F.array(F.col("text")), lines_arr)).otherwise(
-                F.array(F.col("text"))
-            )
+            arr = F.when(last, F.concat(text, new))
         elif k == "insert":
-            arr = F.when(sel, F.concat(lines_arr, F.array(F.col("text")))).otherwise(
-                F.array(F.col("text"))
-            )
+            arr = F.when(first, F.concat(new, text))
         elif k == "change":
-            arr = F.when(sel, lines_arr).otherwise(F.array(F.col("text")))
+            arr = F.when(first, new).when(sel, F.array())
         else:
             raise ValueError(f"unknown command kind {k!r}")
-        exploded = df.select(
-            "line_no", F.posexplode(arr).alias("sub", "new_text")
-        ).select("line_no", "sub", F.col("new_text").alias("text"))
-        return self._global_index(exploded, ["line_no", "sub"], n)
+        rows = df.select(
+            "line_no", F.posexplode(arr.otherwise(text)).alias("sub", "text")
+        )
+        return self._global_index(rows, ["line_no", "sub"], n)

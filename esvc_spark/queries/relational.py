@@ -2918,7 +2918,7 @@ def _ordered_runs(
             F.length("v").alias("width"),
         )
 
-    if _use_local(None, n_rows):
+    if _use_local(n_rows):
         return within_runs(base, Window.orderBy(key, "ak")), 0
     p = max(spark.sparkContext.defaultParallelism, 2)
     part = (

@@ -66,9 +66,18 @@ def test_spark_replace_noop_rejected(spark, replace_engine):
     assert w.shelve_event(g, set(), Event(cmd=0, arg=sear("zzz", "q"))) is None
 
 
-def test_spark_ex_engine_matches_local_oracle(spark, ex_engine):
+def test_spark_ex_engine_matches_local_oracle(spark, ex_engine, monkeypatch):
     """Every editor command on the lines DataFrame matches the in-memory
-    ExEngine (the reference-parity implementation)."""
+    ExEngine (the reference-parity implementation): a short script, then
+    a table of every address form × every command kind × data of 0, 1,
+    4 and 37 lines, on both renumber paths. The table's plans are
+    tagged, unioned and collected once per dataset and path."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from esvc_spark.core import spark_engine
     from esvc_spark.core.engines import ExEngine as LocalEx
 
     local = LocalEx()
@@ -92,6 +101,62 @@ def test_spark_ex_engine_matches_local_oracle(spark, ex_engine):
         sdat = eng.run_event_bare(0, arg, sdat)
         ldat = local.run_event_bare(0, arg, ldat)
         assert eng.lines(sdat) == list(ldat), f"divergence after {addr_s}{cmd}"
+
+    kinds = [
+        (cmd, body)
+        for cmd in ("append", "insert", "change")
+        for body in ([], ["new1", "new2"])
+    ] + [("delete", None), ("substitute", ["o", "0"])]
+
+    def addresses(n):
+        # $, regexes (some, every, no line), N, N,M, N,M past the end,
+        # N, (from the top, mid-way, the empty insertion point at n),
+        # and N / N, past the end
+        return ["$", "/o/", "/^/", "/zzz/", "0", "1", "1,3", "2,99", "0,",
+                "2,", f"{n},", f"{n + 2}", f"{n + 2},"]
+
+    for threshold in (spark_engine.TWO_PHASE_MIN_ROWS, 0):
+        monkeypatch.setattr(spark_engine, "TWO_PHASE_MIN_ROWS", threshold)
+        for n in (0, 1, 4, 37):
+            data = [f"{'foo' if i % 3 == 0 else 'bar'} {i}" for i in range(n)]
+            sdat = eng.init_data(data)
+            cases, plans = [], []
+            for addr_s in addresses(n):
+                addr, rest = parse_address(addr_s)
+                assert rest == ""
+                for cmd, body in kinds:
+                    arg = make_command(addr, cmd, body)
+                    want = local.run_event_bare(0, arg, tuple(data))
+                    plan = eng._apply_plan(0, arg, sdat.df, sdat.count)
+                    if plan is sdat.df:  # the no-op path returns its input
+                        assert list(want) == data, (threshold, addr_s, cmd)
+                        continue
+                    plans.append(plan.select(
+                        F.lit(len(cases)).alias("case"), "line_no", "text"
+                    ))
+                    cases.append((addr_s, cmd, body, list(want)))
+            got: dict = {}
+            for r in reduce(DataFrame.unionByName, plans).collect():
+                got.setdefault(r["case"], []).append((r["line_no"], r["text"]))
+            for i, (addr_s, cmd, body, want) in enumerate(cases):
+                rows = sorted(got.get(i, []))
+                assert rows == list(enumerate(want)), (
+                    threshold, n, addr_s, cmd, body, rows, want
+                )
+
+            # an invalid pattern is rejected while the plan is built,
+            # before any Spark job, whatever the command
+            if n:
+                bad, _ = parse_address("/(/")
+                for cmd, body in kinds:
+                    arg = make_command(bad, cmd, body)
+
+                    def build(arg=arg):
+                        with pytest.raises(ValueError, match="invalid regex"):
+                            eng._apply_plan(0, arg, sdat.df, sdat.count)
+
+                    assert _jobs_of(spark, build)[1] == 0, cmd
+            sdat.df.unpersist()
 
 
 def test_spark_ex_distributed_renumber_matches_local(spark, ex_engine, monkeypatch):
@@ -773,7 +838,7 @@ def test_grouped_prefix_sum_non_integer_value_types(spark):
         loc = {
             r["id"]: r["ps"]
             for r in grouped_exclusive_prefix_sum(
-                spark, df, ["g"], ["k", "id"], "x", "ps", local=True
+                spark, df, ["g"], ["k", "id"], "x", "ps", n_rows=len(base)
             ).collect()
         }
         assert two == loc
