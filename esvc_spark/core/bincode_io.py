@@ -356,31 +356,42 @@ def write_graph_file(g: Graph, path: str) -> None:
 # ----------------------------------------------------- native rehashing
 
 
-def rehash_to_native(other: Graph) -> tuple[Graph, dict[bytes, bytes]]:
-    """Translate a reference-hashed graph into this engine's id scheme.
-
-    Walks every event in dependency order (the same deterministic
-    schedule import uses, ref main.rs:69-76) and re-ensures it into a
-    fresh Graph, rewriting each event's dep keys through the
-    old-id → new-id map built so far. Head-sets translate through the
-    same map. Returns (native graph, old→new map)."""
-    schedule = other.calculate_dependencies(
-        set(), {h: IncludeSpec.INCLUDE_ALL for h in sorted(other.events)}
+def _rekey(graph: Graph, insert: Callable[[Event], bytes]) -> dict[bytes, bytes]:
+    """Re-key every event of `graph` in dependency order (the same
+    deterministic schedule import uses, ref main.rs:69-76): `insert`
+    stores each event, its dep keys already translated through the
+    old-id → new-id map built so far, and returns its new id. Returns
+    the old → new map."""
+    schedule = graph.calculate_dependencies(
+        set(), {h: IncludeSpec.INCLUDE_ALL for h in sorted(graph.events)}
     )
-    native = Graph()
     mapping: dict[bytes, bytes] = {}
     for old in schedule:
-        ev = other.events[old]
-        collision, new = native.ensure_event(
+        ev = graph.events[old]
+        mapping[old] = insert(
             Event(
                 cmd=ev.cmd,
                 arg=ev.arg,
                 deps={mapping[d]: hard for d, hard in ev.deps.items()},
             )
         )
+    return mapping
+
+
+def rehash_to_native(other: Graph) -> tuple[Graph, dict[bytes, bytes]]:
+    """Translate a reference-hashed graph into this engine's id scheme:
+    every event is re-ensured into a fresh Graph (`_rekey`) and the
+    head-sets translate through the same map. Returns (native graph,
+    old→new map)."""
+    native = Graph()
+
+    def insert(ev: Event) -> bytes:
+        collision, new = native.ensure_event(ev)
         if collision is not None:
             raise HashCollision(new, collision)
-        mapping[old] = new
+        return new
+
+    mapping = _rekey(other, insert)
     for name, heads in other.nstates.items():
         native.nstates[name] = {mapping[h] for h in heads}
     return native, mapping
@@ -413,31 +424,22 @@ def arg_to_reference_command(arg: Any) -> dict:
 
 
 def export_reference_file(
-    graph: Graph,
-    path: str,
-    state: str = "",
-    arg_convert: Callable[[Any], dict] = arg_to_reference_command,
+    graph: Graph, path: str, state: str = ""
 ) -> dict[bytes, bytes]:
     """Write a native graph AS a reference-format file the Rust exvc can
     `m<`-import: every event is re-keyed under the reference's
-    bincode-blake2b id scheme (deps translated in dependency order —
-    the mirror of rehash_to_native), and the named head-set travels as
+    bincode-blake2b id scheme (`_rekey`, the mirror of
+    rehash_to_native), and the named head-set travels as
     nstates[state]. Returns the native→reference id map."""
-    schedule = graph.calculate_dependencies(
-        set(), {h: IncludeSpec.INCLUDE_ALL for h in sorted(graph.events)}
-    )
     out = Graph()
-    mapping: dict[bytes, bytes] = {}
-    for old in schedule:
-        ev = graph.events[old]
-        ref_ev = Event(
-            cmd=ev.cmd,
-            arg=arg_convert(ev.arg),
-            deps={mapping[d]: hard for d, hard in ev.deps.items()},
-        )
-        h = reference_event_hash(ref_ev)
-        out.events[h] = ref_ev
-        mapping[old] = h
+
+    def insert(ev: Event) -> bytes:
+        arg_to_reference_command(ev.arg)  # BincodeError: not an editor arg
+        h = reference_event_hash(ev)
+        out.events[h] = ev
+        return h
+
+    mapping = _rekey(graph, insert)
     heads = graph.nstates.get(state, set())
     if heads:
         out.nstates[state] = {mapping[h] for h in heads}

@@ -207,11 +207,12 @@ def resolve_addr(dat: tuple[str, ...], addr: dict) -> list[tuple[list[str], bool
 
 
 def _rust_repl_to_python(repl: str) -> str:
-    """Translate Rust-regex `$1`/`${name}` group refs to Python `\\1`/
+    """Translate Rust-regex `$N`/`${name}` group refs to Python `\\g<N>`/
     `\\g<name>` so stored args keep one canonical syntax (the Spark engine
-    passes `$1` through to Java regexp_replace unchanged)."""
+    passes `$N` through to Java regexp_replace unchanged). `$0` is the
+    whole match, as in Java and Rust."""
     repl = re.sub(r"\$\{(\w+)\}", r"\\g<\1>", repl)
-    repl = re.sub(r"\$(\d+)", r"\\\1", repl)
+    repl = re.sub(r"\$(\d+)", r"\\g<\1>", repl)
     return repl.replace("$$", "$")
 
 

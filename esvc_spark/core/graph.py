@@ -13,14 +13,13 @@ recommendation). Determinism: everywhere the reference relies on BTreeMap/
 BTreeSet iteration order (sorted by hash), we sort the byte-string hashes —
 Python bytes ordering == Rust [u8] Ord.
 
-Args are engine-specific values serialized through `arg_encode` (canonical
-JSON by default: sorted keys, compact separators, UTF-8).
+Args are engine-specific values serialized as canonical JSON (sorted
+keys, compact separators, UTF-8).
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Callable
 from dataclasses import dataclass, field
 from enum import Enum
 from typing import Any
@@ -74,10 +73,10 @@ class Event:
     arg: Any
     deps: dict[bytes, bool] = field(default_factory=dict)
 
-    def encode(self, arg_encode: Callable[[Any], bytes] = canonical_json_encode) -> bytes:
+    def encode(self) -> bytes:
         """Canonical byte encoding (versioned on-disk contract; the hash
         input ≙ graph.rs:140-141 bincode role)."""
-        arg_b = arg_encode(self.arg)
+        arg_b = canonical_json_encode(self.arg)
         out = bytearray(b"esvc-spark:event:v1\x00")
         out += self.cmd.to_bytes(4, "little")
         out += len(arg_b).to_bytes(8, "little")
@@ -103,10 +102,9 @@ class Event:
 class Graph:
     """Append-only content-addressed event log + named head-sets."""
 
-    def __init__(self, arg_encode: Callable[[Any], bytes] = canonical_json_encode):
+    def __init__(self):
         self.events: dict[bytes, Event] = {}
         self.nstates: dict[str, set[bytes]] = {}
-        self.arg_encode = arg_encode
 
     # -- fold_state ≙ graph.rs:56-83 ------------------------------------
     def fold_state(self, st: dict[bytes, bool], expand: bool) -> dict[bytes, bool]:
@@ -178,7 +176,7 @@ class Graph:
         """Content-addressed get-or-insert. Returns (colliding event or
         None, hash). Re-inserting an identical event is a no-op; same hash
         with different payload reports the collision."""
-        h = calculate_hash(ev.encode(self.arg_encode))
+        h = calculate_hash(ev.encode())
         existing = self.events.get(h)
         if existing is None:
             self.events[h] = ev

@@ -29,13 +29,13 @@ Engines:
     (SURVEY.md §1.2). Every address resolves to row predicates and
     every command kind is one plan shape whatever the address: a
     projection (substitute), a filter (delete), or one array per row
-    exploded in place (append/insert/change). Renumbering orders by
-    (input line_no, array position) and switches on dataset size: below
-    TWO_PHASE_MIN_ROWS a single window (one-task sort, the cheapest plan
-    at editor scale); above it a distributed prefix sum over fixed
-    line_no buckets (per-bucket counts, cumulative offsets broadcast
-    back, within-bucket rank + offset) — no single-task stage at any
-    size, so the editor holds up on corpus-of-lines datasets too.
+    exploded in place (append/insert/change). Renumbering is one running
+    count of rows in (input line_no, array position) order and switches
+    on dataset size: below TWO_PHASE_MIN_ROWS the count runs over a
+    single window (one-task sort, the cheapest plan at editor scale);
+    above it within fixed line_no buckets, plus a broadcast per-bucket
+    offset (bucket sizes summed cumulatively) — no single-task stage at
+    any size, so the editor holds up on corpus-of-lines datasets too.
 """
 
 from __future__ import annotations
@@ -128,84 +128,6 @@ def _use_local(n_rows: int | None) -> bool:
     return n_rows is not None and n_rows <= TWO_PHASE_MIN_ROWS
 
 
-def exclusive_prefix_sum(
-    spark: SparkSession,
-    df: DataFrame,
-    order_cols: list[str],
-    value_col: str,
-    out_col: str,
-    *,
-    n_rows: int | None = None,
-    bucket_of=None,
-) -> DataFrame:
-    """`df` plus `out_col` = exclusive prefix sum of `value_col` in
-    `order_cols` order (row i gets the sum of values strictly before it).
-
-    ``bucket_of`` (round 12): a Column expression mapping each ROW to an
-    integer bucket 0..P-1 that is monotone non-decreasing along
-    `order_cols` — i.e. the caller KNOWS the order key's domain and can
-    range-bucket it deterministically from the data alone. With it the
-    two-phase plan becomes a PURE PLAN: within-bucket window + a tiny
-    bucket-offset aggregate joined back — no repartitionByRange sampling,
-    so no eager localCheckpoint + partial-sum collect at plan-BUILD time
-    (that eager pair made every renumbering `_apply_plan` construction
-    cost two jobs inside the esvc shelve loop, where one commutation
-    round builds many plans). The plan reads `df` TWICE (the bucket
-    offsets aggregate and the within-bucket window), so `df` must be
-    deterministic: both reads must see the same rows with the same
-    bucket. A nondeterministic input (rand(), a sample, a
-    nondeterministic UDF, an unpinned limit) can give the two reads
-    different rows and wrong offsets; pin such an input first (persist
-    or localCheckpoint). Given a deterministic input, correctness does
-    not depend on exchange reuse: the bucket is a pure row function, so
-    re-evaluated branches agree by construction. Use only with
-    exactly-summable value types (integers/decimals): the bucketed
-    addition order differs from the sampled-range order.
-
-    Without `bucket_of` this is grouped_exclusive_prefix_sum with no
-    group columns: below TWO_PHASE_MIN_ROWS (`n_rows`, any cheap upper
-    bound on df's rows — the parquet-metadata base-table count at the
-    query call sites) one small window, else (or unknown) the two-phase
-    plan — range-partition pinned by localCheckpoint, P partial sums
-    collected into offsets, within-partition running sum + broadcast
-    offset. Both paths are bit-identical (tests/test_spark_core.py
-    differential suite).
-
-    NULL `value_col` rows count as 0 in every path, so a nullable caller
-    gets shifted-by-0 rows, never mixed NULL/shifted output.
-    """
-    from pyspark.sql import Window
-
-    if bucket_of is None or _use_local(n_rows):
-        return grouped_exclusive_prefix_sum(
-            spark, df, [], order_cols, value_col, out_col, n_rows=n_rows
-        )
-    val = F.coalesce(F.col(value_col), F.lit(0))
-    base = df.withColumn("_b", bucket_of.cast("int"))
-    off_w = Window.orderBy("_b").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    # P rows total: the offset window's single task is trivial
-    offs = (
-        base.groupBy("_b")
-        .agg(F.sum(val).alias("_s"))
-        .select(
-            "_b",
-            F.coalesce(F.sum("_s").over(off_w), F.lit(0)).alias("_off"),
-        )
-    )
-    w = (
-        Window.partitionBy("_b")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        base.join(F.broadcast(offs), "_b")
-        .withColumn(out_col, F.sum(val).over(w) - val + F.col("_off"))
-        .drop("_b", "_off")
-    )
-
-
 def grouped_exclusive_prefix_sum(
     spark: SparkSession,
     df: DataFrame,
@@ -217,9 +139,11 @@ def grouped_exclusive_prefix_sum(
     n_rows: int | None = None,
     max_group_rows: int | None = None,
 ) -> DataFrame:
-    """Per-GROUP exclusive prefix sum of `value_col` in `order_cols`
-    order — the grouped twin of exclusive_prefix_sum, for the plan shape
-    a per-group window over a LOW-CARDINALITY key produces at scale: a
+    """`df` plus `out_col` = per-GROUP exclusive prefix sum of
+    `value_col` in `order_cols` order (row i gets the sum of its group's
+    values strictly before it); `group_cols=[]` makes it one global
+    prefix sum. It replaces the plan a per-group window over a
+    LOW-CARDINALITY key produces at scale: a
     `Window.partitionBy(event_type)` over 1e9 events funnels each type's
     whole partition through one task, while this runs every stage
     partition-parallel. Range-partition on (group, order) so each
@@ -229,15 +153,19 @@ def grouped_exclusive_prefix_sum(
     window instead when |groups| is high-cardinality, since then each
     group is small and the window already parallelizes), fold them into
     per-group offsets, and add the within-partition running sum.
-    NULL `value_col` counts as 0 (matching exclusive_prefix_sum).
-    `n_rows` switches to a plain per-group window below
-    TWO_PHASE_MIN_ROWS (see exclusive_prefix_sum) — at that size even
-    the largest group is one small task. The per-group window's real
-    single-task cost is the LARGEST GROUP's sort, so a caller whose
-    groups are bounded by construction (e.g. a per-layout union of G
-    copies of one table — every group is exactly that table) may pass
-    `max_group_rows` instead of / alongside `n_rows`; either bound
-    landing under the threshold selects the local plan."""
+    NULL `value_col` counts as 0 on both paths, so a nullable caller
+    gets shifted-by-0 rows, never mixed NULL/shifted output.
+    `n_rows` (any cheap UPPER bound on df's rows, e.g. the
+    parquet-metadata base-table count) switches to a plain per-group
+    window at or below TWO_PHASE_MIN_ROWS — at that size even the
+    largest group is one small task; unknown keeps the two-phase plan.
+    The per-group window's real single-task cost is the LARGEST GROUP's
+    sort, so a caller whose groups are bounded by construction (e.g. a
+    per-layout union of G copies of one table — every group is exactly
+    that table) may pass `max_group_rows` instead of / alongside
+    `n_rows`; either bound landing under the threshold selects the local
+    plan. Both paths are bit-identical for exactly-summable values
+    (tests/test_spark_core.py differential suite)."""
     from pyspark.sql import Window
 
     val = F.coalesce(F.col(value_col), F.lit(0))
@@ -321,12 +249,18 @@ def grouped_row_number(
     n_rows: int | None = None,
     max_group_rows: int | None = None,
 ) -> DataFrame:
-    """1-based per-group ROW_NUMBER in `order_cols` order, computed
-    partition-parallel via grouped_exclusive_prefix_sum of a constant 1
-    — the scale replacement for `row_number().over(Window.partitionBy(
-    low_cardinality_key).orderBy(...))`. Deterministic iff (group,
-    order) is a total order. `n_rows`/`max_group_rows`: see
-    grouped_exclusive_prefix_sum (threaded through)."""
+    """1-based per-group ROW_NUMBER (BIGINT) in `order_cols` order,
+    computed partition-parallel via grouped_exclusive_prefix_sum of a
+    constant 1 — the scale replacement for `row_number().over(
+    Window.partitionBy(low_cardinality_key).orderBy(...))`;
+    `group_cols=[]` gives the global ROW_NUMBER, never an unpartitioned
+    window funnelling the whole table through one task. Deterministic
+    iff (group, order) is a total order (a unique full key); ties would
+    land on whichever side of a sampled range boundary they fall.
+    Spark's ASC default (NULLS FIRST) applies to both the range
+    partitioning and the within-partition window, so a DuckDB oracle
+    twin must pin NULLS FIRST explicitly. `n_rows`/`max_group_rows`:
+    see grouped_exclusive_prefix_sum (threaded through)."""
     tmp = "_grn_one"
     out = grouped_exclusive_prefix_sum(
         spark, df.withColumn(tmp, F.lit(1)), group_cols, order_cols,
@@ -348,14 +282,14 @@ def global_running_max(
 ) -> DataFrame:
     """`df` plus `out_col` = running MAX of `value_col` over the rows at
     or before this one in `order_cols` order (inclusive prefix max) —
-    the exclusive_prefix_sum two-phase shape with max in place of sum:
-    range-partition on the order key (pinned by localCheckpoint),
-    collect the P per-partition maxima, turn them into exclusive prefix
-    maxima on the driver, then greatest(within-partition running max,
-    broadcast offset). Partition-parallel at any scale; NULL values are
-    ignored by max in both phases. `n_rows` switches to one small
-    single-task window below TWO_PHASE_MIN_ROWS (see
-    exclusive_prefix_sum)."""
+    the grouped_exclusive_prefix_sum two-phase shape (no groups) with
+    max in place of sum: range-partition on the order key (pinned by
+    localCheckpoint), collect the P per-partition maxima, turn them into
+    exclusive prefix maxima on the driver, then greatest(within-partition
+    running max, broadcast offset). Partition-parallel at any scale;
+    NULL values are ignored by max in both phases. `n_rows` switches to
+    one small single-task window at or below TWO_PHASE_MIN_ROWS (see
+    grouped_exclusive_prefix_sum)."""
     from pyspark.sql import Window
 
     if _use_local(n_rows):
@@ -389,27 +323,6 @@ def global_running_max(
         .withColumn(out_col, F.greatest(local_max, F.col("_off")))
         .drop("_pid", "_off")
     )
-
-
-def global_row_number(
-    spark: SparkSession,
-    df: DataFrame,
-    order_cols: list,  # str names or Column sort orders (F.desc(...))
-    out_col: str,
-    *,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """`df` plus `out_col` = 1-based global ROW_NUMBER() in `order_cols`
-    order: grouped_row_number with no group columns (per-partition
-    row_number + broadcast partition offsets) — never an unpartitioned
-    window funnelling the whole table through one task. Deterministic
-    iff `order_cols` is a total order (unique full key); ties would land
-    on whichever side of a sampled range boundary they fall. Spark's ASC
-    default (NULLS FIRST) applies to both the range partitioning and the
-    within-partition window, so a DuckDB oracle twin must pin NULLS
-    FIRST explicitly. `n_rows`: see exclusive_prefix_sum.
-    """
-    return grouped_row_number(spark, df, [], order_cols, out_col, n_rows=n_rows)
 
 
 class SparkEngineBase(BaseEngine):
@@ -689,30 +602,41 @@ class SparkExEngine(SparkEngineBase):
         self, df: DataFrame, order_cols: list[str], n_rows: int
     ) -> DataFrame:
         """(line_no, text) with line_no = 0-based contiguous global rank in
-        `order_cols` order — the exclusive prefix sum of 1s, delegated to
-        `exclusive_prefix_sum` (two-phase partition-parallel above
-        TWO_PHASE_MIN_ROWS, single tiny window below: 1M short lines, the
-        most ONE task sorts, is a few tens of MB)."""
-        bucket = None
-        if not _use_local(n_rows):
-            # the order key's domain IS known here: the leading column is
-            # the input's line_no in [0, n_rows), so a fixed range
-            # bucketing is monotone and balanced by construction — the
-            # deterministic bucket_of path keeps the renumber a PURE PLAN
-            # (no eager checkpoint/collect at every _apply_plan
-            # construction inside the shelve loop)
-            p = max(self.spark.sparkContext.defaultParallelism, 2)
-            bucket = F.floor(F.col(order_cols[0]) * F.lit(p) / F.lit(n_rows))
-        out = exclusive_prefix_sum(
-            self.spark,
-            df.withColumn("_one", F.lit(1).cast("bigint")),
-            order_cols,
-            "_one",
-            "line_no",
-            n_rows=n_rows,
-            bucket_of=bucket,
+        `order_cols` order: a running count of rows, minus 1, in one
+        select. At or below TWO_PHASE_MIN_ROWS the count runs over one
+        window (1M short lines, the most ONE task sorts, is a few tens
+        of MB). Above it the leading order column, the input's line_no
+        in [0, n_rows), buckets the rows by fixed ranges, monotone and
+        balanced by construction; the count runs within each bucket and
+        a broadcast per-bucket offset (bucket sizes summed over the
+        buckets before it) is added. Either way the renumber is a PURE
+        PLAN (no job while it is built), which commute_batch relies on
+        when one commutation round builds many plans. The bucketed plan
+        reads `df` twice (bucket sizes and the within-bucket count), so
+        `df` must be deterministic; every editor plan is (a filter or an
+        explode over a persisted state). The count is BIGINT: one bucket
+        can outgrow row_number's int range."""
+        from pyspark.sql import Window
+
+        rank = F.count(F.lit(1))
+        running = (Window.unboundedPreceding, Window.currentRow)
+        if _use_local(n_rows):
+            w = Window.orderBy(*order_cols).rowsBetween(*running)
+            return df.select((rank.over(w) - 1).alias("line_no"), "text")
+        p = max(self.spark.sparkContext.defaultParallelism, 2)
+        df = df.withColumn(
+            "_b", F.floor(F.col(order_cols[0]) * F.lit(p) / F.lit(n_rows))
         )
-        return out.select(F.col("line_no").cast("bigint").alias("line_no"), "text")
+        # one row per bucket: the offset window's single task is trivial
+        offs = df.groupBy("_b").count().select(
+            "_b",
+            (F.sum("count").over(Window.orderBy("_b").rowsBetween(*running))
+             - F.col("count")).alias("_off"),
+        )
+        w = Window.partitionBy("_b").orderBy(*order_cols).rowsBetween(*running)
+        return df.join(F.broadcast(offs), "_b").select(
+            (rank.over(w) + F.col("_off") - 1).alias("line_no"), "text"
+        )
 
     @staticmethod
     def _segments(addr: dict, n: int):

@@ -166,9 +166,7 @@ def save_graph(spark: SparkSession | None, graph: Graph, path: str) -> None:
         storage.replace_dir(stage, table_dir)
 
 
-def load_graph(
-    spark: SparkSession | None, path: str, arg_decode=json.loads
-) -> Graph:
+def load_graph(spark: SparkSession | None, path: str) -> Graph:
     """Read the parquet directory store at `path`, whether save_graph or
     Spark's writer produced it, after finishing any save a crash
     interrupted. Runs on the driver with pyarrow; `spark` is unused and
@@ -183,7 +181,7 @@ def load_graph(
         for r in events:
             g.events[r["event_id"]] = Event(
                 cmd=r["cmd"],
-                arg=arg_decode(r["arg"]),
+                arg=json.loads(r["arg"]),
                 deps=dict(r["deps"] or ()),
             )
         for r in nstates:

@@ -109,7 +109,7 @@ def sql_ofold_sum(key: str, val: str) -> str:
 def ntile_from_rank(rank_col: str, n_col: str, k: int) -> Column:
     """Exact NTILE(k) from a 1-based global rank and the total row count
     — pure integer arithmetic, so a partition-parallel global rank
-    (core.spark_engine.global_row_number) replaces the unpartitioned
+    (core.spark_engine.grouped_row_number) replaces the unpartitioned
     NTILE window while matching DuckDB's NTILE down to the last
     straddling tie: with n = k·q + r the first r tiles hold q+1 rows.
     The ELSE branch divides by q, which is 0 only when n < k — in that

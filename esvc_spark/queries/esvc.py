@@ -235,8 +235,8 @@ def _word_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     globally numbered 0..N-1 in (doc_id, word position) order. The
     numbering is arithmetic — per-doc offsets from a two-phase
     partition-parallel prefix sum over the per-doc count table
-    (core.spark_engine.exclusive_prefix_sum, the same machinery behind
-    the engine's corpus-scale renumber), joined back onto the exploded
+    (core.spark_engine.grouped_exclusive_prefix_sum with no group
+    columns), joined back onto the exploded
     words — so neither the corpus-sized explode NOR the offset table has
     a single-task stage at any scale. The offsets join is itself
     size-conditional (round 7, closing the seam the r6 docstring only
@@ -248,7 +248,7 @@ def _word_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     fits a broadcast, and both sides already hash-partition on doc_id
     so the swap adds one bounded exchange, never a driver-sized one."""
     from ..catalog import table_rows
-    from ..core.spark_engine import exclusive_prefix_sum
+    from ..core.spark_engine import grouped_exclusive_prefix_sum
 
     # size-conditional offset plan, the same TWO_PHASE_MIN_ROWS gate as
     # the engine's renumber: the offsets table is |documents| rows, so
@@ -269,9 +269,10 @@ def _word_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.split("text", " ").alias("w"))
         .repartition(p_docs, "doc_id")
     )
-    offs = exclusive_prefix_sum(
+    offs = grouped_exclusive_prefix_sum(
         spark,
         docs.select("doc_id", F.size("w").cast("bigint").alias("nw")),
+        [],
         ["doc_id"],
         "nw",
         "off",

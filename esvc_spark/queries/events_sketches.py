@@ -399,9 +399,9 @@ CROSS JOIN nb
 # label — the feature-store shape behind churn/LTV training sets.
 #
 # Scale: the quartiles come from three PARTITION-PARALLEL global ranks
-# (core.spark_engine.global_row_number: range-partition, per-partition
-# row_number, broadcast partition offsets — the exclusive_prefix_sum
-# machinery), never from an unpartitioned NTILE window that would
+# (core.spark_engine.grouped_row_number with no group columns:
+# range-partition, per-partition row_number, broadcast partition
+# offsets), never from an unpartitioned NTILE window that would
 # funnel the |users| table through one task. NTILE(4) is then exact
 # integer arithmetic on (rank, n): with n = 4q + r the first r tiles
 # hold q+1 rows — identical to the oracle's NTILE down to the last
@@ -418,7 +418,7 @@ def _ntile4(rank_col: str) -> "F.Column":
 
 def q_ev_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from esvc_spark.catalog import table_rows
-    from esvc_spark.core.spark_engine import global_row_number
+    from esvc_spark.core.spark_engine import grouped_row_number
 
     ev = T(spark, sf_dir, "events")
     # |users| ≤ |events|: the metadata count gates the three rank passes
@@ -430,15 +430,15 @@ def q_ev_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # NULL convention (degenerate-suite seeds): a NULL user_id group and
     # a NULL monetary (all-NULL values) sort FIRST in every quartile
-    # ranking — Spark's ASC default (global_row_number inherits it for
+    # ranking — Spark's ASC default (grouped_row_number inherits it for
     # both the range partitioner and the window), pinned explicitly in
     # the oracle (DuckDB defaults to NULLS LAST).
     ranked = per_user
     for metric, out in (
         ("last_ts", "_ri"), ("n_events", "_fi"), ("monetary", "_mi")
     ):
-        ranked = global_row_number(
-            spark, ranked, [metric, "user_id"], out, n_rows=n_bound
+        ranked = grouped_row_number(
+            spark, ranked, [], [metric, "user_id"], out, n_rows=n_bound
         )
     # n from the rank frame (max rank = row count). On the two-phase
     # path the frame is checkpoint-pinned (no second evaluation); on the

@@ -783,12 +783,13 @@ def q_window_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per decile.
 
     Scale (round 7, the q_ev_rfm shape): the decile comes from a
-    partition-parallel global rank (core.spark_engine.global_row_number
-    — range-partition, per-partition row_number, broadcast offsets) and
-    exact integer NTILE-from-rank arithmetic (_util.ntile_from_rank),
+    partition-parallel global rank (core.spark_engine.grouped_row_number
+    with no group columns — range-partition, per-partition row_number,
+    broadcast offsets) and exact integer NTILE-from-rank arithmetic
+    (_util.ntile_from_rank),
     never an unpartitioned NTILE window funnelling the |customers| table
     through one task. Output and oracle unchanged."""
-    from esvc_spark.core.spark_engine import global_row_number
+    from esvc_spark.core.spark_engine import grouped_row_number
 
     from ._util import ntile_from_rank
 
@@ -800,8 +801,8 @@ def q_window_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |spend| = distinct custkeys ≤ |orders|: metadata-count size gate
     from esvc_spark.catalog import table_rows
 
-    ranked = global_row_number(
-        spark, spend, [F.desc("spend"), F.asc("o_custkey")], "_i",
+    ranked = grouped_row_number(
+        spark, spend, [], [F.desc("spend"), F.asc("o_custkey")], "_i",
         n_rows=table_rows(spark, sf_dir, "orders"),
     )
     # n from the rank frame (max rank = row count; checkpoint-pinned on
@@ -2609,12 +2610,12 @@ def q_histogram_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one small window does. n comes from the rank frame (max rank =
     # row count; pinned on the two-phase path, re-derived
     # deterministically on the local path).
-    from esvc_spark.core.spark_engine import global_row_number
+    from esvc_spark.core.spark_engine import grouped_row_number
 
     from esvc_spark.catalog import table_rows
 
-    ranked = global_row_number(
-        spark, orders, ["v", "o_orderkey"], "rn",
+    ranked = grouped_row_number(
+        spark, orders, [], ["v", "o_orderkey"], "rn",
         n_rows=table_rows(spark, sf_dir, "orders"),
     )
     n_tot = ranked.agg(F.max("rn").alias("n"))
@@ -2880,12 +2881,6 @@ FROM stats
 _ENC_COLS = ("o_orderstatus", "o_orderpriority", "o_custkey")
 
 
-def _de_disk():
-    from pyspark import StorageLevel
-
-    return StorageLevel.DISK_ONLY
-
-
 def _ordered_runs(
     spark: SparkSession, base: DataFrame, key: str,
     n_rows: int | None = None,
@@ -2895,15 +2890,16 @@ def _ordered_runs(
     each partition (every partition's first row counts as a start),
     then subtract one for each partition boundary whose neighboring
     values are equal — a P-row driver-side correction, exactly the
-    exclusive_prefix_sum offset pattern. Replaces the unpartitioned lag
-    window that funnelled the whole table through one task. Returns
+    grouped_exclusive_prefix_sum offset pattern. Replaces the
+    unpartitioned lag window that funnelled the whole table through one
+    task. Returns
     (per-row frame with new_run/width, boundary correction count).
 
     `n_rows` (round 8): a cheap upper bound on |base|; at or below
     core.spark_engine.TWO_PHASE_MIN_ROWS one small lag window beats the
     six per-ordering checkpoint+collect cycles (the r7 cost:
     q_encoding_advisor 0.61 → 3.55 s at sf0.1), correction = 0."""
-    from esvc_spark.core.spark_engine import _use_local
+    from esvc_spark.core.spark_engine import _DISK_ONLY, _use_local
 
     def within_runs(frame: DataFrame, w) -> DataFrame:
         # one run-start predicate for BOTH paths — the gate must never
@@ -2925,8 +2921,8 @@ def _ordered_runs(
         base.repartitionByRange(p, F.col(key), F.col("ak"))
         .withColumn("_pid", F.spark_partition_id())
         # DISK_ONLY keeps the six per-ordering checkpoints out of the
-        # heap (core.spark_engine._DISK_ONLY rationale)
-        .localCheckpoint(storageLevel=_de_disk())
+        # heap (core.spark_engine.grouped_exclusive_prefix_sum rationale)
+        .localCheckpoint(storageLevel=_DISK_ONLY())
     )
     within = within_runs(part, Window.partitionBy("_pid").orderBy(key, "ak"))
     okey = F.struct(F.col(key).alias("k1"), F.col("ak").alias("k2"))

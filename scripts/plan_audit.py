@@ -93,7 +93,8 @@ _IMPERATIVE = {
     "q_esvc_editor_large": (
         "event-log orchestration over the DISTRIBUTED SparkExEngine "
         "(4 persisted memo states + persist-free transient fingerprints; renumber is "
-        "partition-parallel above 1M rows — spark_engine._global_index); "
+        "one running-count window, bucketed by line_no with broadcast bucket "
+        "offsets above 1M rows — spark_engine._global_index); "
         "returned frame is the checkpointed final state"
     ),
     "q_stream_emb_index": (

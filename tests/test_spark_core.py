@@ -71,7 +71,9 @@ def test_spark_ex_engine_matches_local_oracle(spark, ex_engine, monkeypatch):
     ExEngine (the reference-parity implementation): a short script, then
     a table of every address form × every command kind × data of 0, 1,
     4 and 37 lines, on both renumber paths. The table's plans are
-    tagged, unioned and collected once per dataset and path."""
+    tagged, unioned and collected once per dataset and path. Every plan
+    is built without a Spark job, valid or not: commute_batch builds
+    many per round and relies on that."""
     from functools import reduce
 
     from pyspark.sql import DataFrame
@@ -127,7 +129,10 @@ def test_spark_ex_engine_matches_local_oracle(spark, ex_engine, monkeypatch):
                 for cmd, body in kinds:
                     arg = make_command(addr, cmd, body)
                     want = local.run_event_bare(0, arg, tuple(data))
-                    plan = eng._apply_plan(0, arg, sdat.df, sdat.count)
+                    plan, jobs = _jobs_of(
+                        spark, eng._apply_plan, 0, arg, sdat.df, sdat.count
+                    )
+                    assert jobs == 0, (threshold, n, addr_s, cmd)
                     if plan is sdat.df:  # the no-op path returns its input
                         assert list(want) == data, (threshold, addr_s, cmd)
                         continue
@@ -160,8 +165,9 @@ def test_spark_ex_engine_matches_local_oracle(spark, ex_engine, monkeypatch):
 
 
 def test_spark_ex_distributed_renumber_matches_local(spark, ex_engine, monkeypatch):
-    """Force the large-dataset renumber path (two-phase distributed prefix
-    sum) by zeroing the threshold and check the full editor script stays
+    """Force the large-dataset renumber path (running count within fixed
+    line_no buckets plus broadcast bucket offsets) by zeroing the
+    threshold and check the full editor script stays
     bit-identical to the in-memory ExEngine — the differential contract
     for the no-single-task-sort plan."""
     from esvc_spark.core import spark_engine
@@ -200,6 +206,18 @@ def test_spark_ex_empty_data(spark, ex_engine):
     addr, _ = parse_address("1")
     out2 = eng.run_event_bare(0, make_command(addr, "append", ["x"]), empty)
     assert eng.lines(out2) == []
+
+
+def test_substitute_dollar_zero_is_whole_match(spark, ex_engine):
+    """`$0` in a substitute replacement is the whole match in both
+    editors, as in Java and Rust regex (not a NUL character)."""
+    from esvc_spark.core.engines import ExEngine as LocalEx
+
+    addr, _ = parse_address("/ab/")
+    arg = make_command(addr, "substitute", ["ab", "<$0>"])
+    assert LocalEx().run_event_bare(0, arg, ("ab",)) == ("<ab>",)
+    out = ex_engine.run_event_bare(0, arg, ex_engine.init_data(["ab"]))
+    assert ex_engine.lines(out) == ["<ab>"]
 
 
 def test_graph_store_roundtrip(spark, tmp_path, replace_engine):
@@ -604,8 +622,8 @@ def test_word_lines_hash_join_path_matches_broadcast(spark, sf_dir, monkeypatch)
 
 
 def test_global_rank_helpers_match_single_window(spark):
-    """The two-phase partition-parallel helpers (global_row_number,
-    global_running_max) are plan-shape optimizations only: on a random
+    """The two-phase partition-parallel helpers (grouped_row_number
+    with no group columns, global_running_max) are plan-shape optimizations only: on a random
     frame they must equal the unpartitioned-window formulation row for
     row, whatever the range partitioner sampled."""
     import random
@@ -614,8 +632,8 @@ def test_global_rank_helpers_match_single_window(spark):
     from pyspark.sql import functions as F
 
     from esvc_spark.core.spark_engine import (
-        global_row_number,
         global_running_max,
+        grouped_row_number,
     )
 
     rng = random.Random(42)
@@ -624,7 +642,7 @@ def test_global_rank_helpers_match_single_window(spark):
 
     got_rank = {
         r["id"]: r["rn"]
-        for r in global_row_number(spark, df, ["k", "id"], "rn").collect()
+        for r in grouped_row_number(spark, df, [], ["k", "id"], "rn").collect()
     }
     w = Window.orderBy("k", "id")
     want_rank = {
@@ -752,7 +770,6 @@ def test_rank_helpers_local_gate_both_paths_identical(spark):
 
     from esvc_spark.core.spark_engine import (
         TWO_PHASE_MIN_ROWS,
-        global_row_number,
         global_running_max,
         grouped_exclusive_prefix_sum,
         grouped_row_number,
@@ -775,7 +792,7 @@ def test_rank_helpers_local_gate_both_paths_identical(spark):
         return sorted(tuple(r[c] for c in cols) for r in out.collect())
 
     for helper, cols in (
-        (lambda **kw: global_row_number(spark, df, ["k", "id"], "rn", **kw),
+        (lambda **kw: grouped_row_number(spark, df, [], ["k", "id"], "rn", **kw),
          ("id", "rn")),
         (lambda **kw: global_running_max(spark, df, ["k", "id"], "x", "m", **kw),
          ("id", "m")),
@@ -850,17 +867,16 @@ def test_rank_helpers_empty_input(spark):
     from pyspark.sql import functions as F
 
     from esvc_spark.core.spark_engine import (
-        exclusive_prefix_sum,
-        global_row_number,
         global_running_max,
         grouped_exclusive_prefix_sum,
         grouped_row_number,
     )
 
     df = spark.createDataFrame([], "id BIGINT, g STRING, x BIGINT")
-    assert global_row_number(spark, df, ["id"], "rn").count() == 0
+    assert grouped_row_number(spark, df, [], ["id"], "rn").count() == 0
     assert (
-        exclusive_prefix_sum(spark, df, ["id"], "x", "ps").count() == 0
+        grouped_exclusive_prefix_sum(spark, df, [], ["id"], "x", "ps").count()
+        == 0
     )
     assert (
         global_running_max(spark, df, ["id"], "x", "m").count() == 0
