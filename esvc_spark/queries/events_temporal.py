@@ -911,13 +911,13 @@ def q_stream_ingest_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 # over Event.encode, dependency on its 16-chain predecessor except every
 # third generation), appended MERGE-shaped (anti-join on the content
 # address) into the events_log table, with per-batch append_head and
-# >100-head compaction into the heads table. The whole pipeline runs
+# head-set minimization into the heads table. The whole pipeline runs
 # TWICE (fresh checkpoint — full redelivery): if the idempotent append
 # ever regressed, n_events doubles and the hash gate fails. The final
-# row set folds the MAINTAINED heads table through one last minimize
-# (compaction is threshold-triggered, so when it last fired depends on
-# batch boundaries; the final fold is the deterministic quantity — the
-# same closed form q_stream_heads' oracle states).
+# row set folds the MAINTAINED heads table through one last minimize,
+# as every reader does (a crash between a batch's log append and its
+# heads swap leaves heads non-minimal until the batch replays) — the
+# same closed form q_stream_heads' oracle states.
 
 
 def q_stream_event_log(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -40,6 +40,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # generated classes kept compiled; the default 100 is smaller than
+        # the query surface's class set, so a cycle through it recompiles
+        # every class (LRU thrash)
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # the events table stores TIMESTAMP(NANOS) parquet, which Spark
         # rejects by default; read as long and convert in the catalog
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

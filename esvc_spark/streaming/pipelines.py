@@ -21,9 +21,8 @@ micro-batches (at-least-once sources) cannot duplicate events.
 from __future__ import annotations
 
 import posixpath
-from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core import storage
@@ -151,37 +150,32 @@ def append_new_events(out: DataFrame, target: str) -> None:
 
 
 def ingest_into_event_log(
-    stream: DataFrame,
-    log_dir: str,
-    checkpoint_dir: str,
-    to_event: Callable[[DataFrame], DataFrame] | None = None,
+    stream: DataFrame, log_dir: str, checkpoint_dir: str
 ) -> None:
     """foreachBatch sink appending stream rows into an append-only event
     table, idempotently (replayed micro-batches can't duplicate rows) —
     the streaming realization of Graph.ensure_event's get-or-insert
     (crates/esvc-core/src/graph.rs:132-155): content identity wins, not
-    arrival count.
-
-    `to_event` maps the raw micro-batch to the log schema; default keeps
-    the events schema and treats event_id as the content address.
+    arrival count. Rows keep the events schema, and event_id is the
+    content address.
     """
 
     target = posixpath.join(log_dir, "events_stream")
 
     def _append(batch: DataFrame, batch_id: int) -> None:
-        out = to_event(batch) if to_event is not None else batch
-        append_new_events(out.dropDuplicates(["event_id"]), target)
+        append_new_events(batch.dropDuplicates(["event_id"]), target)
 
     _drain(stream, _append, checkpoint_dir)
 
 
 # ------------------------------------------------ streamed event-log loop
 # The full REPL loop (ref crates/exvc/src/main.rs:217-250: shelve →
-# append_head → compact when >100 heads) driven from a STREAM instead of
-# stdin. Each source event becomes one graph event: cmd 0, a canonical
-# JSON arg, and a dependency on its 16-chain predecessor except every
-# third generation (the q_stream_heads dependency rule — so the final
-# head set has a closed-form oracle).
+# append_head → compact when >100 heads; here every batch compacts)
+# driven from a STREAM instead of stdin. Each source event becomes one
+# graph event: cmd 0, a canonical JSON arg, and a dependency on its
+# 16-chain predecessor except every third generation (the
+# q_stream_heads dependency rule — so the final head set has a
+# closed-form oracle).
 #
 # Scale decisions, stated:
 #   * event_id is the real blake2b-512 content address
@@ -198,19 +192,13 @@ def ingest_into_event_log(
 #     graph.rs:132-155) — replayed micro-batches cannot duplicate events
 #     (proven by running the whole pipeline twice in q_stream_event_log).
 #   * append_head/compaction per batch: the head set gets every id the
-#     batch carries; when it exceeds `head_threshold` it is re-minimized
-#     against the log (an event is superseded once its chain successor
-#     EXISTS in the log — presence-tested, exactly the
-#     pending-supersession rule streaming_head_tracker uses, so sparse
-#     ids and out-of-order arrival are handled).
-#   * The compaction decision costs no job in the common case. Both
-#     sizes it needs are known without a count: n_new, the batch's
-#     distinct ids, is observed on the append write (DataFrame.observe),
-#     and n_old, the heads table's rows, was observed on the previous
-#     heads write. Since max(n_old, n_new) <= |old ∪ new| <= n_old +
-#     n_new, the bounds decide unless the threshold falls between them;
-#     only then, or for the first batch after a restart (n_old unknown),
-#     is there a count job.
+#     batch carries and is then minimized against the log (an event is
+#     superseded once its chain successor EXISTS in the log —
+#     presence-tested, exactly the pending-supersession rule
+#     streaming_head_tracker uses, so sparse ids and out-of-order
+#     arrival are handled).
+#   * The head set is minimized every batch, at the cost of one
+#     anti-join against the log's dep_src.
 #   * Every table the batch reads was written by this pipeline, so it
 #     is read with a pinned schema: no schema-inference job.
 #   * The heads table is replaced by a roll-forward swap, not an atomic
@@ -225,10 +213,10 @@ def ingest_into_event_log(
 #     the same module, so a `file:` URI names one directory for Spark
 #     and for the driver. A production deployment writes the heads
 #     through a transactional table format instead.
-#   * Reader contract: `heads/` is one table, bounded by threshold +
-#     batch ids but not minimal (compaction is threshold-triggered, and
-#     a redelivered batch re-adds ids), so every reader folds it through
-#     `_superseded` against the log.
+#   * Reader contract: `heads/` is one table, minimal against the log
+#     after every completed batch, but a crash between the log append
+#     and the heads swap leaves it non-minimal until the batch replays,
+#     so every reader folds it through `_superseded` against the log.
 
 
 def _graph_event_rows(batch: DataFrame) -> DataFrame:
@@ -306,70 +294,45 @@ def event_log_stream_pipeline(
     stream: DataFrame,
     work_dir: str,
     checkpoint_dir: str,
-    head_threshold: int = 100,
 ) -> None:
     """Drive the events stream through the full event-log loop:
     content-addressed idempotent append into `work_dir`/events_log +
-    per-batch append_head and >threshold compaction into
-    `work_dir`/heads."""
+    per-batch append_head and compaction into `work_dir`/heads. Each
+    micro-batch is a function of its rows and the disk alone."""
     log_dir = posixpath.join(work_dir, "events_log")
     heads_dir = posixpath.join(work_dir, "heads")
     stage = heads_dir + "_stage"
-    # rows of heads/ as this query last wrote it; None until then, and
-    # after a restart, when it costs one count
-    n_old: int | None = None
 
     def _batch(batch: DataFrame, batch_id: int) -> None:
-        nonlocal n_old
         spark = batch.sparkSession
         storage.recover_dir(stage, heads_dir)
 
         # ev is evaluated once, by the append: the head update below
-        # reads `batch` and the on-disk log, never ev. n_new counts the
-        # batch's distinct ids before the anti-join.
+        # reads `batch` and the on-disk log, never ev.
         ev = _graph_event_rows(batch)
-        seen = Observation()
-        append_new_events(
-            ev.observe(seen, F.count(F.lit(1)).alias("n")), log_dir
-        )
-        n_new = seen.get["n"]
+        append_new_events(ev, log_dir)
 
         # append_head ≙ main.rs:217-231: every id the BATCH carries joins
         # the head set — from the batch's deduped rows, NOT the
         # anti-joined ev: a batch redelivered after the log append landed
         # but before the heads write committed arrives with an empty
-        # anti-join, and its head ids would be lost forever (the final
-        # minimize can only REMOVE heads). Re-adding an already-compacted
-        # id is harmless — supersession is monotone, so the next
-        # compaction (or the reader's final fold) drops it again.
+        # anti-join, and its head ids would be lost forever (minimizing
+        # can only REMOVE heads). Re-adding an already-superseded id is
+        # harmless — supersession is monotone, so the minimize below
+        # drops it again.
         heads = batch.select(
             F.col("event_id").cast("bigint").alias("head_src")
         )
         if storage.exists(heads_dir):
-            old = spark.read.schema("head_src BIGINT").parquet(heads_dir)
-            if n_old is None:
-                n_old = old.count()
-            heads = old.union(heads)
-        else:
-            n_old = 0
-        heads = heads.distinct()
+            heads = spark.read.schema("head_src BIGINT").parquet(
+                heads_dir
+            ).union(heads)
 
-        # compact_heads ≙ main.rs:232-249: only when past the threshold
-        if max(n_old, n_new) > head_threshold:
-            compact = True
-        elif n_old + n_new <= head_threshold:
-            compact = False
-        else:
-            compact = heads.count() > head_threshold
-        if compact:
-            heads = _superseded(
-                heads, spark.read.schema(ev.schema).parquet(log_dir)
-            )
-        wrote = Observation()
-        heads.observe(wrote, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        n_old = wrote.get["n"]
+        # compact_heads ≙ main.rs:232-249, every batch
+        heads = _superseded(
+            heads.distinct(), spark.read.schema(ev.schema).parquet(log_dir)
+        )
+        heads.write.mode("overwrite").parquet(stage)
         storage.replace_dir(stage, heads_dir)
 
     _drain(stream, _batch, checkpoint_dir)

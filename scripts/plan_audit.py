@@ -129,7 +129,7 @@ _IMPERATIVE = {
     "q_stream_event_log": (
         "streaming foreachBatch event-log loop run twice (redelivery "
         "proof): content-addressed MERGE append + per-batch append_head "
-        "and >100-head compaction; returned frame is the checkpointed "
+        "and head-set minimization; returned frame is the checkpointed "
         "per-graph-key log/head aggregate"
     ),
     "q_esvc_merge_large": (

@@ -7,11 +7,15 @@
 2. The one intentional O(N²) exact baseline must fail fast above its
    corpus-size gate instead of launching an N² nested-loop join
    (VERDICT r3 #4).
+3. The session keeps more generated classes compiled than Spark's
+   default codegen cache (100), so a workload cycling through a larger
+   set of plans compiles each class once, not once per cycle.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 import esvc_spark
 from esvc_spark.queries import all_queries
@@ -61,3 +65,19 @@ def test_neardup_cosine_gate_fails_fast(spark, sf_dir, monkeypatch):
         "vec_b",
         "cos_sim",
     ]
+
+
+def test_codegen_cache_holds_more_than_default(spark):
+    """150 distinct generated classes, cycled twice: the second pass
+    finds every class in the codegen cache and compiles none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+
+    def cycle():
+        for i in range(150):
+            spark.range(1).select(F.col("id") * F.lit(i)).collect()
+
+    cycle()
+    before = compiles.getCount()
+    cycle()
+    assert compiles.getCount() - before == 0

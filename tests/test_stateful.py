@@ -438,52 +438,23 @@ def test_event_log_heads_swap_survives_crash(spark, tmp_path, monkeypatch):
     assert got_heads == want_heads
 
 
-@pytest.mark.parametrize(
-    "threshold, branches",
-    [
-        # below the batch size: the bounds alone say compact
-        (50, {"bound-compact"}),
-        # between max(n_old, n_new) and n_old + n_new: an exact count
-        # decides, both ways (batch 1 overlaps batch 0 by 100 ids)
-        (550, {"count-keep", "count-compact"}),
-        # above n_old + n_new: the bounds alone say keep
-        (10_000, {"bound-keep"}),
-    ],
-)
-def test_event_log_compaction_decision_matches_union_rule(
-    spark, tmp_path, monkeypatch, threshold, branches
-):
-    """After every batch the heads table equals a pure-Python model of
-    the union rule: the head set gains the batch's ids, and is minimized
-    against the log only when the union holds more than `threshold`
-    ids. The thresholds cover every way the pipeline can reach that
-    decision, and the run restarts from its checkpoint before the last
-    batch, so the heads' size is unknown to the restarted query."""
+_OVERLAPPING_BATCHES = [(0, 300), (200, 500), (500, 800), (700, 1000)]
+
+
+@pytest.fixture(scope="module")
+def heads_after_every_swap(spark, tmp_path_factory):
+    """One run of the event-log pipeline over 4 batches of the sorted
+    events (batch 1 overlaps batch 0 by 100 ids, batch 3 overlaps batch
+    2), restarted from its checkpoint before the last batch. Returns
+    each batch's ids and the `heads/` snapshot taken after every heads
+    swap."""
     from esvc_spark.core import storage
     from esvc_spark.streaming.pipelines import event_log_stream_pipeline
 
-    src, ckpt, work = (str(tmp_path / d) for d in ("src", "ckpt", "work"))
+    tmp = tmp_path_factory.mktemp("heads_swaps")
+    src, ckpt, work = (str(tmp / d) for d in ("src", "ckpt", "work"))
     t = pq.read_table(EVENTS).sort_by("event_id")
-    bounds = [(0, 300), (200, 500), (500, 800), (700, 1000)]
     ids = t.column("event_id").to_pylist()
-
-    # the model, and which branch each batch's decision takes
-    want, seen = [], set()
-    heads, log = set(), set()
-    for lo, hi in bounds:
-        batch = set(ids[lo:hi])
-        log |= batch
-        n_old, n_new = len(heads), len(batch)
-        heads |= batch
-        compact = len(heads) > threshold
-        if max(n_old, n_new) > threshold or n_old + n_new <= threshold:
-            seen.add("bound-compact" if compact else "bound-keep")
-        else:
-            seen.add("count-compact" if compact else "count-keep")
-        if compact:
-            heads -= {_dep_src(i) for i in log}
-        want.append(heads.copy())
-    assert branches <= seen
 
     real_move = storage._move
     got = []
@@ -496,16 +467,59 @@ def test_event_log_compaction_decision_matches_union_rule(
     def run():
         event_log_stream_pipeline(
             read_events_stream(spark, src, max_files_per_trigger=1),
-            work_dir=work, checkpoint_dir=ckpt, head_threshold=threshold,
+            work_dir=work, checkpoint_dir=ckpt,
         )
 
-    monkeypatch.setattr(storage, "_move", snapshot_after_swap)
-    _write_slices(src, t, bounds[:3])
-    run()
-    _write_slices(src, t, bounds[3:], first=3)
-    run()
-    monkeypatch.undo()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(storage, "_move", snapshot_after_swap)
+        _write_slices(src, t, _OVERLAPPING_BATCHES[:3])
+        run()
+        _write_slices(src, t, _OVERLAPPING_BATCHES[3:], first=3)
+        run()
+    return [set(ids[lo:hi]) for lo, hi in _OVERLAPPING_BATCHES], got
 
-    assert len(got) == len(want)
-    for i, (g, w) in enumerate(zip(got, want)):
-        assert g == w, f"batch {i}: {len(g)} heads, want {len(w)}"
+
+@pytest.mark.parametrize(
+    "threshold, branches",
+    [
+        # below the batch size: the bounds alone said compact
+        (50, {"bound-compact"}),
+        # between max(n_old, n_new) and n_old + n_new: an exact count
+        # decided, both ways (batch 1 overlaps batch 0 by 100 ids)
+        (550, {"count-keep", "count-compact"}),
+        # above n_old + n_new: the bounds alone said keep
+        (10_000, {"bound-keep"}),
+    ],
+)
+def test_event_log_compaction_decision_matches_union_rule(
+    heads_after_every_swap, threshold, branches
+):
+    """The union rule now minimizes every batch: after every heads
+    swap, `heads/` is the minimal head set of the log so far (the ids
+    seen so far minus every id a logged event names as its dependency).
+    Each case replays the former `head_threshold` decision on the same
+    run, covering every way it was reached: where it compacted, the
+    heads are the ones it produced; where it kept the union, they are
+    strictly fewer."""
+    batches, got = heads_after_every_swap
+    assert len(got) == len(batches)
+
+    seen, former, log = set(), set(), set()
+    for i, batch in enumerate(batches):
+        log |= batch
+        minimal = log - {_dep_src(j) for j in log}
+        assert got[i] == minimal, f"batch {i}: {len(got[i])} heads, want {len(minimal)}"
+
+        n_old, n_new = len(former), len(batch)
+        former |= batch
+        compact = len(former) > threshold
+        if max(n_old, n_new) > threshold or n_old + n_new <= threshold:
+            seen.add("bound-compact" if compact else "bound-keep")
+        else:
+            seen.add("count-compact" if compact else "count-keep")
+        if compact:
+            former -= {_dep_src(j) for j in log}
+            assert got[i] == former
+        else:
+            assert got[i] < former
+    assert branches <= seen

@@ -319,10 +319,12 @@ def _driver_log(spark):
 def test_event_log_batch_job_budget(spark, tmp_path):
     """A steady-state micro-batch of event_log_stream_pipeline issues
     only the jobs that do work: the hashed anti-join append (3) and the
-    heads-stage write (3). No job infers a schema the pipeline wrote
-    itself, and none counts the head set to decide compaction. Reading
-    a table that does not exist yet never fails an analysis, so the
-    listener bus logs no error."""
+    minimized heads-stage write (3). No job infers a schema the pipeline
+    wrote itself, and none counts the head set. The first batch of a
+    query restarted on the same work dir and checkpoint costs no more
+    than a steady one: a batch carries no state from earlier batches.
+    Reading a table that does not exist yet never fails an analysis,
+    so the listener bus logs no error."""
     import pyarrow.parquet as pq
 
     from esvc_spark.streaming.pipelines import event_log_stream_pipeline
@@ -330,20 +332,31 @@ def test_event_log_batch_job_budget(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)
     t = pq.read_table(EVENTS)
-    third = t.num_rows // 3
-    for i in range(3):
+    quarter = t.num_rows // 4
+
+    def write_part(i):
         path = os.path.join(src, f"part-{i:03d}.parquet")
-        pq.write_table(t.slice(i * third, third), path)
+        pq.write_table(t.slice(i * quarter, quarter), path)
         os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
 
-    with _driver_log(spark) as log, _query_runs(spark) as runs:
-        event_log_stream_pipeline(
-            read_events_stream(spark, src, max_files_per_trigger=1),
-            str(tmp_path / "work"), str(tmp_path / "ckpt"),
-        )
-    jobs = _jobs_per_batch(spark, runs[-1])
+    def run():
+        with _query_runs(spark) as runs:
+            event_log_stream_pipeline(
+                read_events_stream(spark, src, max_files_per_trigger=1),
+                str(tmp_path / "work"), str(tmp_path / "ckpt"),
+            )
+        return _jobs_per_batch(spark, runs[-1])
+
+    for i in range(3):
+        write_part(i)
+    with _driver_log(spark) as log:
+        jobs = run()
+        write_part(3)
+        restarted = run()
     assert sorted(jobs) == [0, 1, 2]
     assert max(jobs[1], jobs[2]) <= 6, jobs
+    assert sorted(restarted) == [3]
+    assert restarted[3] <= 6, restarted
     assert not [
         line for line in log
         if line.startswith("ERROR") and "ExecutionListenerBus" in line
