@@ -2,22 +2,25 @@
 
 The reference requires whole-dataset-value equality (`Dat: PartialEq`,
 esvc-traits/src/lib.rs:12-13) — the enabler for dependency inference. For
-DataFrames that becomes a canonical, order-insensitive content fingerprint
-computed in ONE aggregate job:
+DataFrames that becomes a canonical, order-insensitive content fingerprint:
 
     fingerprint = (count, bit_xor(xxhash64(cols)), sum(xxhash64(cols)))
 
 xor+sum+count of per-row 64-bit hashes is commutative/associative →
 shuffle-order invariant, and cheap at any scale (map-side partial
-aggregation, no sort, no collect of data). Every `run_event_bare`
-returns the new value with its fingerprint known and its DataFrame
-persisted (lazily), because shelve/merge compare states constantly and
-the WorkCache memoizes by state anyway (workcache.rs:85-102 role). The
-fingerprint job runs the first time the engine applies a (cmd, arg) to
-a given input fingerprint; later applications take the output
-fingerprint from the engine's transform memo and run no job. The memo
-skips only that job: every call still builds the command's plan over
-its actual input DataFrame, so replay reads real predecessor data.
+aggregation, no sort, no collect of data). `_fingerprints_of` is the one
+aggregate that computes it: any number of plans, tagged and unioned, in
+ONE groupBy job. Every `run_event_bare` returns the new value with its
+fingerprint known and its DataFrame persisted (lazily), because
+shelve/merge compare states constantly and the WorkCache memoizes by
+state anyway (workcache.rs:85-102 role). The engine's transform memo
+maps (input fingerprint, cmd, arg) to the output fingerprint, and one
+method (`SparkEngineBase._memo`) reads and fills it: the fingerprint job
+runs the first time the engine applies a (cmd, arg) to a given input
+fingerprint, and later applications run no job. The memo skips only
+that job: `run_event_bare`/`run_event_transient` still build the
+command's plan over its actual input DataFrame, so replay reads real
+predecessor data.
 
 Engines:
   - SparkReplaceEngine: literal search-and-replace over every row of a
@@ -42,6 +45,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import partial, reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,15 +56,23 @@ from .engines import BaseEngine, CommandNotFound
 from .graph import canonical_json_encode
 
 
-def _fingerprint_aggs(h) -> list:
-    """(count, bit_xor, exact decimal sum) of the per-row hash column `h`."""
-    return [F.count(F.lit(1)).alias("n"), F.bit_xor(h).alias("x"),
-            F.sum(h.cast("decimal(38,0)")).alias("s")]
-
-
-def _fingerprint_of(row) -> tuple:
-    """An aggregate row as a fingerprint; the empty state is (0, 0, 0)."""
-    return (row["n"], row["x"] if row["n"] else 0, int(row["s"] or 0))
+def _fingerprints_of(plans: list[DataFrame], cols: list[str]) -> list[tuple]:
+    """The content fingerprints of `plans` in ONE aggregate job: tag each
+    plan, union, groupBy(tag) → (count, bit_xor, exact decimal sum) of
+    the per-row xxhash64(cols). A plan with no rows has no group row and
+    reads (0, 0, 0), the empty state."""
+    h = F.xxhash64(*cols)
+    tagged = [p.select(F.lit(i).alias("_t"), h.alias("_h"))
+              for i, p in enumerate(plans)]
+    rows = (
+        reduce(DataFrame.unionByName, tagged)
+        .groupBy("_t")
+        .agg(F.count(F.lit(1)).alias("n"), F.bit_xor("_h").alias("x"),
+             F.sum(F.col("_h").cast("decimal(38,0)")).alias("s"))
+        .collect()
+    )
+    got = {r["_t"]: (r["n"], r["x"], int(r["s"])) for r in rows}
+    return [got.get(i, (0, 0, 0)) for i in range(len(plans))]
 
 
 @dataclass(frozen=True)
@@ -78,8 +90,7 @@ class SparkDat:
     @staticmethod
     def create(df: DataFrame, cols: list[str]) -> "SparkDat":
         df = df.persist()
-        row = df.select(*_fingerprint_aggs(F.xxhash64(*cols))).collect()[0]
-        return SparkDat(df=df, fingerprint=_fingerprint_of(row))
+        return SparkDat(df=df, fingerprint=_fingerprints_of([df], cols)[0])
 
     def __eq__(self, other: object) -> bool:
         return isinstance(other, SparkDat) and self.fingerprint == other.fingerprint
@@ -345,37 +356,30 @@ class SparkEngineBase(BaseEngine):
     def dat_key(self, dat: SparkDat) -> str:
         return super().dat_key(dat.fingerprint)
 
-    @staticmethod
-    def _fp_key(cmd: int, arg, fingerprint: tuple) -> tuple:
-        return (fingerprint, cmd, canonical_json_encode(arg))
-
-    def _plan(self, cmd: int, arg, dat: SparkDat) -> tuple:
-        """(plan over `dat` — `dat.df` itself on the no-op paths, memo
-        key, memoized output fingerprint or None)."""
-        key = self._fp_key(cmd, arg, dat.fingerprint)
-        plan = self._apply_plan(cmd, arg, dat.df, dat.count)
-        return plan, key, self._fps.get(key)
+    def _memo(self, builds: dict) -> dict:
+        """The output fingerprints of {memo key: thunk → (plan, input
+        SparkDat)}, read from the transform memo and filled on a miss.
+        A thunk runs only on a miss; a no-op plan (the input's DataFrame
+        itself) takes the input's fingerprint; the other misses are
+        fingerprinted together in one job, none when nothing is left."""
+        todo = {}
+        for key, build in builds.items():
+            if key not in self._fps:
+                plan, dat = build()
+                if plan is dat.df:
+                    self._fps[key] = dat.fingerprint
+                else:
+                    todo[key] = plan
+        if todo:
+            fps = _fingerprints_of(list(todo.values()), self.COLS)
+            self._fps.update(zip(todo, fps))
+        return {key: self._fps[key] for key in builds}
 
     def run_event_bare(self, cmd: int, arg: dict, dat: SparkDat) -> SparkDat:
         """The transform as a persisted state. A memo hit persists the
         lazy plan under the known fingerprint — no job until the state
-        is read; a miss runs SparkDat.create's fingerprint job."""
-        out, key, fp = self._plan(cmd, arg, dat)
-        if out is dat.df:
-            return dat  # no-op path: same value, no re-persist, no job
-        if fp is not None:
-            return SparkDat(df=out.persist(), fingerprint=fp)
-        made = SparkDat.create(out, self.COLS)
-        self._fps[key] = made.fingerprint
-        return made
-
-    # -- batched commutation testing (WorkCache.shelve_event seam) --------
-    # Both states a commutation test derives are TRANSIENT — only their
-    # fingerprints feed the verdict — so the engine computes every
-    # candidate's pair in TWO tagged aggregate jobs total (VERDICT r8 #6)
-    # over the same triple SparkDat.create collects: verdicts are
-    # bit-identical to BaseEngine's sequential replay, proven by the
-    # differential test in tests/test_spark_core.py.
+        is read; a miss runs the fingerprint job over the persisted plan."""
+        return self._run_event(cmd, arg, dat, persist=True)
 
     def run_event_transient(self, cmd: int, arg, dat: SparkDat) -> SparkDat:
         """`run_event_bare` for a result that will only ever be COMPARED
@@ -385,12 +389,25 @@ class SparkEngineBase(BaseEngine):
         hit), no block writes, nothing to unpersist. WorkCache uses this
         for the expected-state, safety-net, and commutation-test
         transients (VERDICT r8 #6)."""
-        out, key, fp = self._plan(cmd, arg, dat)
-        if out is dat.df:
-            return dat  # no-op path: same value
-        if fp is None:
-            fp = self._fps[key] = self._batched_fingerprints([(0, out)])[0]
-        return SparkDat(df=out, fingerprint=fp)
+        return self._run_event(cmd, arg, dat, persist=False)
+
+    def _run_event(self, cmd: int, arg, dat: SparkDat, persist: bool) -> SparkDat:
+        plan = self._apply_plan(cmd, arg, dat.df, dat.count)
+        if plan is dat.df:
+            return dat  # no-op path: same value, no re-persist, no job
+        if persist:
+            plan = plan.persist()  # before the job, which then fills it
+        key = (dat.fingerprint, cmd, canonical_json_encode(arg))
+        fp = self._memo({key: lambda: (plan, dat)})[key]
+        return SparkDat(df=plan, fingerprint=fp)
+
+    # -- batched commutation testing (WorkCache.shelve_event seam) --------
+    # Both states a commutation test derives are TRANSIENT — only their
+    # fingerprints feed the verdict — so the engine fingerprints every
+    # candidate's pair with two `_memo` calls, at most one tagged
+    # aggregate job each (VERDICT r8 #6): verdicts are bit-identical to
+    # BaseEngine's sequential replay, proven by the differential test in
+    # tests/test_spark_core.py.
 
     def commute_batch(self, ev, tests, cur_st: SparkDat) -> dict:
         """Independence verdicts for candidate dependencies, batched.
@@ -400,91 +417,41 @@ class SparkEngineBase(BaseEngine):
         (workcache.rs:288-296): ev_first = ev(conc_base),
         ev_first_then = conc_ev(ev_first), independent iff
         fp(ev_first) != fp(ev_first_then) AND
-        fp(ev_first_then) == fp(cur_st). Job 1 fingerprints every
-        ev_first the transform memo lacks (also yielding its row count,
-        which job 2's plans need); job 2 fingerprints every missing
-        ev_first_then. A no-op plan takes its input's fingerprint and a
-        job with nothing left to compute is skipped, so one candidate
-        costs no more jobs than two run_event_transient calls."""
-        # build each ev_first plan at most once, and only if a job needs
-        # it: plan construction is not free for renumbering commands
-        ev_first_plans: dict = {}
+        fp(ev_first_then) == fp(cur_st). The first `_memo` call
+        fingerprints every ev_first (its row count is what the second
+        call's plans need), the second every ev_first_then, so one
+        candidate costs no more jobs than two run_event_transient calls."""
+        plans: dict = {}
 
         def ev_first(key, base):
-            if key not in ev_first_plans:
-                ev_first_plans[key] = self._apply_plan(
-                    ev.cmd, ev.arg, base.df, base.count
-                )
-            return ev_first_plans[key]
+            """(ev_first's plan, its input); the plan is built once."""
+            if key not in plans:
+                plans[key] = self._apply_plan(ev.cmd, ev.arg, base.df, base.count)
+            return plans[key], base
 
-        k1 = {
-            key: self._fp_key(ev.cmd, ev.arg, base.fingerprint)
-            for key, base, _ in tests
-        }
-        self._memoize_fingerprints({
-            k1[key]: (ev_first(key, base), base.df, base.fingerprint)
-            for key, base, _ in tests
-            if k1[key] not in self._fps
+        def ev_first_then(key, base, cev, fp):
+            df = ev_first(key, base)[0]
+            return (self._apply_plan(cev.cmd, cev.arg, df, fp[0]),
+                    SparkDat(df=df, fingerprint=fp))
+
+        ev_json = canonical_json_encode(ev.arg)
+        k1 = {key: (base.fingerprint, ev.cmd, ev_json) for key, base, _ in tests}
+        got = self._memo({
+            k1[key]: partial(ev_first, key, base) for key, base, _ in tests
         })
-        fp1 = {key: self._fps[k] for key, k in k1.items()}
+        fp1 = {key: got[k] for key, k in k1.items()}
         k2 = {
-            key: self._fp_key(cev.cmd, cev.arg, fp1[key])
+            key: (fp1[key], cev.cmd, canonical_json_encode(cev.arg))
             for key, _, cev in tests
         }
-        self._memoize_fingerprints({
-            k2[key]: (
-                self._apply_plan(
-                    cev.cmd, cev.arg, ev_first(key, base), fp1[key][0]
-                ),
-                ev_first(key, base),
-                fp1[key],
-            )
+        got = self._memo({
+            k2[key]: partial(ev_first_then, key, base, cev, fp1[key])
             for key, base, cev in tests
-            if k2[key] not in self._fps
         })
-        fp2 = {key: self._fps[k] for key, k in k2.items()}
+        fp2 = {key: got[k] for key, k in k2.items()}
         return {
             key: fp1[key] != fp2[key] and fp2[key] == cur_st.fingerprint
-            for key, _, _ in tests
-        }
-
-    def _memoize_fingerprints(self, plans: dict) -> None:
-        """Fingerprint {memo key: (plan, input df, input fingerprint)}
-        into the transform memo in ONE tagged aggregate job. A no-op plan
-        (the input df itself) takes the input's fingerprint; no job runs
-        when nothing is left to compute."""
-        todo = []
-        for key, (plan, df, fp) in plans.items():
-            if plan is df:
-                self._fps[key] = fp
-            else:
-                todo.append((key, plan))
-        if todo:
-            self._fps.update(self._batched_fingerprints(todo))
-
-    def _batched_fingerprints(self, tagged_plans) -> dict:
-        """Content fingerprints of many plans in ONE aggregate job: tag
-        each plan, union, groupBy(tag). Exactly SparkDat.create's triple
-        — (n, bit_xor(xxhash64(COLS)), sum(xxhash64 as decimal)) with the
-        empty state normalized to (0, 0, 0); a plan with no output rows
-        simply has no group row."""
-        from functools import reduce
-
-        h = F.xxhash64(*self.COLS)
-        parts = [
-            plan.select(F.lit(i).alias("_t"), h.alias("_h"))
-            for i, (_, plan) in enumerate(tagged_plans)
-        ]
-        rows = (
-            reduce(DataFrame.unionByName, parts)
-            .groupBy("_t")
-            .agg(*_fingerprint_aggs(F.col("_h")))
-            .collect()
-        )
-        got = {r["_t"]: _fingerprint_of(r) for r in rows}
-        return {
-            key: got.get(i, (0, 0, 0))
-            for i, (key, _) in enumerate(tagged_plans)
+            for key in k1
         }
 
     # -- snapshot spill seam (store.SnapshotStore) -------------------------

@@ -4,7 +4,7 @@ Parity with crates/exvc/src/main.rs:
   - save/load     ≙ main.rs:44-53, 267-276 (bincode+zstd → parquet+zstd)
   - import_merge  ≙ main.rs:54-111 (load foreign graph, idempotent append,
     union heads, minimize, try_merge, commit new head-set)
-  - compact_heads ≙ main.rs:232-249 (re-minimize when > threshold heads)
+  - compact_heads ≙ main.rs:232-249 (re-minimize past HEAD_THRESHOLD heads)
 
 The events table is the FIXTURES.md §B.1 schema:
     events_log(event_id BINARY, cmd INT, arg STRING(JSON),
@@ -35,38 +35,12 @@ from typing import Any
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    BooleanType,
-    IntegerType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import storage
 from .graph import Event, Graph, GraphError, IncludeSpec
 from .hashing import format_hash
 from .workcache import WorkCache
-
-EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", BinaryType(), False),
-        StructField("cmd", IntegerType(), False),
-        StructField("arg", StringType(), False),
-        StructField("deps", MapType(BinaryType(), BooleanType()), False),
-    ]
-)
-
-NSTATES_SCHEMA = StructType(
-    [
-        StructField("name", StringType(), False),
-        StructField("heads", ArrayType(BinaryType()), False),
-    ]
-)
-
 
 EVENTS_ARROW = pa.schema(
     [
@@ -83,6 +57,10 @@ NSTATES_ARROW = pa.schema(
         pa.field("heads", pa.list_(pa.binary()), nullable=False),
     ]
 )
+
+# the same tables as Spark reads them
+EVENTS_SCHEMA = from_arrow_schema(EVENTS_ARROW)
+NSTATES_SCHEMA = from_arrow_schema(NSTATES_ARROW)
 
 
 def _event_rows(graph: Graph) -> list[tuple]:
@@ -220,36 +198,36 @@ def import_merge(wc: WorkCache, graph: Graph, other: Graph, state: str = "") -> 
     before = set(graph.events)
     try:
         ensure_events_idempotent(graph, other)
-        ours = graph.nstates.get(state, set())
-        theirs = other.nstates.get(state, set())
-        union = {h: False for h in ours | theirs}
-        minimized = set(graph.fold_state(union, expand=False).keys())
-        wc.try_merge(graph, set(minimized | ours | theirs))
+        heads = graph.nstates.get(state, set()) | other.nstates.get(state, set())
+        merged = set(graph.fold_state({h: False for h in heads}, expand=False).keys())
+        wc.try_merge(graph, heads)
     except BaseException:
         for h in set(graph.events) - before:
             del graph.events[h]
         raise
-    merged = set(
-        graph.fold_state({h: False for h in ours | theirs}, expand=False).keys()
-    )
     graph.nstates[state] = merged
     return merged
 
 
-def compact_heads(graph: Graph, state: str = "", threshold: int = 100) -> None:
-    """Re-minimize a named head-set when it exceeds `threshold`
+# A named head-set is re-minimized once it grows past this many heads
+# (the reference's 100, main.rs:232-249).
+HEAD_THRESHOLD = 100
+
+
+def compact_heads(graph: Graph, state: str = "") -> None:
+    """Re-minimize a named head-set when it exceeds HEAD_THRESHOLD
     (≙ main.rs:232-249)."""
     heads = graph.nstates.get(state)
-    if heads and len(heads) > threshold:
+    if heads and len(heads) > HEAD_THRESHOLD:
         graph.nstates[state] = set(
             graph.fold_state({h: False for h in heads}, expand=False).keys()
         )
 
 
-def append_head(graph: Graph, evid: bytes, state: str = "", threshold: int = 100) -> None:
+def append_head(graph: Graph, evid: bytes, state: str = "") -> None:
     """Record a newly shelved event as a head (≙ main.rs:217-250)."""
     graph.nstates.setdefault(state, set()).add(evid)
-    compact_heads(graph, state, threshold)
+    compact_heads(graph, state)
 
 
 # ------------------------------------------------------- snapshot store

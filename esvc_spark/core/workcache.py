@@ -309,17 +309,16 @@ class WorkCache:
             seed.add(i)
 
     # -- cache management --------------------------------------------------
-    def prune(self, keep: set[frozenset[bytes]] | None = None) -> int:
-        """Drop memoized states (except the empty base state and `keep`),
-        releasing engine resources (e.g. unpersisting DataFrames).
+    def prune(self) -> int:
+        """Drop memoized states (except the empty base state), releasing
+        engine resources (e.g. unpersisting DataFrames).
 
         With a SnapshotStore this reaches the IN-MEMORY entries (and
         deletes their spill files via pop); states that were already
         LRU-spilled cannot be enumerated (their keys are one-way
-        digests) and survive on disk — call `sts.clear_spill()` to
-        forget the disk side wholesale."""
-        keep = keep or set()
-        drop = [k for k in self.sts if k and k not in keep]
+        digests) and survive on disk — `sts.clear_spill()` is the one
+        way to forget the disk side, wholesale."""
+        drop = [k for k in self.sts if k]
         for k in drop:
             self.engine.release(self.sts.pop(k))
         return len(drop)

@@ -146,28 +146,30 @@ WHERE doc_id < {_SLICE}
 _ED_SLICE = 40
 _ED_TRAILER = "-- end of corpus"
 
-# Below this row count the shelve loop's ~20 commutation-test jobs are pure
+# The slice is bounded (_ED_SLICE rows at any sf), and on a dataset this
+# small the shelve loop's ~20 commutation-test jobs would be pure
 # task-scheduling latency (a 40-row editor dataset paid 54 s of it at
-# sf0.1): dependency inference runs on the in-memory ExEngine instead —
+# sf0.1): dependency inference runs on the in-memory ExEngine —
 # differential-tested bit-equal to SparkExEngine
-# (tests/test_spark_core.py) — and Spark is touched only to materialize
-# the final state. Above it, the distributed SparkExEngine path runs
-# unchanged (the 100 TB shape). SURVEY §7 "shelve's job count".
-_ED_LOCAL_ROWS = 10_000
+# (tests/test_spark_core.py) — and Spark is touched only to read the
+# slice and hold the final state. q_esvc_editor_large and
+# q_esvc_merge_large run the distributed SparkExEngine under the oracle.
+# SURVEY §7 "shelve's job count".
 
 
 def q_esvc_editor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..core.engines import ExEngine
     from ..core.exparse import make_command
-    from ..core.spark_engine import SparkDat, SparkExEngine
 
-    lines = (
+    rows = (
         T(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < _ED_SLICE)
-        .select(F.col("doc_id").cast("bigint").alias("line_no"), "text")
+        .select("doc_id", "text")
+        .collect()  # bounded by _ED_SLICE (40 rows) at any sf
     )
     # doc_id is contiguous 0..N-1 on the test tables, so it IS the line
     # number.
+    init = tuple(r["text"] for r in sorted(rows, key=lambda r: r["doc_id"]))
     script = [
         make_command(
             {"type": "rng", "start": 0, "end": _ED_SLICE},
@@ -178,20 +180,10 @@ def q_esvc_editor(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_command({"type": "last"}, "append", [_ED_TRAILER]),
     ]
 
-    rows = lines.limit(_ED_LOCAL_ROWS + 1).collect()
-    if len(rows) <= _ED_LOCAL_ROWS:
-        init_local = tuple(
-            r["text"] for r in sorted(rows, key=lambda r: r["line_no"])
-        )
-        final_lines = _shelve_minimize_replay(ExEngine(), init_local, script)
-        out = spark.createDataFrame(
-            list(enumerate(final_lines)), "line_no BIGINT, text STRING"
-        )
-    else:
-        eng = SparkExEngine(spark)
-        init = SparkDat.create(lines, SparkExEngine.COLS)
-        final = _shelve_minimize_replay(eng, init, script)
-        out = final.df
+    final_lines = _shelve_minimize_replay(ExEngine(), init, script)
+    out = spark.createDataFrame(
+        list(enumerate(final_lines)), "line_no BIGINT, text STRING"
+    )
     return out.select("line_no", F.md5("text").alias("text_md5"))
 
 
@@ -215,9 +207,9 @@ SELECT ln AS line_no, md5(text) AS text_md5 FROM ap
 
 
 # Distributed-shelve contract query: the same shelve→minimize→replay
-# pipeline as q_esvc_editor, but on a word-exploded lines dataset that is
-# ALWAYS above _ED_LOCAL_ROWS (27,939 lines at the smallest sf), so the
-# SparkExEngine + SparkDat branch — the actual 100 TB shape of
+# pipeline as q_esvc_editor, but on a word-exploded lines dataset
+# (27,939 lines at the smallest sf) on the distributed engine, so the
+# SparkExEngine + SparkDat path — the actual 100 TB shape of
 # ref crates/esvc-core/src/workcache.rs:121-417 — runs dependency
 # inference with real Spark jobs under the oracle. The script is chosen
 # so event 2 genuinely depends on event 1 (the substitute INTRODUCES the
@@ -438,7 +430,7 @@ FROM fin
 # hash-match proves the byte format, both id translations, and the
 # import/merge semantics in one row. Bounded driver-side work: the
 # _ED_SLICE-row session is the same local-editor shape as
-# q_esvc_editor's small branch.
+# q_esvc_editor.
 
 _IMP_CHANGE = "IMPORTED LINE"
 _IMP_TRAILER = "-- via reference file"

@@ -12,6 +12,7 @@ from esvc_spark.core.exparse import make_command, parse_address
 from esvc_spark.core.spark_engine import SparkExEngine, SparkReplaceEngine
 from esvc_spark.core.store import (
     EVENTS_SCHEMA,
+    HEAD_THRESHOLD,
     NSTATES_SCHEMA,
     append_head,
     compact_heads,
@@ -458,17 +459,23 @@ def test_import_merge_two_graphs(spark, replace_engine):
 
 
 def test_compact_heads_threshold():
-    g = Graph()
-    g.nstates[""] = set()
-    prev: bytes | None = None
-    # build a chain a->b->c...; heads accumulate
-    for i in range(6):
-        deps = {prev: True} if prev else {}
-        _, h = g.ensure_event(Event(cmd=0, arg=sear(f"s{i}", f"r{i}"), deps=deps))
-        g.nstates[""].add(h)
-        prev = h
-    compact_heads(g, threshold=3)
-    assert len(g.nstates[""]) == 1  # chain minimizes to its tip
+    """A head-set compacts once it holds more than HEAD_THRESHOLD heads:
+    a 101-event chain minimizes to its tip, a 100-event chain keeps
+    every head."""
+    for n, want in ((HEAD_THRESHOLD + 1, 1), (HEAD_THRESHOLD, HEAD_THRESHOLD)):
+        g = Graph()
+        g.nstates[""] = set()
+        prev: bytes | None = None
+        # build a chain a->b->c...; heads accumulate
+        for i in range(n):
+            deps = {prev: True} if prev else {}
+            _, h = g.ensure_event(
+                Event(cmd=0, arg=sear(f"s{i}", f"r{i}"), deps=deps)
+            )
+            g.nstates[""].add(h)
+            prev = h
+        compact_heads(g)
+        assert len(g.nstates[""]) == want, n
 
 
 def test_dot_export():
@@ -1141,4 +1148,63 @@ def test_transform_memo_matches_memo_free_run(spark):
             for h, hard in deps.items() if not hard
         ]
         assert bool(soft_deps) == (chain is _SOFT_SEARS), cls.__name__
+    spark.catalog.clearCache()
+
+
+# Known fingerprints (count, bit_xor, decimal sum of per-row xxhash64)
+# of three fixed states. `dat_key` names spill namespaces after them,
+# so a changed aggregate would orphan every spill written before it.
+_KAT_LINES = ["alpha", "beta", "gamma"]
+_KAT_LINES_FP = (3, 8802779974756983915, -8838835056976849005)
+_KAT_TEXTS = ["a cat", "a dog", "a bird"]
+_KAT_TEXTS_FP = (3, -7166630806251743691, -11242111400020691719)
+_KAT_EMPTY_FP = (0, 0, 0)
+
+
+def test_fingerprint_known_answers(spark):
+    """Every route that fingerprints a state — SparkDat.create,
+    init_data, run_event_bare, run_event_transient and the memo entries
+    commute_batch fills — gives the pinned triples, and dat_key the
+    pinned spill namespaces."""
+    from esvc_spark.core.graph import canonical_json_encode
+    from esvc_spark.core.spark_engine import SparkDat
+
+    ex, rep = SparkExEngine(spark), SparkReplaceEngine(spark)
+    lines_df = spark.createDataFrame(
+        list(enumerate(_KAT_LINES)), "line_no BIGINT, text STRING"
+    )
+    assert SparkDat.create(lines_df, ex.COLS).fingerprint == _KAT_LINES_FP
+    assert SparkDat.create(
+        lines_df.limit(0), ex.COLS
+    ).fingerprint == _KAT_EMPTY_FP
+    assert ex.init_data(_KAT_LINES).fingerprint == _KAT_LINES_FP
+    assert ex.init_data([]).fingerprint == _KAT_EMPTY_FP
+    assert rep.from_texts(_KAT_TEXTS).fingerprint == _KAT_TEXTS_FP
+    assert ex.dat_key(ex.init_data(_KAT_LINES)) == "72eeb67aaf047e11"
+    assert rep.dat_key(rep.from_texts(_KAT_TEXTS)) == "9fa5f6e1f600ff65"
+    assert ex.dat_key(ex.init_data([])) == "d0b41695d7a47457"
+
+    # each engine reaches its pinned state by one command from a nearby
+    # state; the follow-up command empties the editor state
+    add = make_command({"type": "last"}, "append", ["gamma"])
+    wipe = make_command({"type": "rng", "start": 0, "end": 3}, "delete")
+    fix = sear("a cow", "a cat")
+    cases = [
+        (ex, ex.init_data(_KAT_LINES[:2]), add, wipe,
+         _KAT_LINES_FP, _KAT_EMPTY_FP),
+        (rep, rep.from_texts(["a cow", *_KAT_TEXTS[1:]]), fix, fix,
+         _KAT_TEXTS_FP, _KAT_TEXTS_FP),
+    ]
+    for eng, base, arg, then_arg, fp1, fp2 in cases:
+        for run in (eng.run_event_bare, eng.run_event_transient):
+            eng._fps.clear()
+            assert run(0, arg, base).fingerprint == fp1, run.__name__
+            assert run(0, arg, base).fingerprint == fp1, run.__name__
+        eng._fps.clear()
+        ev, then_ev = Event(cmd=0, arg=arg), Event(cmd=0, arg=then_arg)
+        eng.commute_batch(ev, [("c", base, then_ev)], base)
+        assert eng._fps == {
+            (base.fingerprint, 0, canonical_json_encode(arg)): fp1,
+            (fp1, 0, canonical_json_encode(then_arg)): fp2,
+        }
     spark.catalog.clearCache()
