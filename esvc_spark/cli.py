@@ -24,7 +24,7 @@ from .core.bincode_io import BincodeError, export_reference_file
 from .core.dot import to_dot
 from .core.engines import CommandNotFound, ExEngine, resolve_addr
 from .core.exparse import AddressParseError, make_command, parse_command
-from .core.graph import Event, Graph, GraphError
+from .core.graph import HEADS, Event, Graph, GraphError
 from .core.hashing import format_hash
 from .core.store import append_head
 from .core.workcache import WorkCache, WorkCacheError
@@ -79,7 +79,7 @@ class Repl:
 
     @property
     def heads(self) -> set[bytes]:
-        return set(self.graph.nstates.get("", set()))
+        return set(self.graph.nstates.get(HEADS, set()))
 
     def materialize(self) -> tuple[str, ...]:
         dat = self.wc.materialize(self.graph, self.heads)
@@ -193,7 +193,7 @@ class Repl:
                 if target.endswith((".zst", ".exvc")) or (
                     line == "w" and not storage.isdir(target)
                 ):
-                    export_reference_file(self.graph, target, state="")
+                    export_reference_file(self.graph, target)
                 else:
                     save_graph(spark, self.graph, target)
             except _GRAPH_IO_ERRORS as e:

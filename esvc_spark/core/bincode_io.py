@@ -65,7 +65,7 @@ from typing import Any, Callable
 import pyarrow as pa
 
 from . import storage
-from .graph import Event, Graph, HashCollision, IncludeSpec
+from .graph import HEADS, Event, Graph, HashCollision, IncludeSpec
 from .hashing import calculate_hash
 
 
@@ -397,14 +397,14 @@ def rehash_to_native(other: Graph) -> tuple[Graph, dict[bytes, bytes]]:
     return native, mapping
 
 
-def import_reference_file(wc, graph: Graph, path: str, state: str = "") -> set[bytes]:
+def import_reference_file(wc, graph: Graph, path: str) -> set[bytes]:
     """The `m<` path for a reference-format FILE: decode + verify, rehash
     to native ids, then run the standard import/merge
     (store.import_merge ≙ main.rs:54-111). Returns the merged head-set."""
     from .store import import_merge
 
     native, _ = rehash_to_native(read_graph_file(path))
-    return import_merge(wc, graph, native, state=state)
+    return import_merge(wc, graph, native)
 
 
 def arg_to_reference_command(arg: Any) -> dict:
@@ -423,14 +423,12 @@ def arg_to_reference_command(arg: Any) -> dict:
     )
 
 
-def export_reference_file(
-    graph: Graph, path: str, state: str = ""
-) -> dict[bytes, bytes]:
+def export_reference_file(graph: Graph, path: str) -> dict[bytes, bytes]:
     """Write a native graph AS a reference-format file the Rust exvc can
     `m<`-import: every event is re-keyed under the reference's
     bincode-blake2b id scheme (`_rekey`, the mirror of
-    rehash_to_native), and the named head-set travels as
-    nstates[state]. Returns the native→reference id map."""
+    rehash_to_native), and the head-set travels as nstates[HEADS].
+    Returns the native→reference id map."""
     out = Graph()
 
     def insert(ev: Event) -> bytes:
@@ -440,8 +438,8 @@ def export_reference_file(
         return h
 
     mapping = _rekey(graph, insert)
-    heads = graph.nstates.get(state, set())
+    heads = graph.nstates.get(HEADS, set())
     if heads:
-        out.nstates[state] = {mapping[h] for h in heads}
+        out.nstates[HEADS] = {mapping[h] for h in heads}
     write_graph_file(out, path)
     return mapping

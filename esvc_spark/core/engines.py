@@ -133,33 +133,6 @@ def sear(search: str, replacement: str) -> dict[str, str]:
     return {"search": search, "replacement": replacement}
 
 
-class RegistryEngine(BaseEngine):
-    """The open extension point (≙ the WASM engine's role,
-    crates/esvc-wasm/src/lib.rs:11-81, re-expressed as registered Python
-    callables): commands are arbitrary `(arg, dat) -> dat` functions
-    indexed by command id (add_commands ≙ lib.rs:92-108)."""
-
-    def __init__(self) -> None:
-        self._cmds: dict[int, Any] = {}
-
-    def register(self, fn) -> int:
-        cmd = len(self._cmds)
-        self._cmds[cmd] = fn
-        return cmd
-
-    def add_commands(self, fns) -> tuple[int, int]:
-        first = len(self._cmds)
-        for fn in fns:
-            self.register(fn)
-        return first, len(self._cmds) - first
-
-    def run_event_bare(self, cmd: int, arg: Any, dat: Any) -> Any:
-        fn = self._cmds.get(cmd)
-        if fn is None:
-            raise CommandNotFound(cmd)
-        return fn(arg, dat)
-
-
 # --------------------------------------------------------------------- ex
 # Local line-editor engine (≙ crates/exvc/src/en.rs). Dat = tuple[str,...]
 # (immutable line vector). arg = the parsed Command as a plain dict (the

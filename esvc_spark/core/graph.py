@@ -99,6 +99,12 @@ class Event:
         return hash((self.cmd, repr(self.arg), tuple(sorted(self.deps.items()))))
 
 
+# The one named head-set in use: the editor's heads, kept where the
+# reference's exvc keeps them (nstates[""], main.rs). A decoded graph file
+# still keeps every name it carries.
+HEADS = ""
+
+
 class Graph:
     """Append-only content-addressed event log + named head-sets."""
 

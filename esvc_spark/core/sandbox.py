@@ -18,8 +18,8 @@ Dat = Vec<u8>, `transform(arg, dat) -> bytes` (lib.rs:13-14, 51-61).
 - every call spawns a FRESH ``python -I -S`` subprocess (isolated mode:
   no env hooks, no user site-packages), so per-call instance freshness
   holds: no globals, monkeypatching, or interpreter state can leak
-  between calls or back into the host — the property the in-process
-  RegistryEngine (engines.py:108) loses.
+  between calls or back into the host — the property an in-process
+  registry of Python callables would lose.
 - the child is resource-limited (address-space + CPU rlimits, wall
   timeout) and talks over a length-framed stdin/stdout byte protocol —
   no pickling of host objects into or out of the sandbox.

@@ -37,8 +37,9 @@ Engines:
     on dataset size: below TWO_PHASE_MIN_ROWS the count runs over a
     single window (one-task sort, the cheapest plan at editor scale);
     above it within fixed line_no buckets, plus a broadcast per-bucket
-    offset (bucket sizes summed cumulatively) — no single-task stage at
-    any size, so the editor holds up on corpus-of-lines datasets too.
+    offset (bucket sizes summed cumulatively, `_offset_scan`) — no
+    single-task stage at any size, so the editor holds up on
+    corpus-of-lines datasets too.
 """
 
 from __future__ import annotations
@@ -99,17 +100,11 @@ class SparkDat:
         return hash(self.fingerprint)
 
 
-def _DISK_ONLY():
-    from pyspark import StorageLevel
-
-    return StorageLevel.DISK_ONLY
-
-
 # Below this many ranked rows the single-window plan beats the two-phase
 # machinery (repartitionByRange sampling pass + shuffle + DISK_ONLY
-# checkpoint + offsets collect+join: a fixed ~0.3-0.5 s per invocation
-# on this host, vs one small sort). Crossover measured in-process,
-# min-of-5 interleaved, global/grouped row-number and prefix-sum helpers
+# checkpoint + per-partition sums and their broadcast offset join: a
+# fixed ~0.3-0.5 s per invocation on a 4-vCPU host, vs one small sort).
+# Crossover measured in-process, min-of-5 interleaved, global/grouped row-number and prefix-sum helpers
 # on a synthetic frame, local window vs two-phase plan (round 8):
 #   1e4 rows  global 0.12 vs 0.39 s  grouped 0.17 vs 0.38 s  (local wins)
 #   1e5 rows  global 0.14 vs 0.35 s  grouped 0.23 vs 0.37 s  (local wins)
@@ -139,6 +134,74 @@ def _use_local(n_rows: int | None) -> bool:
     return n_rows is not None and n_rows <= TWO_PHASE_MIN_ROWS
 
 
+def _range_partitioned(spark: SparkSession, df: DataFrame, cols: list) -> DataFrame:
+    """`df` range-partitioned on `cols` into P partitions, each row
+    tagged with its partition id `_pid`, pinned by a localCheckpoint so
+    every later read sees the same partitioning (a re-run of the sampled
+    range boundaries could move rows between partitions)."""
+    from pyspark import StorageLevel
+
+    p = max(spark.sparkContext.defaultParallelism, 2)
+    return (
+        df.repartitionByRange(p, *cols)
+        .withColumn("_pid", F.spark_partition_id())
+        # DISK_ONLY: checkpoint blocks live outside the CacheManager and
+        # survive clearCache(), so a long session running many two-phase
+        # queries would otherwise accumulate them in the heap (observed:
+        # OOM halfway through the 224-query sf0.1 attestation); the block
+        # is scanned twice, disk read is fine
+        .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+    )
+
+
+def _offset_scan(
+    df: DataFrame, block: str, group_cols: list, order_cols: list,
+    val, out_col: str,
+) -> DataFrame:
+    """`df` plus `out_col` = per-group exclusive running sum of the
+    never-NULL column expression `val` in (`block`, `order_cols`)
+    order, where `block` numbers contiguous ranges of that order (a
+    range partition id, a fixed line_no bucket). Two phases, both in
+    the plan: the per-(block, group) sums, each block's offset (the sum
+    of its group's earlier blocks, from one window over those few
+    rows) broadcast-joined back on null-safe keys, plus the running sum
+    within the block. A pure plan (no job while it is built); it reads
+    `df` twice, so `df` must be deterministic. `block` is dropped."""
+    from pyspark.sql import Window
+
+    keys = [block, *group_cols]
+    # the offsets carry renamed keys, so the self-join cannot go ambiguous
+    offs = df.groupBy(*keys).agg(F.sum(val).alias("_s")).select(
+        *[F.col(c).alias(f"_k{i}") for i, c in enumerate(keys)],
+        F.coalesce(
+            F.sum("_s").over(
+                Window.partitionBy(*group_cols).orderBy(block)
+                .rowsBetween(Window.unboundedPreceding, -1)
+            ),
+            F.lit(0),
+        ).alias("_off"),
+    )
+    # NULL group keys (the degenerate-suite convention allows NULL
+    # lang/event_type) get their offset like any other group. The block
+    # is never NULL and joins on plain equality: a lone integral key
+    # broadcasts as a compact long map, where a null-safe key would
+    # build a byte map holding a whole memory page per broadcast
+    cond = [F.col(block) == F.col("_k0")] + [
+        F.col(c).eqNullSafe(F.col(f"_k{i}"))
+        for i, c in enumerate(group_cols, 1)
+    ]
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        df.join(F.broadcast(offs), cond)
+        .withColumn(out_col, F.sum(val).over(w) - val + F.col("_off"))
+        .drop(block, "_off", *[f"_k{i}" for i in range(len(keys))])
+    )
+
+
 def grouped_exclusive_prefix_sum(
     spark: SparkSession,
     df: DataFrame,
@@ -158,12 +221,14 @@ def grouped_exclusive_prefix_sum(
     `Window.partitionBy(event_type)` over 1e9 events funnels each type's
     whole partition through one task, while this runs every stage
     partition-parallel. Range-partition on (group, order) so each
-    group's rows are contiguous across partitions, pin with
-    localCheckpoint, collect the P×|groups| per-(partition, group)
-    partial sums (the only driver-side data — use the plain grouped
-    window instead when |groups| is high-cardinality, since then each
-    group is small and the window already parallelizes), fold them into
-    per-group offsets, and add the within-partition running sum.
+    group's rows are contiguous across partitions (`_range_partitioned`),
+    then `_offset_scan` over the partition id: the P×|groups|
+    per-(partition, group) sums, each partition's per-group offset from
+    one window over them, broadcast back and added to the
+    within-partition running sum — all inside the plan, nothing
+    collected (use the plain grouped window instead when |groups| is
+    high-cardinality, since then each group is small and the window
+    already parallelizes, and the offsets table would not be).
     NULL `value_col` counts as 0 on both paths, so a nullable caller
     gets shifted-by-0 rows, never mixed NULL/shifted output.
     `n_rows` (any cheap UPPER bound on df's rows, e.g. the
@@ -187,67 +252,8 @@ def grouped_exclusive_prefix_sum(
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         return df.withColumn(out_col, F.sum(val).over(w) - val)
-    p = max(spark.sparkContext.defaultParallelism, 2)
-    part = (
-        df.repartitionByRange(p, *group_cols, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        # DISK_ONLY: checkpoint blocks live outside the CacheManager and
-        # survive clearCache(), so a long session running many prefix-sum
-        # queries would otherwise accumulate them in the heap (observed:
-        # OOM halfway through the 224-query sf0.1 attestation); the block
-        # is scanned twice, disk read is fine
-        .localCheckpoint(storageLevel=_DISK_ONLY())
-    )
-    sums = part.groupBy("_pid", *group_cols).agg(
-        F.sum(value_col).alias("_s")
-    ).collect()
-    gtypes = dict(part.dtypes)
-    vt = gtypes[value_col]
-    off_type = (
-        "BIGINT" if vt in ("tinyint", "smallint", "int", "bigint") else vt
-    )
-    # the accumulator seed must carry the off_type's Python type —
-    # createDataFrame's verifier accepts only float for DOUBLE and
-    # Decimal for DECIMAL (ADVICE r7; integer callers saw int 0, fine)
-    if off_type == "BIGINT":
-        zero: object = 0
-    elif vt.startswith("decimal"):
-        from decimal import Decimal
-
-        zero = Decimal(0)
-    else:
-        zero = 0.0
-    acc: dict = {}
-    offs = []
-    for r in sorted(sums, key=lambda r: r["_pid"]):
-        g = tuple(r[c] for c in group_cols)
-        offs.append((r["_pid"], *g, acc.get(g, zero)))
-        s = r["_s"]
-        acc[g] = acc.get(g, zero) + (s if s is not None else zero)
-    schema = ", ".join(
-        ["_pid INT"]
-        + [f"{c} {gtypes[c]}" for c in group_cols]
-        + [f"_off {off_type}"]
-    )
-    off_df = spark.createDataFrame(offs, schema)
-    w = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # NULL group keys: join on null-safe equality so a NULL group (the
-    # degenerate-suite convention allows NULL lang/event_type) gets its
-    # offset like any other group
-    cond = [part["_pid"] == off_df["_pid"]] + [
-        part[c].eqNullSafe(off_df[c]) for c in group_cols
-    ]
-    joined = part.join(F.broadcast(off_df), cond).drop(off_df["_pid"])
-    for c in group_cols:
-        joined = joined.drop(off_df[c])
-    return (
-        joined.withColumn(out_col, F.sum(val).over(w) - val + F.col("_off"))
-        .drop("_pid", "_off")
-    )
+    part = _range_partitioned(spark, df, [*group_cols, *order_cols])
+    return _offset_scan(part, "_pid", group_cols, order_cols, val, out_col)
 
 
 def grouped_row_number(
@@ -294,10 +300,11 @@ def global_running_max(
     """`df` plus `out_col` = running MAX of `value_col` over the rows at
     or before this one in `order_cols` order (inclusive prefix max) —
     the grouped_exclusive_prefix_sum two-phase shape (no groups) with
-    max in place of sum: range-partition on the order key (pinned by
-    localCheckpoint), collect the P per-partition maxima, turn them into
-    exclusive prefix maxima on the driver, then greatest(within-partition
-    running max, broadcast offset). Partition-parallel at any scale;
+    max in place of sum: `_range_partitioned` on the order key, the P
+    per-partition maxima, each partition's offset the max over the
+    partitions before it (one window over P rows, inside the plan), then
+    greatest(within-partition running max, broadcast offset).
+    Partition-parallel at any scale;
     NULL values are ignored by max in both phases. `n_rows` switches to
     one small single-task window at or below TWO_PHASE_MIN_ROWS (see
     grouped_exclusive_prefix_sum)."""
@@ -309,20 +316,13 @@ def global_running_max(
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         return df.withColumn(out_col, F.max(value_col).over(w))
-    p = max(spark.sparkContext.defaultParallelism, 2)
-    part = (
-        df.repartitionByRange(p, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(storageLevel=_DISK_ONLY())  # heap-safe, see above
+    part = _range_partitioned(spark, df, order_cols)
+    offs = part.groupBy("_pid").agg(F.max(value_col).alias("_m")).select(
+        F.col("_pid").alias("_k"),
+        F.max("_m").over(
+            Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+        ).alias("_off"),
     )
-    maxima = part.groupBy("_pid").agg(F.max(value_col).alias("_m")).collect()
-    offs, run = [], None
-    for r in sorted(maxima, key=lambda r: r["_pid"]):
-        offs.append((r["_pid"], run))
-        if r["_m"] is not None and (run is None or r["_m"] > run):
-            run = r["_m"]
-    schema_val = dict(part.dtypes)[value_col]
-    off_df = spark.createDataFrame(offs, f"_pid INT, _off {schema_val}")
     w = (
         Window.partitionBy("_pid")
         .orderBy(*order_cols)
@@ -330,9 +330,9 @@ def global_running_max(
     )
     local_max = F.max(value_col).over(w)
     return (
-        part.join(F.broadcast(off_df), "_pid")
+        part.join(F.broadcast(offs), F.col("_pid") == F.col("_k"))
         .withColumn(out_col, F.greatest(local_max, F.col("_off")))
-        .drop("_pid", "_off")
+        .drop("_pid", "_k", "_off")
     )
 
 
@@ -574,13 +574,15 @@ class SparkExEngine(SparkEngineBase):
         window (1M short lines, the most ONE task sorts, is a few tens
         of MB). Above it the leading order column, the input's line_no
         in [0, n_rows), buckets the rows by fixed ranges, monotone and
-        balanced by construction; the count runs within each bucket and
-        a broadcast per-bucket offset (bucket sizes summed over the
-        buckets before it) is added. Either way the renumber is a PURE
-        PLAN (no job while it is built), which commute_batch relies on
-        when one commutation round builds many plans. The bucketed plan
-        reads `df` twice (bucket sizes and the within-bucket count), so
-        `df` must be deterministic; every editor plan is (a filter or an
+        balanced by construction, and `_offset_scan` over the bucket
+        counts the rows within each bucket plus a broadcast per-bucket
+        offset (the bucket sizes before it) — the same offset scan the
+        two-phase prefix-sum helpers run over range partitions, without
+        their checkpoint. Either way the renumber is a PURE PLAN (no job
+        while it is built), which commute_batch relies on when one
+        commutation round builds many plans. The bucketed plan reads
+        `df` twice (bucket sizes and the within-bucket count), so `df`
+        must be deterministic; every editor plan is (a filter or an
         explode over a persisted state). The count is BIGINT: one bucket
         can outgrow row_number's int range."""
         from pyspark.sql import Window
@@ -594,16 +596,9 @@ class SparkExEngine(SparkEngineBase):
         df = df.withColumn(
             "_b", F.floor(F.col(order_cols[0]) * F.lit(p) / F.lit(n_rows))
         )
-        # one row per bucket: the offset window's single task is trivial
-        offs = df.groupBy("_b").count().select(
-            "_b",
-            (F.sum("count").over(Window.orderBy("_b").rowsBetween(*running))
-             - F.col("count")).alias("_off"),
-        )
-        w = Window.partitionBy("_b").orderBy(*order_cols).rowsBetween(*running)
-        return df.join(F.broadcast(offs), "_b").select(
-            (rank.over(w) + F.col("_off") - 1).alias("line_no"), "text"
-        )
+        return _offset_scan(
+            df, "_b", [], order_cols, F.lit(1), "line_no"
+        ).select("line_no", "text")
 
     @staticmethod
     def _segments(addr: dict, n: int):

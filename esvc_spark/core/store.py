@@ -38,7 +38,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import storage
-from .graph import Event, Graph, GraphError, IncludeSpec
+from .graph import HEADS, Event, Graph, GraphError, IncludeSpec
 from .hashing import format_hash
 from .workcache import WorkCache
 
@@ -175,7 +175,7 @@ def ensure_events_idempotent(graph: Graph, other: Graph) -> None:
     """Append every event of `other` into `graph` in dependency order,
     collision-checked (≙ main.rs:68-87). The parquet-table equivalent of a
     MERGE INTO ... WHEN NOT MATCHED INSERT."""
-    heads = other.nstates.get("", set(other.events.keys()))
+    heads = other.nstates.get(HEADS, set(other.events.keys()))
     schedule = other.calculate_dependencies(
         set(), {h: IncludeSpec.INCLUDE_ALL for h in heads}
     )
@@ -190,22 +190,22 @@ def ensure_events_idempotent(graph: Graph, other: Graph) -> None:
             raise HashCollision(got, collision)
 
 
-def import_merge(wc: WorkCache, graph: Graph, other: Graph, state: str = "") -> set[bytes]:
+def import_merge(wc: WorkCache, graph: Graph, other: Graph) -> set[bytes]:
     """Import a foreign graph and merge its head-set with ours
     (≙ main.rs:54-111). Returns the new merged head-set (also stored as
-    nstates[state]). On any failure `graph.events` gets back its
+    nstates[HEADS]). On any failure `graph.events` gets back its
     events from before the import, so a failed merge adds nothing."""
     before = set(graph.events)
     try:
         ensure_events_idempotent(graph, other)
-        heads = graph.nstates.get(state, set()) | other.nstates.get(state, set())
+        heads = graph.nstates.get(HEADS, set()) | other.nstates.get(HEADS, set())
         merged = set(graph.fold_state({h: False for h in heads}, expand=False).keys())
         wc.try_merge(graph, heads)
     except BaseException:
         for h in set(graph.events) - before:
             del graph.events[h]
         raise
-    graph.nstates[state] = merged
+    graph.nstates[HEADS] = merged
     return merged
 
 
@@ -214,20 +214,20 @@ def import_merge(wc: WorkCache, graph: Graph, other: Graph, state: str = "") -> 
 HEAD_THRESHOLD = 100
 
 
-def compact_heads(graph: Graph, state: str = "") -> None:
-    """Re-minimize a named head-set when it exceeds HEAD_THRESHOLD
+def compact_heads(graph: Graph) -> None:
+    """Re-minimize the head-set when it exceeds HEAD_THRESHOLD
     (≙ main.rs:232-249)."""
-    heads = graph.nstates.get(state)
+    heads = graph.nstates.get(HEADS)
     if heads and len(heads) > HEAD_THRESHOLD:
-        graph.nstates[state] = set(
+        graph.nstates[HEADS] = set(
             graph.fold_state({h: False for h in heads}, expand=False).keys()
         )
 
 
-def append_head(graph: Graph, evid: bytes, state: str = "") -> None:
+def append_head(graph: Graph, evid: bytes) -> None:
     """Record a newly shelved event as a head (≙ main.rs:217-250)."""
-    graph.nstates.setdefault(state, set()).add(evid)
-    compact_heads(graph, state)
+    graph.nstates.setdefault(HEADS, set()).add(evid)
+    compact_heads(graph)
 
 
 # ------------------------------------------------------- snapshot store

@@ -48,21 +48,29 @@ def _corpus(spark: SparkSession, sf_dir: str):
     return eng, eng.init_data(docs)
 
 
-def _result(final, wc: WorkCache) -> DataFrame:
-    out = final.df.select("doc_id", F.md5("text").alias("text_md5"))
-    return out
+def _sears(pairs) -> list[dict]:
+    return [{"search": s, "replacement": r} for s, r in pairs]
 
 
-def _shelve_minimize_replay(eng, init, script):
-    """Shelve a linear script (deps inferred by commutation testing),
-    minimize the head set, replay — the reference pipeline
-    (crates/esvc-core/src/workcache.rs:105-225 + graph.rs fold_state)."""
-    g, wc = Graph(), WorkCache(eng, init)
-    heads: set[bytes] = set()
+def _result(final) -> DataFrame:
+    return final.df.select("doc_id", F.md5("text").alias("text_md5"))
+
+
+def _shelve_chain(g: Graph, wc: WorkCache, seed: set, script) -> set:
+    """Shelve `script` as a linear chain on top of the head set `seed`
+    (deps inferred by commutation testing); returns `seed` plus the new
+    heads."""
+    heads = set(seed)
     for arg in script:
         h = wc.shelve_event(g, set(heads), Event(cmd=0, arg=arg))
         if h is not None:
             heads.add(h)
+    return heads
+
+
+def _minimize_replay(g: Graph, wc: WorkCache, heads: set):
+    """Minimize the head set and replay it (graph.rs fold_state +
+    workcache.rs run_foreach_recursively)."""
     minimized = set(g.fold_state({h: False for h in heads}, expand=False).keys())
     final, _ = wc.run_foreach_recursively(
         g, {h: IncludeSpec.INCLUDE_ALL for h in minimized}
@@ -70,15 +78,34 @@ def _shelve_minimize_replay(eng, init, script):
     return final
 
 
+def _shelve_minimize_replay(eng, init, script):
+    """Shelve a linear script, minimize the head set, replay — the
+    reference pipeline (crates/esvc-core/src/workcache.rs:105-225 +
+    graph.rs fold_state). No try_merge: on a linear history it would
+    only re-shelve the top head."""
+    g, wc = Graph(), WorkCache(eng, init)
+    return _minimize_replay(g, wc, _shelve_chain(g, wc, set(), script))
+
+
+def _merge_branches(eng, init, common, branches):
+    """The branch-merge driver: shelve the `common` chain, then each of
+    `branches` as a chain off common's heads, try_merge the union of
+    every head (workcache.rs:419-479), minimize, replay."""
+    g, wc = Graph(), WorkCache(eng, init)
+    base = _shelve_chain(g, wc, set(), common)
+    heads = set(base)
+    for branch in branches:
+        heads |= _shelve_chain(g, wc, base, branch)
+    wc.try_merge(g, set(heads))
+    return _minimize_replay(g, wc, heads)
+
+
 def q_esvc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shelve the 3-event chain (deps inferred by commutation tests — each
     an aggregate job), minimize the head set, replay. Invariant: equals
     the sequential left-fold of the replaces."""
     eng, init = _corpus(spark, sf_dir)
-    final = _shelve_minimize_replay(
-        eng, init, [{"search": s, "replacement": r} for s, r in _REPLAY_SEARS]
-    )
-    return _result(final, None)
+    return _result(_shelve_minimize_replay(eng, init, _sears(_REPLAY_SEARS)))
 
 
 def q_esvc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,32 +113,11 @@ def q_esvc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged head set. The branches commute (disjoint literals), so the
     merged state is the common event plus both branches applied."""
     eng, init = _corpus(spark, sf_dir)
-    g, wc = Graph(), WorkCache(eng, init)
-    common: set[bytes] = set()
-    for s, r in _MERGE_COMMON:
-        h = wc.shelve_event(
-            g, set(common), Event(cmd=0, arg={"search": s, "replacement": r})
-        )
-        if h is not None:
-            common.add(h)
-    branch_heads: set[bytes] = set(common)
-    for branch in (_MERGE_BRANCH_A, _MERGE_BRANCH_B):
-        seed = set(common)
-        for s, r in branch:
-            h = wc.shelve_event(
-                g, set(seed), Event(cmd=0, arg={"search": s, "replacement": r})
-            )
-            if h is not None:
-                seed.add(h)
-                branch_heads.add(h)
-    wc.try_merge(g, set(branch_heads))
-    minimized = set(
-        g.fold_state({h: False for h in branch_heads}, expand=False).keys()
+    final = _merge_branches(
+        eng, init, _sears(_MERGE_COMMON),
+        [_sears(_MERGE_BRANCH_A), _sears(_MERGE_BRANCH_B)],
     )
-    final, _ = wc.run_foreach_recursively(
-        g, {h: IncludeSpec.INCLUDE_ALL for h in minimized}
-    )
-    return _result(final, wc)
+    return _result(final)
 
 
 def _sql_chain(sears: list[tuple[str, str]], col: str = "text") -> str:
@@ -363,6 +369,7 @@ _MLG_B = [("slow", "SL0W!")]
 
 
 def q_esvc_merge_large(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..core.exparse import make_command
     from ..core.spark_engine import SparkDat, SparkExEngine
     from ..operators.cc import _scoped_conf, _scoped_shuffle_partitions
 
@@ -373,27 +380,11 @@ def q_esvc_merge_large(spark: SparkSession, sf_dir: str) -> DataFrame:
             _scoped_shuffle_partitions(spark, 8):
         eng = SparkExEngine(spark)
         init = SparkDat.create(lines, SparkExEngine.COLS)
-        g, wc = Graph(), WorkCache(eng, init)
-        heads: set[bytes] = set()
-        from ..core.exparse import make_command
-
-        for branch in (_MLG_A, _MLG_B):
-            seed: set[bytes] = set()
-            for s, r in branch:
-                arg = make_command(
-                    {"type": "rngf", "start": 0}, "substitute", [s, r]
-                )
-                h = wc.shelve_event(g, set(seed), Event(cmd=0, arg=arg))
-                if h is not None:
-                    seed.add(h)
-                    heads.add(h)
-        wc.try_merge(g, set(heads))
-        minimized = set(
-            g.fold_state({h: False for h in heads}, expand=False).keys()
-        )
-        final, _ = wc.run_foreach_recursively(
-            g, {h: IncludeSpec.INCLUDE_ALL for h in minimized}
-        )
+        final = _merge_branches(eng, init, [], [
+            [make_command({"type": "rngf", "start": 0}, "substitute", [s, r])
+             for s, r in branch]
+            for branch in (_MLG_A, _MLG_B)
+        ])
         out = final.df.select(
             "line_no", F.md5("text").alias("text_md5")
         ).localCheckpoint()
@@ -463,7 +454,7 @@ def q_esvc_import_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="esvc_import_")
     try:
         path = os.path.join(work, "session.exvc.zst")
-        export_reference_file(src.graph, path, state="")
+        export_reference_file(src.graph, path)
         dst = Repl(init)
         import_reference_file(dst.wc, dst.graph, path)
         final = dst.materialize()

@@ -2886,20 +2886,21 @@ def _ordered_runs(
     n_rows: int | None = None,
 ):
     """Two-phase run detection (round 7): range-partition on the
-    ordering key (pinned by localCheckpoint), count run starts WITHIN
-    each partition (every partition's first row counts as a start),
-    then subtract one for each partition boundary whose neighboring
-    values are equal — a P-row driver-side correction, exactly the
-    grouped_exclusive_prefix_sum offset pattern. Replaces the
-    unpartitioned lag window that funnelled the whole table through one
-    task. Returns
+    ordering key (core.spark_engine._range_partitioned, the step the
+    two-phase prefix-sum helpers use), count run starts WITHIN each
+    partition (every partition's first row counts as a start), then
+    subtract one for each partition boundary whose neighboring values
+    are equal. That correction is computed on the driver from P rows
+    (each partition's first and last value), because it is returned as
+    a Python int. Replaces the unpartitioned lag window that funnelled
+    the whole table through one task. Returns
     (per-row frame with new_run/width, boundary correction count).
 
     `n_rows` (round 8): a cheap upper bound on |base|; at or below
     core.spark_engine.TWO_PHASE_MIN_ROWS one small lag window beats the
     six per-ordering checkpoint+collect cycles (the r7 cost:
     q_encoding_advisor 0.61 → 3.55 s at sf0.1), correction = 0."""
-    from esvc_spark.core.spark_engine import _DISK_ONLY, _use_local
+    from esvc_spark.core.spark_engine import _range_partitioned, _use_local
 
     def within_runs(frame: DataFrame, w) -> DataFrame:
         # one run-start predicate for BOTH paths — the gate must never
@@ -2916,14 +2917,7 @@ def _ordered_runs(
 
     if _use_local(n_rows):
         return within_runs(base, Window.orderBy(key, "ak")), 0
-    p = max(spark.sparkContext.defaultParallelism, 2)
-    part = (
-        base.repartitionByRange(p, F.col(key), F.col("ak"))
-        .withColumn("_pid", F.spark_partition_id())
-        # DISK_ONLY keeps the six per-ordering checkpoints out of the
-        # heap (core.spark_engine.grouped_exclusive_prefix_sum rationale)
-        .localCheckpoint(storageLevel=_DISK_ONLY())
-    )
+    part = _range_partitioned(spark, base, [F.col(key), F.col("ak")])
     within = within_runs(part, Window.partitionBy("_pid").orderBy(key, "ak"))
     okey = F.struct(F.col(key).alias("k1"), F.col("ak").alias("k2"))
     edges = sorted(

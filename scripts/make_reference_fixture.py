@@ -53,7 +53,7 @@ def build_repl() -> Repl:
 def main() -> None:
     r = build_repl()
     os.makedirs(os.path.dirname(FIXTURE), exist_ok=True)
-    mapping = export_reference_file(r.graph, FIXTURE, state="")
+    mapping = export_reference_file(r.graph, FIXTURE)
     print(f"wrote {FIXTURE}")
     print(f"  events: {len(r.graph.events)}  heads: {len(r.heads)}")
     print(f"  final document: {r.materialize()!r}")

@@ -258,7 +258,7 @@ def test_export_import_roundtrip_preserves_document(tmp_path):
     DAG shape survive the double id translation."""
     src = _fixture_repl()
     p = str(tmp_path / "exported.exvc.zst")
-    mapping = export_reference_file(src.graph, p, state="")
+    mapping = export_reference_file(src.graph, p)
     assert len(mapping) == 6
     back = read_graph_file(p)  # hash-verified on decode
     assert len(back.events) == 6

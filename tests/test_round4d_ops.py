@@ -1002,6 +1002,26 @@ def test_encoding_advisor_brute_force(spark, sf_dir):
         assert expected[(col, "sorted")][2] <= expected[(col, "arrival")][2]
 
 
+def test_encoding_advisor_brute_force_two_phase(spark, sf_dir, monkeypatch):
+    """The same oracle with the size gate at 0: every ordering runs the
+    range-partitioned run count and its partition-boundary correction,
+    which no sf0.001 input reaches otherwise."""
+    from pyspark.sql import functions as F
+
+    from esvc_spark.catalog import table
+    from esvc_spark.core import spark_engine
+    from esvc_spark.queries.relational import _ordered_runs
+
+    monkeypatch.setattr(spark_engine, "TWO_PHASE_MIN_ROWS", 0)
+    # a low-NDV column sorted by value spans partition boundaries inside
+    # runs, so the correction is really applied
+    orders = table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("ak"), F.col("o_orderstatus").alias("v")
+    )
+    assert _ordered_runs(spark, orders, "v", n_rows=1)[1] > 0
+    test_encoding_advisor_brute_force(spark, sf_dir)
+
+
 # ------------------------------------------------------------ GDPR erasure
 
 
